@@ -117,13 +117,8 @@ def rollup_lattice(
     # OOM) + release when the next tracked-cache query is built
     # (operators/caching.py; VERDICT r3 #4 + ADVICE r3). Partials shrink
     # ~60x per level; production writes each grain to its own table.
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split events scan — the finest
-    # grain's partial aggregation otherwise runs one task (no-op at
-    # real scale; operators/partitioning.py)
     cur = persist_tracked(
-        widen(events).groupBy(
+        events.groupBy(
             F.date_trunc(finest, F.col(ts_col)).alias("bucket"), *key_cols
         )
         .agg(F.count("*").alias("n"), F.sum(value_col).alias("v"))

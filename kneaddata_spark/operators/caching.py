@@ -35,7 +35,12 @@ _LIVE: list[DataFrame] = []
 
 
 def persist_tracked(df: DataFrame) -> DataFrame:
-    """persist(MEMORY_AND_DISK) + register for release_tracked()."""
+    """persist(MEMORY_AND_DISK) + register for release_tracked(). A frame
+    that is already persisted — by an earlier call or by the caller, at
+    any level — comes back unchanged and unregistered: whoever persisted
+    it releases it, and a second persist at another level would throw."""
+    if df.storageLevel != StorageLevel.NONE:
+        return df
     out = df.persist(StorageLevel.MEMORY_AND_DISK)
     _LIVE.append(out)
     return out

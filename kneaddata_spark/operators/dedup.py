@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from .caching import persist_tracked
+from .pairs import shuffle_width
 
 # ---------------------------------------------------------------- exact --
 
@@ -100,16 +101,7 @@ def word_shingles(
         f"i -> array_join(slice(tokens, i, {n}), ' '))) "
         f"ELSE array() END"
     )
-    # r6: shingle construction is CPU-bound string work; a compact
-    # single-row-group parquet source plans as ONE scan task, so the
-    # whole tokenize+explode ran single-threaded (measured 9.9 s of a
-    # 15 s query at sf1.0). widen() repartitions by id ONLY when the
-    # source has fewer splits than the session's shuffle width — a no-op
-    # at real scale (operators/partitioning.py).
-    from .partitioning import widen
-
-    src = widen(df.select(F.col(id_col).alias("id"), F.col(text_col)), "id")
-    sh = src.select("id", toks.alias("tokens")).select(
+    sh = df.select(F.col(id_col).alias("id"), toks.alias("tokens")).select(
         "id", F.explode(grams).alias("shingle")
     )
     if max_df is None:
@@ -165,9 +157,7 @@ def _hashed_shingles(
     a single-partition probe (measured 166 s at sf1.0 when it did).
     The guard ceiling is df-count over HASHES == over shingles (same
     collision argument)."""
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = shuffle_width(df)
     raw = persist_tracked(
         word_shingles(df, id_col, text_col, n, max_df=None)
         .select("id", F.xxhash64("shingle").alias("h"))
@@ -219,9 +209,7 @@ def ngram_jaccard_pairs(
     # shingle dominate the join output of every real corpus (sum C(df,2)
     # over low-multiplicity shingles), while high-multiplicity rows are
     # bounded by actual-dup-pair count x doc size — orders smaller.
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = shuffle_width(df)
     inter = (
         a.join(b.hint("shuffle_hash"), "h")
         .where(F.col("a.id") < F.col("b.id"))
@@ -274,9 +262,7 @@ def containment_pairs(
     sizes = persist_tracked(sh.groupBy("id").agg(F.count("*").alias("sz")))
     a = sh.alias("a")
     b = sh.alias("b")
-    n_parts = int(
-        df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    n_parts = shuffle_width(df)
     inter = (
         a.join(b.hint("shuffle_hash"), "h")
         .where(F.col("a.id") < F.col("b.id"))
@@ -478,11 +464,7 @@ def simhash_signatures(
     SQL-oracle-reproducible variant), per-bit +/-1 sums via 64 conditional
     aggregates (map-side combined), sign -> bit. One shuffle of
     |ids| x 64 longs."""
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split source before the tokenize +
-    # per-token hash (CPU-heavy row-local stage; no-op at real scale)
-    toks = widen(df, id_col).select(
+    toks = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.split(F.lower(F.col(text_col)), "\\s+")).alias("tok"),
     ).where(F.col("tok") != "")
@@ -1131,11 +1113,6 @@ def paragraph_dedup(
     Reference lineage: the first-occurrence dedup policy of SAM->FASTQ
     conversion (utilities.py:63-106) applied at sub-document granularity.
     """
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split source before the CPU-heavy
-    # paragraph split/chunk explode (no-op at real scale)
-    df = widen(df, id_col)
     if delim is not None:
         paras = df.select(
             F.col(id_col).alias("id"),

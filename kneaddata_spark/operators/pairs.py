@@ -82,6 +82,12 @@ def reorder_output(df: DataFrame, pos_col: str = "pos") -> DataFrame:
     return df.orderBy(F.col(pos_col).asc())
 
 
+def shuffle_width(df: DataFrame) -> int:
+    """The session's shuffle width (spark.sql.shuffle.partitions): the
+    partition count of every explicit repartition in the operators."""
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
 def global_rank(
     df: DataFrame,
     order_cols: list[str],
@@ -117,9 +123,7 @@ def global_rank(
 
     cols = [F.col(c).asc() for c in order_cols]
     if num_partitions is None:
-        num_partitions = int(
-            df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-        )
+        num_partitions = shuffle_width(df)
     s = persist_tracked(
         df.repartitionByRange(num_partitions, *cols).withColumn(
             "__pid", F.spark_partition_id()

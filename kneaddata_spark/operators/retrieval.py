@@ -68,11 +68,7 @@ def bm25_topk(
     contract: a dup cluster, a positives list), so returned ranks stay
     contiguous 1..k rather than leaving holes where excluded docs stood.
     """
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split corpus before the tokenize
-    # explode feeding the postings aggregate (no-op at real scale)
-    toks = _tokens(widen(docs, id_col), id_col, text_col, "doc_id")
+    toks = _tokens(docs, id_col, text_col, "doc_id")
     # postings is the single materialized index artifact: dl, dfreq and
     # the corpus scalars all DERIVE from it (cache() so the explode+
     # aggregate runs once — without it Catalyst re-plans the scan+explode

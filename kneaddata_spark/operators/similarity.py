@@ -47,13 +47,7 @@ def _with_norm(
     vectors is mathematically equal but divides before summing — a
     last-ulp difference that flips round(cos, 4) at a rounding boundary;
     observed at sf0.001.)"""
-    from .partitioning import widen
-
-    # r6: vector scoring runs through interpreted higher-order lambdas
-    # (dot/fold per element) — widen a degenerate single-split source so
-    # the corpus side streams sweep-wide (no-op at real scale; a tiny
-    # query frame widening is harmless)
-    return widen(df, id_col).select(
+    return df.select(
         F.col(id_col).alias(id_alias), F.col(vec_col).alias(vec_alias)
     ).withColumn(n_alias, _norm(vec_alias))
 
@@ -385,7 +379,10 @@ def add_lsh_bucket(
             code |= bits[:, j].astype(np.int32) << j
         return pd.Series(code)
 
-    return df.withColumn("bucket", bucket_udf(F.col(vec_col)))
+    # one evaluation per row (the audiodup/VAD pin): a join on `bucket`
+    # infers isnotnull(bucket), and pushed below this projection that
+    # filter would run the UDF a second time in the same stage
+    return df.withColumn("bucket", bucket_udf.asNondeterministic()(F.col(vec_col)))
 
 
 def add_lsh_band_codes(
@@ -469,8 +466,9 @@ def ann_ivf_topk(
 
         return nearest
 
+    # one evaluation per row: the pin add_lsh_bucket explains
     lists = dense.withColumn(
-        "list_id", _nearest_lists(1)(F.col("nbr_vec")).getItem(0)
+        "list_id", _nearest_lists(1).asNondeterministic()(F.col("nbr_vec")).getItem(0)
     )
 
     q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec"))
@@ -658,13 +656,9 @@ def quantize_embeddings(
     Elements pass through double so engine and SQL oracle see
     bit-identical products. Zero vectors drop (no direction to
     preserve). Pure Column algebra, zero Python."""
-    from .partitioning import widen
-
     v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     s = F.aggregate(v, F.lit(0.0), lambda acc, x: F.greatest(acc, F.abs(x)))
-    # r6: widen a degenerate single-split source — quantization + the
-    # downstream integer-dot scoring are interpreted per-element lambdas
-    out = widen(vectors, id_col).select(
+    out = vectors.select(
         F.col(id_col).alias("id"), v.alias("__v"), s.alias("scale")
     )
     qvec = F.transform(

@@ -149,15 +149,8 @@ def funnel_steps(
         f"aggregate(__seq, 0, (acc, t) -> CASE WHEN acc < {n} AND "
         f"t = element_at({steps_arr}, acc + 1) THEN acc + 1 ELSE acc END)"
     )
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split events scan ON THE GROUP KEY —
-    # the collect_list partial aggregation otherwise runs one task, and
-    # hash-partitioning by user doubles as the aggregate's distribution
-    # (no further exchange; no-op at real scale)
     per_user = (
-        widen(ev, user_col)
-        .groupBy(user_col)
+        ev.groupBy(user_col)
         .agg(seq.alias("__seq"))
         .select(reached.alias("__reached"))
     )

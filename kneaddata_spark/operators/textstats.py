@@ -75,12 +75,6 @@ def lang_stopword_votes(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
         return F.size(F.filter(toks, lambda x: F.array_contains(arr, x)))
 
     votes = {lang: _vote(lang) for lang in STOPWORDS}
-    # r6: tokenize + per-language array scans are the whole cost and run
-    # before any exchange — widen the degenerate single-split scan
-    # (no-op at real scale, operators/partitioning.py)
-    from .partitioning import widen
-
-    df = widen(df, id_col)
     out = df.select(F.col(id_col), *[v.alias(f"votes_{k}") for k, v in votes.items()])
     langs = sorted(STOPWORDS)
     best = F.greatest(*[F.col(f"votes_{k}") for k in langs])
@@ -104,12 +98,8 @@ def overrepresented_ngrams(
         f"i -> array_join(slice(tokens, i, {n}), ' ')) "
         f"ELSE array() END"
     )
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split source before the n-gram
-    # construction explode (no-op at real scale)
     return (
-        widen(df.select(toks.alias("tokens")))
+        df.select(toks.alias("tokens"))
         .select(F.explode(grams).alias("ngram"))
         .where(F.col("ngram") != "")
         .groupBy("ngram")
@@ -299,11 +289,7 @@ def winnowing_fingerprints(
     norm = F.split(
         F.lower(F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")), " "
     )
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split source before the tokenize +
-    # per-token hash stage (no-op at real scale)
-    toks = widen(df, id_col).select(
+    toks = df.select(
         F.col(id_col).alias("id"), F.posexplode(norm).alias("pos", "tok")
     ).where(
         # enforce the MAXPOS precondition instead of trusting it: beyond
@@ -400,11 +386,7 @@ def importance_weights(
     hashed = F.transform(
         norm, lambda t: portable_token_hash64(t) % F.lit(DSIR_HM)
     )
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split source — the per-token hash
-    # transform is the query's heaviest stage (no-op at real scale)
-    pre = widen(df, id_col).select(
+    pre = df.select(
         F.col(id_col).alias("id"),
         F.col(target_col).cast("long").alias("tgt"),
         hashed.alias("__h"),
@@ -518,14 +500,7 @@ def pii_report(df: DataFrame, text_col: str = "text") -> DataFrame:
     one map-side-combinable aggregation to |rules| output rows.
     """
     from .. import rules
-    from .partitioning import widen
 
-    # r6: the sequential regex chain (|rules| extract_all + replace per
-    # row) is the whole cost and runs on the scan's splits — widen the
-    # degenerate single-split case; the explode+groupBy below partial-
-    # aggregates, so this is the plan's only exchange at bench scale
-    # (no-op at real scale).
-    df = widen(df)
     cur = F.col(text_col)
     structs = []
     for i, (pat, tag) in enumerate(rules.SCRUB_PATTERNS):
@@ -570,16 +545,9 @@ def lang_segments(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """
     from pyspark.sql import Window as W
 
-    from .partitioning import widen
-
     toks = F.split(F.lower(F.trim(F.col(text_col))), "\\s+")
-    # r6: widen BY doc_id — tokenize + posexplode + the vote chain run
-    # 32-wide instead of on the single scan split, and because the
-    # repartition hash-clusters on doc_id it SATISFIES the window's
-    # ClusteredDistribution: still exactly one exchange end-to-end
-    # (the audited invariant), just moved below the scan (no-op at scale).
-    t = widen(df.select(F.col(id_col).alias("doc_id"), F.col(text_col)), "doc_id").select(
-        "doc_id", F.posexplode(toks).alias("pos", "tok")
+    t = df.select(
+        F.col(id_col).alias("doc_id"), F.posexplode(toks).alias("pos", "tok")
     ).where(F.col("tok") != "")
     vote = F.lit("und")
     for lang in sorted(STOPWORDS, reverse=True):
@@ -625,11 +593,7 @@ def pmi_collocations(
     nothing Python.
     """
     toks = F.split(F.lower(F.trim(F.col(text_col))), " ")
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split source before the two token
-    # explodes (no-op at real scale)
-    t = widen(df.select(toks.alias("toks")))
+    t = df.select(toks.alias("toks"))
     uni = (
         t.select(F.explode("toks").alias("tok"))
         .where(F.col("tok") != "")
@@ -706,11 +670,8 @@ def distinctive_terms(
     from .caching import persist_tracked
 
     toks = F.split(F.lower(F.trim(F.col(text_col))), " ")
-    from .partitioning import widen
-
-    # r6: widen a degenerate single-split source before the token explode
     st = persist_tracked(
-        widen(df.select(F.col(group_col).alias("grp"), toks.alias("__t")))
+        df.select(F.col(group_col).alias("grp"), toks.alias("__t"))
         .select("grp", F.explode("__t").alias("token"))
         .where(F.col("token") != "")
         .groupBy("grp", "token")

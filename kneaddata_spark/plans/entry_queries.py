@@ -10,6 +10,10 @@ Deterministic cross-engine sampling/hashing uses plain integer arithmetic
 
 from __future__ import annotations
 
+import hashlib
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -34,9 +38,68 @@ from .. import rules as _rules
 
 # ----------------------------------------------------------- helpers ----
 
+_SPLIT_DIR = "/tmp/kneaddata_bench/split_v1"
+# The corpus tables _t splits one file per core: every row-local text,
+# event and vector stage reads one of these. The TPC-H tables keep their
+# single source file, and so their file-order scan: their oracles round
+# double sums of 4-decimal discounted prices at exact decimal ties, where
+# only DuckDB's own file-order summation reproduces its last ulp
+# (q1_pricing_summary flips at sf0.001 under any other order).
+_SPLIT_TABLES = ("documents", "events", "embeddings")
+
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Fixture table `name`; a corpus table is read from a split of one
+    file per core.
+
+    Scan width is decided HERE, by the fixture layout, and nowhere else:
+    operators never repartition for parallelism. The fixture tables are
+    compact single-row-group parquet files, and a row group is the scan's
+    split unit, so read as-is each one plans a single task and every
+    row-local stage before the first exchange (tokenize, hash, regex,
+    vector lambdas) runs on one core. _split_fixture deals the rows into
+    _clip_parts(spark) files instead — the shape a real corpus of many
+    files already has, with no exchange added to any plan. The DuckDB
+    oracles read the source file; row values are untouched."""
+    path = f"{sf_dir}/{name}.parquet"
+    if name in _SPLIT_TABLES:
+        path = _split_fixture(os.path.abspath(path), _clip_parts(spark))
+    return spark.read.parquet(path)
+
+
+def _split_fixture(src: str, n_parts: int) -> str:
+    """Directory holding `src` rewritten as `n_parts` parquet files, row i
+    in file i % n_parts. Dealt, not sliced: the tables are stored in id
+    order, and queries pin id ranges (`vec_id < 500`, `doc_id < 40`), so
+    contiguous slices would put every surviving row in one split (row-
+    group stats prune the rest) and run the query's quadratic stage on
+    one core. The rewrite is pyarrow in this process (no Spark job, so
+    query builds stay job-free) and is cached under /tmp/kneaddata_bench
+    keyed by source path, size, mtime and part count; it is published by
+    one atomic rename, so a reader never sees a partial split."""
+    st = os.stat(src)
+    key = hashlib.sha256(
+        f"{src}|{st.st_size}|{st.st_mtime_ns}|{n_parts}".encode()
+    ).hexdigest()[:16]
+    name = os.path.basename(src).removesuffix(".parquet")
+    dest = f"{_SPLIT_DIR}/{name}_{n_parts}_{key}"
+    if os.path.isdir(dest):
+        return dest
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(src)
+    tmp = f"{dest}.tmp{os.getpid()}"
+    shutil.rmtree(tmp, ignore_errors=True)
+    os.makedirs(tmp)
+    for i in range(n_parts):
+        rows = np.arange(i, table.num_rows, n_parts)
+        pq.write_table(table.take(rows), f"{tmp}/part-{i:05d}.parquet")
+    try:
+        os.rename(tmp, dest)
+    except OSError:  # a concurrent writer published the same split first
+        shutil.rmtree(tmp, ignore_errors=True)
+    return dest
 
 
 def _docs_with_dups(spark, sf_dir) -> DataFrame:
@@ -79,8 +142,9 @@ _EMB_DUPS_SQL = """
 
 
 def _clip_parts(spark: SparkSession) -> int:
-    """File count for the shared clip fixtures: one file per core
-    (defaultParallelism, floor 8 — bench.py's ensure_clips convention).
+    """File count for the query fixtures (the shared clip tables and
+    _t's table splits): one file per core (defaultParallelism, floor 8 —
+    bench.py's ensure_clips convention).
 
     r6 (guide §1/§6): the audio queries' dominant stage is the Python
     decode kernel, which runs on the SCAN's splits — there is no exchange
@@ -106,12 +170,10 @@ def _synth_clips(
     the generator is a pure function of the row id; parquet round-trips
     binary/int/string exactly). Same cache dir/trap as bench.py's
     ensure_clips (delete after changing synth.py)."""
-    import os as _os
-
     if n_partitions is None:
         n_partitions = _clip_parts(spark)
     path = f"/tmp/kneaddata_bench/clips_q_{n}_{n_partitions}.parquet"
-    if not _os.path.exists(path + "/_SUCCESS"):
+    if not os.path.exists(path + "/_SUCCESS"):
         from ..synth import clips_spark_df
 
         clips_spark_df(spark, n, n_partitions=n_partitions).write.mode(
@@ -4157,13 +4219,9 @@ def cms_heavy_hitters_q(spark, sf):
     DuckDB oracle reproduce every counter exactly."""
     from ..operators.caching import persist_tracked
     from ..operators.dedup import portable_token_hash64
-    from ..operators.partitioning import widen
     from ..operators.sketches import cms_build, cms_estimate
 
-    # r6: widen the single-split scan — per-token portable hash + the
-    # d-row CMS cell explode are the query's heaviest stage
-    d = widen(_t(spark, sf, "documents"), "doc_id")
-    toks = d.select(
+    toks = _t(spark, sf, "documents").select(
         F.explode(F.split(F.lower(F.trim(F.col("text"))), " ")).alias("tok")
     ).where(F.col("tok") != "")
     hashed = persist_tracked(
@@ -5354,11 +5412,7 @@ def embedding_pca_q(spark, sf):
     (sum of floor(|proj|*1000)) that ties the distributed projection to
     the fitted basis. pytest gates bit-exactness vs an in-order float64
     replica."""
-    from ..operators.partitioning import widen
-
-    # r6: widen the single-split scan — the Gram pass and the zip_with
-    # projection folds are per-row lambda work (no-op at real scale)
-    e = widen(_t(spark, sf, "embeddings").select("embedding"))
+    e = _t(spark, sf, "embeddings").select("embedding")
     comps, eigvals, mean, n, total_var = similarity.embedding_pca_fit(e, k=8)
     proj = similarity.pca_project(e, comps, mean)
     wit = (
@@ -6240,20 +6294,9 @@ _HTML_EXTRACT_SQL = (
 )
 
 
-def _html_corpus(spark: SparkSession, sf: str, wide: bool = True) -> DataFrame:
-    """(doc_id, html) — Spark twin of _HTML_SYNTH_SQL, byte-identical.
-
-    r6: widen() the single-split documents scan — most consumers run
-    regex-heavy extraction over the html column into an AGGREGATE, and
-    the compact parquet source would otherwise plan that work as ONE
-    task (no-op at real scale; operators/partitioning.py). Pass
-    wide=False for bases feeding the row-local map-only screens, whose
-    zero-exchange plan shape is itself a pytest-audited invariant."""
+def _html_corpus(spark: SparkSession, sf: str) -> DataFrame:
+    """(doc_id, html) — Spark twin of _HTML_SYNTH_SQL, byte-identical."""
     d = _t(spark, sf, "documents").select("doc_id", "text", "lang", "source")
-    if wide:
-        from ..operators.partitioning import widen
-
-        d = widen(d, "doc_id")
     did = F.col("doc_id").cast("string")
     body = (
         F.when(
@@ -6459,13 +6502,8 @@ _URL_SYNTH_SQL = (
 
 
 def _url_corpus(spark: SparkSession, sf: str) -> DataFrame:
-    """(url_id, url) — Spark twin of _URL_SYNTH_SQL, byte-identical.
-
-    r6: widen() the single-split scan — consumers (canonicalize/SURT/
-    frontier) run deep regex chains per url (no-op at real scale)."""
-    from ..operators.partitioning import widen
-
-    d = widen(_t(spark, sf, "documents").select("doc_id"), "doc_id")
+    """(url_id, url) — Spark twin of _URL_SYNTH_SQL, byte-identical."""
+    d = _t(spark, sf, "documents").select("doc_id")
     m7 = (F.col("doc_id") % 7).cast("string")
     d3 = F.expr("doc_id div 3").cast("string")
     a = d.select(
@@ -6737,10 +6775,8 @@ _CRAWL_SYNTH_SQL = (
 
 def _crawl_corpus(spark: SparkSession, sf: str) -> DataFrame:
     """(doc_id, html) with the planted lang attribute — Spark twin of
-    _CRAWL_SYNTH_SQL (which assumes a CTE `h0 AS (_HTML_SYNTH_SQL)`).
-    wide=False: this basis feeds the row-local screens whose
-    zero-exchange plan is pytest-audited (test_crawl plan audits)."""
-    h = _html_corpus(spark, sf, wide=False)
+    _CRAWL_SYNTH_SQL (which assumes a CTE `h0 AS (_HTML_SYNTH_SQL)`)."""
+    h = _html_corpus(spark, sf)
     d = _t(spark, sf, "documents").select("doc_id", "lang")
     j = h.join(d, "doc_id")
     html = (

@@ -13,6 +13,12 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 N_CLIPS = 600
 
 
+def pytest_configure(config):
+    config.addinivalue_line(
+        "markers", "slow: spawns its own spark-submit JVM (tens of seconds)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from kneaddata_spark.session import get_spark

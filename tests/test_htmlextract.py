@@ -235,10 +235,8 @@ def test_main_content_plan_has_no_exchange(spark):
     from kneaddata_spark.operators.htmlextract import main_content
     from kneaddata_spark.plans.entry_queries import _html_corpus
 
-    # wide=False: this audits the OPERATOR's map-only shape; the query
-    # basis's r6 widen() repartition is audited separately (test_crawl)
     plan = main_content(
-        _html_corpus(spark, SF_DIR, wide=False), "doc_id", "html"
+        _html_corpus(spark, SF_DIR), "doc_id", "html"
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "EvalPython" not in plan and "InPandas" not in plan
@@ -250,9 +248,8 @@ def test_extract_plan_is_shuffle_free(spark):
     from kneaddata_spark.operators.htmlextract import html_extract
     from kneaddata_spark.plans.entry_queries import _html_corpus
 
-    # wide=False: operator-shape audit (see test_main_content note)
     plan = html_extract(
-        _html_corpus(spark, SF_DIR, wide=False), "doc_id", "html"
+        _html_corpus(spark, SF_DIR), "doc_id", "html"
     )._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "EvalPython" not in plan and "InPandas" not in plan

@@ -4260,9 +4260,19 @@ def test_zorder_layout_tightens_file_ranges_on_both_dims(spark):
         )
         return sum(r["uid_span"] for r in parts), sum(r["day_span"] for r in parts)
 
-    z_uid, z_day = span_sums(z, "zval")
-    day_uid, _ = span_sums(z, "day")   # time-sorted layout
-    _, uid_day = span_sums(z, "uid")   # uid-sorted layout
+    # range boundaries from the WHOLE input, not a sample: the sampler's
+    # seed is the RDD id, so with sampled boundaries the spans (and the
+    # z_uid/day_uid ratio, 0.57-0.61) shifted with however many RDDs
+    # earlier tests had created
+    key = "spark.sql.execution.rangeExchange.sampleSizePerPartition"
+    old = spark.conf.get(key)
+    spark.conf.set(key, str(n))
+    try:
+        z_uid, z_day = span_sums(z, "zval")
+        day_uid, _ = span_sums(z, "day")   # time-sorted layout
+        _, uid_day = span_sums(z, "uid")   # uid-sorted layout
+    finally:
+        spark.conf.set(key, old)
     assert z_uid < 0.6 * day_uid
     assert z_day < 0.6 * uid_day
 

@@ -1,6 +1,7 @@
-"""r6 optimization internals: widen() scan-parallelism guard and the
-hashed-shingle basis the pair screens share (operators/partitioning.py,
-dedup._hashed_shingles)."""
+"""Scan width and cache internals: the per-core fixture layout that sets
+every entry query's scan width (entry_queries._t / _synth_clips), the
+hashed-shingle basis the pair screens share (dedup._hashed_shingles) and
+the self-join input pins (caching.persist_tracked)."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -17,42 +18,6 @@ def spark():
 
     s = get_spark(app="test_partitioning", cores=8)
     yield s
-
-
-def test_widen_raises_degenerate_parallelism(spark):
-    """A single-split source comes out at the session's shuffle width;
-    rows and values are untouched."""
-    from kneaddata_spark.operators.partitioning import widen
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = spark.read.parquet(f"{SF_DIR}/documents.parquet").select("doc_id")
-    assert d.rdd.getNumPartitions() < n_parts  # the degenerate premise
-    w = widen(d, "doc_id")
-    assert w.rdd.getNumPartitions() == n_parts
-    assert sorted(r["doc_id"] for r in w.collect()) == sorted(
-        r["doc_id"] for r in d.collect()
-    )
-
-
-def test_widen_is_noop_on_wide_sources(spark):
-    """A source already at (or above) the shuffle width is returned
-    UNCHANGED — the at-scale contract (no repartition of a well-split
-    scan)."""
-    from kneaddata_spark.operators.partitioning import widen
-
-    n_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    d = spark.range(0, 1000, 1, n_parts)
-    assert widen(d, "id") is d
-
-
-def test_widen_streaming_guard(spark, tmp_path):
-    """A streaming frame passes through untouched (.rdd is illegal on
-    streaming sources)."""
-    from kneaddata_spark.operators.partitioning import widen
-
-    spark.range(5).write.mode("overwrite").parquet(str(tmp_path / "in"))
-    s = spark.readStream.schema("id long").parquet(str(tmp_path / "in"))
-    assert widen(s, "id") is s
 
 
 def test_hashed_shingles_guard_matches_string_guard(spark):
@@ -117,11 +82,12 @@ def test_simhash_bitcount_signature_matches_pm1_definition(spark):
 
 
 def test_clip_fixture_scan_width_matches_session(spark):
-    """r6 session 3: the shared audio fixture is written one ~1 MB file
-    per core (floor 8), so the Python decode stage — which has NO
-    exchange before it — plans a scan split per core instead of the old
-    4-8. The file count must track the session's parallelism and the
-    scan must not pack the files back together."""
+    """The shared audio fixture is written one ~1 MB file per core
+    (floor 8), so the Python decode stage — which has NO exchange before
+    it — plans a scan split per core instead of the old 4-8; _t splits
+    the relational tables the same way. The file count must track the
+    session's parallelism and the scan must not pack the files back
+    together."""
     from kneaddata_spark.plans.entry_queries import _clip_parts, _synth_clips
 
     want = _clip_parts(spark)
@@ -129,13 +95,40 @@ def test_clip_fixture_scan_width_matches_session(spark):
     # one split per file: the decode stage inherits this width
     assert clips.rdd.getNumPartitions() >= want - 1  # openCost packing slack
     assert clips.count() == 400
+    # the relational fixtures get the same layout from _t's split of the
+    # single-row-group source file, with every source row kept
+    import pyarrow.parquet as pq
+
+    from kneaddata_spark.plans.entry_queries import _t
+
+    docs = _t(spark, SF_DIR, "documents")
+    assert docs.rdd.getNumPartitions() >= want - 1
+    src = pq.read_table(f"{SF_DIR}/documents.parquet")
+    assert sorted(tuple(r) for r in docs.collect()) == sorted(
+        zip(*[src[c].to_pylist() for c in docs.columns])
+    )
+
+
+def _cached_relations(df) -> set:
+    """Distinct cached relations (by the identity of each InMemoryRelation's
+    cached data) read by the optimized plan's top level. A cache that several plan branches
+    share is counted once, however many scans print for it."""
+    jvm = df.sparkSession._jvm
+    ids, stack = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "InMemoryRelation":
+            ids.add(jvm.System.identityHashCode(node.cacheBuilder()))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return ids
 
 
 def test_dup_screens_pin_their_self_join_inputs(spark):
-    """r6 session 3: the signature/array frames feeding both self-join
-    sides are persist_tracked — without the pin each side re-evaluates
-    the corpus-wide aggregate (and, for images, the Python decode). The
-    pin is visible as InMemoryTableScan in the physical plan."""
+    """The signature/array frames feeding both self-join sides are
+    persist_tracked — without the pin each side re-evaluates the
+    corpus-wide aggregate (and, for images, the Python decode). Each pin
+    is a distinct cached relation in the plan."""
     from tools.audit_plans import plan_of
     from kneaddata_spark.operators import dedup
     from kneaddata_spark.operators.caching import release_tracked
@@ -143,10 +136,32 @@ def test_dup_screens_pin_their_self_join_inputs(spark):
     rows = [(i, f"tok{i} alpha beta gamma delta epsilon zeta") for i in range(30)]
     df = spark.createDataFrame(rows, "doc_id long, text string")
     release_tracked()
-    p = plan_of(dedup.minhash_dedup_pairs(df, "doc_id", "text"))
-    assert "InMemoryTableScan" in p
+    # the signature AND array pins: the shingle cache both are built
+    # from sits inside them, so it alone would count one
+    assert len(_cached_relations(dedup.minhash_dedup_pairs(df, "doc_id", "text"))) >= 2
     release_tracked()
     sigs = dedup.simhash_signatures(df, "doc_id", "text")
     p = plan_of(dedup.simhash_near_dup_pairs(sigs))
     assert "InMemoryTableScan" in p
     release_tracked()
+
+
+def test_persist_tracked_keeps_one_registration_per_frame(spark):
+    """persist_tracked on an already-persisted frame returns it unchanged
+    and does not register it again — neither its own earlier result nor a
+    frame the caller persisted at another storage level."""
+    from pyspark import StorageLevel
+
+    from kneaddata_spark.operators import caching
+
+    caching.release_tracked()
+    once = caching.persist_tracked(spark.range(10))
+    assert caching.persist_tracked(once) is once
+    assert len(caching._LIVE) == 1
+    mine = spark.range(20).persist(StorageLevel.MEMORY_ONLY)
+    assert caching.persist_tracked(mine) is mine
+    assert len(caching._LIVE) == 1
+    assert caching.release_tracked() == 1
+    assert once.storageLevel == StorageLevel.NONE
+    assert mine.storageLevel == StorageLevel.MEMORY_ONLY
+    mine.unpersist()

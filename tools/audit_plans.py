@@ -64,10 +64,8 @@ AUDIT = [
     ("audio_dup_pairs", {"max_exchanges": 2, "arrow_only": True}),
     # r4c: paragraph keep-first dedup — min(struct) per paragraph (map-side
     # combinable, no join-back), reassembly + totals co-partitioned on id:
-    # 3 data distributions total, zero Python. +1 (r6): the conditional
-    # widen() repartition of the single-split local source — a no-op at
-    # real scale (operators/partitioning.py)
-    ("paragraph_dedup", {"max_exchanges": 4, "no_python": True}),
+    # 3 data distributions total, zero Python
+    ("paragraph_dedup", {"max_exchanges": 3, "no_python": True}),
     # r4c: VAD — one Arrow decode stage, ZERO shuffles (embarrassingly
     # parallel segment explode); same nondeterministic-UDF pin as audiodup
     ("vad_segments", {"max_exchanges": 0, "arrow_only": True}),
@@ -108,11 +106,8 @@ AUDIT = [
     # shuffles (same pin as resample/VAD)
     ("audio_loudnorm", {"max_exchanges": 0, "arrow_only": True}),
     # r4d: PII report — row-local regex projection exploded to |rules|
-    # tagged rows + ONE combinable agg; zero Python. r6: +1 exchange for
-    # the widen() of the degenerate single-split scan (the sequential
-    # regex chain is the whole cost) — a conditional no-op at real scale
-    # (operators/partitioning.py), so the scale shape stays ONE shuffle.
-    ("pii_report", {"no_python": True, "max_exchanges": 2}),
+    # tagged rows + ONE combinable agg; zero Python
+    ("pii_report", {"no_python": True, "max_exchanges": 1}),
     # r4d: confusion matrix — co-keyed join + one combinable agg
     ("langid_confusion", {"no_python": True}),
     # r4d: fused prep — the whole resample+loudness chain in ONE Arrow
