@@ -173,22 +173,16 @@ def _hashed_shingles(
     return raw.join(F.broadcast(hot), "h", "left_anti")
 
 
-def ngram_jaccard_pairs(
+def _pair_intersections(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    n: int = 3,
-    threshold: float = 0.5,
-    max_df: int | str | None = "auto",
-) -> DataFrame:
-    """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= t).
-
-    Self-join on shingle -> pair intersection counts; |A|,|B| joined in;
-    J = inter / (|A| + |B| - inter). The shingle join is the only big
-    shuffle; max_df caps its worst key. The shingle frame feeds both the
-    self-join and the size aggregate — persist_tracked (MEMORY_AND_DISK +
-    released when the next tracked-cache query is built,
-    operators/caching.py)."""
+    n: int,
+    max_df: int | str | None,
+) -> tuple[DataFrame, DataFrame]:
+    """(inter, sizes) for the exact pair screens: ``inter`` holds the
+    shared-shingle count of every candidate pair (id_a < id_b), ``sizes``
+    each doc's shingle count (id, sz)."""
     # r6: hashed-long shingle basis, one cache partitioned on h so the
     # self-join needs no further exchange — see _hashed_shingles.
     sh = _hashed_shingles(df, id_col, text_col, n, max_df, part_col="h")
@@ -218,6 +212,26 @@ def ngram_jaccard_pairs(
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
+    return inter, sizes
+
+
+def ngram_jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int = 3,
+    threshold: float = 0.5,
+    max_df: int | str | None = "auto",
+) -> DataFrame:
+    """Exact n-gram Jaccard near-dup pairs (id_a < id_b, jaccard >= t).
+
+    Self-join on shingle -> pair intersection counts; |A|,|B| joined in;
+    J = inter / (|A| + |B| - inter). The shingle join is the only big
+    shuffle; max_df caps its worst key. The shingle frame feeds both the
+    self-join and the size aggregate — persist_tracked (MEMORY_AND_DISK +
+    released when the next tracked-cache query is built,
+    operators/caching.py)."""
+    inter, sizes = _pair_intersections(df, id_col, text_col, n, max_df)
     # sizes is |docs| rows — NOT broadcastable at corpus scale; keyed joins
     # (AQE picks broadcast automatically when it is actually small)
     out = (
@@ -251,26 +265,7 @@ def containment_pairs(
     contained'). Same machinery and scale shape as ngram_jaccard_pairs:
     one shingle self-join (df-guard bounded), sizes joined back keyed
     (AQE broadcasts when small), persist_tracked shingle frame."""
-    # r6: hashed-long join/aggregate keys + h-partitioned cache +
-    # shuffled-hash self-join + repartition-then-aggregate pair counting
-    # — see ngram_jaccard_pairs for the measurements (identical here).
-    sh = _hashed_shingles(df, id_col, text_col, n, max_df, part_col="h")
-    # r6 session 3: sizes is joined back TWICE (id_a and id_b sides), so
-    # without a pin each join side re-aggregates the corpus-scale cache
-    # (guide §7.2; measured 15.3 -> 10.4 s cold-session, ~0.5 s
-    # steady-state at sf1.0). |docs| rows.
-    sizes = persist_tracked(sh.groupBy("id").agg(F.count("*").alias("sz")))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    n_parts = shuffle_width(df)
-    inter = (
-        a.join(b.hint("shuffle_hash"), "h")
-        .where(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .repartition(n_parts, F.col("id_a"), F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
+    inter, sizes = _pair_intersections(df, id_col, text_col, n, max_df)
     out = (
         inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")

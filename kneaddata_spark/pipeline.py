@@ -331,7 +331,10 @@ def run_training_pipeline(
     (dedup.dup_clusters) and keep the min-id row per CLUSTER — the
     reference's keep-first-occurrence convention (utilities.py:519-520)
     made transitive (a per-PAIR drop of id_b mangles chains a~b~c).
-    Returns stage counters (the READ COUNT ladder)."""
+    Returns stage counters (the READ COUNT ladder); the two table counts
+    ride their writes via observe() instead of re-reading the tables."""
+    from pyspark.sql import Observation
+
     from .operators.dedup import dedup_exact, dup_clusters, minhash_dedup_pairs
     from .operators.setops import anti_join_ids
 
@@ -340,7 +343,10 @@ def run_training_pipeline(
 
     uniq = dedup_exact(kept, "clip_id", "transcript")
     uniq_path = f"{out_dir}/clips_unique"
-    uniq.write.mode("overwrite").parquet(uniq_path)
+    uniq_obs = Observation("clips_unique")
+    uniq.observe(uniq_obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(uniq_path)
     uniq = spark.read.parquet(uniq_path)
 
     near = minhash_dedup_pairs(
@@ -353,7 +359,10 @@ def run_training_pipeline(
     )
     final = anti_join_ids(uniq, drop_ids, key="clip_id")
     final_path = f"{out_dir}/clips_final"
-    final.write.mode("overwrite").parquet(final_path)
+    final_obs = Observation("clips_final")
+    final.observe(final_obs, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(final_path)
 
     # the near-dup stage's shingle frame is persisted (operators/caching);
     # the final corpus is on disk, so release it before returning
@@ -362,8 +371,8 @@ def run_training_pipeline(
     release_tracked()
 
     n_kept = int(qc.metrics["n_kept"])
-    n_uniq = spark.read.parquet(uniq_path).count()
-    n_final = spark.read.parquet(final_path).count()
+    n_uniq = int(uniq_obs.get["n"])
+    n_final = int(final_obs.get["n"])
     return {
         "n_rows": int(qc.metrics["n_rows"]),
         "n_kept": n_kept,

@@ -17,10 +17,10 @@ no per-key state anywhere.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .runner import batch_dir, run_stream, source
 
 
 def stream_cms(
@@ -30,26 +30,20 @@ def stream_cms(
     checkpoint_dir: str,
     schema_ddl: str,
     hash_col: str,
-    available_now: bool = True,
 ):
     """readStream(input_dir) -> per-batch CMS counter tables under
     ``sketch_dir/batch_id=<n>/``. The source rows must already carry the
     32-bit portable hash in ``hash_col`` (one projection upstream)."""
     from ..operators.sketches import cms_build
 
-    stream = spark.readStream.schema(schema_ddl).parquet(input_dir)
-
     def _process(batch_df, batch_id: int) -> None:
         cms_build(batch_df, hash_col).write.mode("overwrite").parquet(
-            os.path.join(sketch_dir, f"batch_id={int(batch_id)}")
+            batch_dir(sketch_dir, batch_id)
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return run_stream(
+        source(spark, input_dir, schema_ddl), checkpoint_dir, per_batch=_process
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_sketch(spark: SparkSession, sketch_dir: str) -> DataFrame:

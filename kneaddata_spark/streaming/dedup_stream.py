@@ -29,28 +29,10 @@ read probes the contaminant databases.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
-DOC_DDL = "doc_id string, text string"
-
-
-def _seen_hashes(spark: SparkSession, seen_dir: str):
-    """The persisted hash table, or an empty frame before first commit.
-    Listing the directory (not try/except on read) keeps the plan clean:
-    an empty-but-existing dir with no parquet footers also maps to the
-    empty frame."""
-    has_files = os.path.isdir(seen_dir) and any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(seen_dir)
-        for f in files
-    )
-    if has_files:
-        return spark.read.schema("h string").parquet(seen_dir)
-    return spark.createDataFrame([], T.StructType([T.StructField("h", T.StringType())]))
+from .runner import DOC_DDL, batch_dir, read_or_empty, run_stream, source
 
 
 def stream_dedup(
@@ -59,7 +41,6 @@ def stream_dedup(
     out_dir: str,
     seen_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """readStream(input_dir) -> foreachBatch(incremental_dedup_exact
@@ -72,29 +53,18 @@ def stream_dedup(
     re-triggering with the same checkpoint adds nothing (tested)."""
     from ..operators.dedup import incremental_dedup_exact
 
-    src = spark.readStream.schema(DOC_DDL)
-    if max_files_per_trigger is not None:
-        src = src.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = src.parquet(input_dir)
-
     def _process(batch_df, batch_id: int) -> None:
-        seen = _seen_hashes(spark, seen_dir)
+        seen = read_or_empty(spark, seen_dir, "h string")
         # new_hashes is re-derived below from the checkpointed survivors
         # (identical by construction) so both sinks share one computation
         clean, _ = incremental_dedup_exact(batch_df, "doc_id", "text", seen)
         # materialize ONCE: clean and new_hashes share the probe subplan,
         # and the second write must see the same rows the first did
         clean = clean.localCheckpoint(eager=True)
-        clean.write.mode("overwrite").parquet(
-            os.path.join(out_dir, f"batch_id={int(batch_id)}")
-        )
+        clean.write.mode("overwrite").parquet(batch_dir(out_dir, batch_id))
         clean.select(F.md5("text").alias("h")).write.mode("overwrite").parquet(
-            os.path.join(seen_dir, f"batch_id={int(batch_id)}")
+            batch_dir(seen_dir, batch_id)
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = source(spark, input_dir, DOC_DDL, max_files_per_trigger)
+    return run_stream(stream, checkpoint_dir, per_batch=_process)

@@ -29,10 +29,10 @@ log_read_count_for_files) as a forever-running monitor.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .runner import batch_dir, run_stream, source
 
 
 def stream_distinct(
@@ -43,27 +43,19 @@ def stream_distinct(
     schema_ddl: str,
     key: str,
     group_cols: list[str],
-    available_now: bool = True,
 ):
     """readStream(input_dir) -> per-batch HLL register tables under
     ``regs_dir/batch_id=<n>/``. Returns the StreamingQuery; read the
     running estimate any time with ``distinct_estimate``."""
     from ..operators.sketches import hll_registers
 
-    stream = spark.readStream.schema(schema_ddl).parquet(input_dir)
-
     def _process(batch_df, batch_id: int) -> None:
         regs = hll_registers(batch_df, key, group_cols)
-        regs.write.mode("overwrite").parquet(
-            os.path.join(regs_dir, f"batch_id={int(batch_id)}")
-        )
+        regs.write.mode("overwrite").parquet(batch_dir(regs_dir, batch_id))
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return run_stream(
+        source(spark, input_dir, schema_ddl), checkpoint_dir, per_batch=_process
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def distinct_estimate(
@@ -86,7 +78,6 @@ def stream_quantiles(
     schema_ddl: str,
     value_col: str,
     group_cols: list[str],
-    available_now: bool = True,
 ):
     """Streaming counterpart of sketches.quantile_sketch: each
     micro-batch writes its own per-(group, bucket) log-histogram counts
@@ -94,8 +85,6 @@ def stream_quantiles(
     isolation for replay safety, like cms_stream). Read the running
     quantiles any time with ``quantile_estimate``."""
     from ..operators.sketches import QB_BITS, log_bucket
-
-    stream = spark.readStream.schema(schema_ddl).parquet(input_dir)
 
     def _process(batch_df, batch_id: int) -> None:
         v = F.col(value_col).cast("long")
@@ -106,16 +95,11 @@ def stream_quantiles(
             .groupBy(*group_cols, "__bucket")
             .agg(F.count("*").cast("long").alias("__n"))
         )
-        counts.write.mode("overwrite").parquet(
-            os.path.join(hist_dir, f"batch_id={int(batch_id)}")
-        )
+        counts.write.mode("overwrite").parquet(batch_dir(hist_dir, batch_id))
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return run_stream(
+        source(spark, input_dir, schema_ddl), checkpoint_dir, per_batch=_process
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def quantile_estimate(

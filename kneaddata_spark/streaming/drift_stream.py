@@ -24,6 +24,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .runner import batch_dir, run_stream, source
+
 EMB_DDL = "vec_id long, embedding array<float>"
 
 
@@ -34,25 +36,19 @@ def stream_drift_moments(
     checkpoint_dir: str,
     vec_col: str = "embedding",
     quant: int = 1 << 20,
-    available_now: bool = True,
 ):
     """readStream(parquet dir of EMB_DDL rows) -> per-batch moment cells
     under ``moments_dir/batch_id=<n>/``."""
     from ..operators.similarity import quantized_dim_moments
 
-    stream = spark.readStream.schema(EMB_DDL).parquet(input_dir)
-
     def _process(batch_df, batch_id: int) -> None:
         quantized_dim_moments(batch_df, vec_col, quant).write.mode(
             "overwrite"
-        ).parquet(os.path.join(moments_dir, f"batch_id={int(batch_id)}"))
+        ).parquet(batch_dir(moments_dir, batch_id))
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return run_stream(
+        source(spark, input_dir, EMB_DDL), checkpoint_dir, per_batch=_process
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def merged_moments(spark: SparkSession, moments_dir: str) -> DataFrame:

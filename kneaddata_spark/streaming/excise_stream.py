@@ -29,7 +29,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-DOC_DDL = "doc_id string, text string"
+from .runner import DOC_DDL, batch_dir, run_stream, source
 
 
 def stream_excise(
@@ -40,7 +40,6 @@ def stream_excise(
     benchmark: DataFrame,
     k: int = 4,
     window: int = 4,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
 ):
     """readStream(input_dir) -> foreachBatch(excise_substrings vs the
@@ -54,8 +53,8 @@ def stream_excise(
     # benchmark fingerprints: computed once, pinned for the LIFE OF THE
     # STREAM (the benchmark is frozen; every micro-batch probes this
     # frame). Deliberately exempt from operators/caching.persist_tracked:
-    # its release-at-next-query-build contract would drop a live
-    # stream's cache mid-run. Storage level spelled out per the
+    # tracked pins are released after every micro-batch (runner) and at
+    # the next query build, which would drop a live stream's cache. Storage level spelled out per the
     # caching.py rule (corpus-scale frames must spill, not OOM); the
     # pin is released when the stream's session ends.
     from pyspark import StorageLevel
@@ -65,11 +64,6 @@ def stream_excise(
     )
     bfp.count()  # materialize before the first trigger
 
-    src = spark.readStream.schema(DOC_DDL)
-    if max_files_per_trigger is not None:
-        src = src.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = src.parquet(input_dir)
-
     def _process(batch_df, batch_id: int) -> None:
         out = excise_substrings(
             batch_df, None, "doc_id", "text", k, window, benchmark_fps=bfp
@@ -78,7 +72,7 @@ def stream_excise(
         # see identical rows (same convention as dedup_stream)
         out = out.localCheckpoint(eager=True)
         out.write.mode("overwrite").parquet(
-            os.path.join(out_dir, "docs", f"batch_id={int(batch_id)}")
+            batch_dir(os.path.join(out_dir, "docs"), batch_id)
         )
         out.groupBy().agg(
             F.count("*").cast("long").alias("n_docs"),
@@ -86,12 +80,8 @@ def stream_excise(
             F.sum("n_tokens").alias("toks"),
             F.sum("n_cut").alias("cut"),
         ).write.mode("overwrite").parquet(
-            os.path.join(out_dir, "metrics", f"batch_id={int(batch_id)}")
+            batch_dir(os.path.join(out_dir, "metrics"), batch_id)
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = source(spark, input_dir, DOC_DDL, max_files_per_trigger)
+    return run_stream(stream, checkpoint_dir, per_batch=_process)

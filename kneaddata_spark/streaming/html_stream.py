@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..operators.htmlextract import html_extract
+from .runner import run_stream, source
 
 PAGE_DDL = "doc_id LONG, html STRING"
 
@@ -34,25 +35,8 @@ def stream_html_extract(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """readStream(input_dir) -> html_extract -> append parquet rows.
-
-    Returns the started StreamingQuery; availableNow processes the
-    backlog then stops (the batch-equivalent test trigger), a
-    max_files_per_trigger reader is the continuous deployment."""
-    reader = spark.readStream.schema(PAGE_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    pages = reader.parquet(input_dir)
-    writer = (
-        html_extract(pages, "doc_id", "html")
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    Returns the started StreamingQuery."""
+    pages = source(spark, input_dir, PAGE_DDL)
+    return run_stream(html_extract(pages, "doc_id", "html"), checkpoint_dir, out_dir)

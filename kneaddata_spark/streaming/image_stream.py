@@ -19,33 +19,13 @@ the index by (band, chunk) at scale); image bytes never reshuffle.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from .runner import batch_dir, read_or_empty, run_stream, source
 
 MEDIA_DDL = "media_id string, bytes binary, mime string"
-
-_INDEX_SCHEMA = T.StructType(
-    [
-        T.StructField("band", T.IntegerType()),
-        T.StructField("chunk", T.LongType()),
-        T.StructField("id", T.StringType()),
-        T.StructField("dhash", T.LongType()),
-    ]
-)
-
-
-def _stored_index(spark: SparkSession, index_dir: str):
-    has_files = os.path.isdir(index_dir) and any(
-        f.endswith(".parquet")
-        for _, _, files in os.walk(index_dir)
-        for f in files
-    )
-    if has_files:
-        return spark.read.schema(_INDEX_SCHEMA).parquet(index_dir)
-    return spark.createDataFrame([], _INDEX_SCHEMA)
+_INDEX_DDL = "band int, chunk bigint, id string, dhash bigint"
 
 
 def stream_image_screen(
@@ -55,7 +35,6 @@ def stream_image_screen(
     index_dir: str,
     checkpoint_dir: str,
     max_hamming: int = 3,
-    available_now: bool = True,
 ):
     """readStream(parquet dir of MEDIA_DDL rows) -> foreachBatch
     (incremental_image_dedup vs the accumulated index) -> survivors
@@ -64,10 +43,8 @@ def stream_image_screen(
     ``index_dir/batch_id=<n>/``."""
     from ..operators.imagedup import image_band_index, incremental_image_dedup
 
-    stream = spark.readStream.schema(MEDIA_DDL).parquet(input_dir)
-
     def _process(batch_df, batch_id: int) -> None:
-        idx = _stored_index(spark, index_dir)
+        idx = read_or_empty(spark, index_dir, _INDEX_DDL)
         surv, flagged = incremental_image_dedup(
             batch_df, idx, max_hamming=max_hamming
         )
@@ -76,15 +53,12 @@ def stream_image_screen(
             surv.select("media_id", F.lit("kept").alias("status"))
             .unionByName(flagged.select("media_id", F.lit("flagged").alias("status")))
             .write.mode("overwrite")
-            .parquet(os.path.join(out_dir, f"batch_id={int(batch_id)}"))
+            .parquet(batch_dir(out_dir, batch_id))
         )
         image_band_index(surv).write.mode("overwrite").parquet(
-            os.path.join(index_dir, f"batch_id={int(batch_id)}")
+            batch_dir(index_dir, batch_id)
         )
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
+    return run_stream(
+        source(spark, input_dir, MEDIA_DDL), checkpoint_dir, per_batch=_process
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

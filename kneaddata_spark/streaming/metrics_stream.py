@@ -7,7 +7,7 @@ watermark bounding state for late data. This is the READ-COUNT-log analog
 stateless stream_qc pass — and demonstrates the watermark/window/state
 machinery of Structured Streaming on this engine's tables.
 
-Also: ``stream_dedup`` — exactly-once ingestion dedup via
+Also: ``dedup_within_watermark`` — exactly-once ingestion dedup via
 ``dropDuplicatesWithinWatermark`` on clip_id (duplicate deliveries are the
 normal failure mode of at-least-once ingestion pipelines; the reference's
 first-occurrence semantics, utilities.py:490-520, applied to a stream).
@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .runner import source
 
 EVENT_DDL = "clip_id string, status string, event_ts timestamp"
 
@@ -30,9 +32,9 @@ def windowed_status_counts(
     """readStream(parquet dir of EVENT_DDL rows) -> watermarked tumbling-
     window counts per status. Caller attaches the sink (complete/update or
     append mode; append emits a window only after the watermark passes it)."""
-    src = spark.readStream.schema(EVENT_DDL).parquet(input_dir)
     return (
-        src.withWatermark("event_ts", watermark)
+        source(spark, input_dir, EVENT_DDL)
+        .withWatermark("event_ts", watermark)
         .groupBy(F.window("event_ts", window).alias("win"), "status")
         .agg(F.count("*").alias("n"))
         .select(
@@ -44,14 +46,15 @@ def windowed_status_counts(
     )
 
 
-def stream_dedup(
+def dedup_within_watermark(
     spark: SparkSession,
     input_dir: str,
     watermark: str = "10 minutes",
 ) -> DataFrame:
     """Drop duplicate clip_ids arriving within the watermark horizon
     (bounded state; beyond-horizon re-deliveries are the checkpoint's job)."""
-    src = spark.readStream.schema(EVENT_DDL).parquet(input_dir)
-    return src.withWatermark("event_ts", watermark).dropDuplicatesWithinWatermark(
-        ["clip_id"]
+    return (
+        source(spark, input_dir, EVENT_DDL)
+        .withWatermark("event_ts", watermark)
+        .dropDuplicatesWithinWatermark(["clip_id"])
     )

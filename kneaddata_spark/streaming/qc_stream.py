@@ -9,9 +9,9 @@ per micro-batch, and outputs append to the partitioned table. Exactly-once
 comes from the sink checkpoint (offsets + file-commit log) — the streaming
 counterpart of the batch checkpoint.run_checkpointed bucket manifest.
 
-``availableNow`` trigger processes the backlog then stops — the streaming
-path is testable batch-equivalently (tests assert per-status counts match
-the batch run on identical input).
+The runner's ``availableNow`` trigger processes the backlog then stops —
+the streaming path is testable batch-equivalently (tests assert
+per-status counts match the batch run on identical input).
 """
 
 from __future__ import annotations
@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import annotate, broadcast_models, qc_output_select
+from .runner import run_stream, source
 
 CLIP_DDL = (
     "clip_id string, bytes binary, sr_hz int, dur_ms int, "
@@ -34,8 +35,6 @@ def stream_qc(
     checkpoint_dir: str,
     langid_bc=None,
     ppl_bc=None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """readStream(input_dir) -> annotate -> append to partitioned parquet.
 
@@ -46,25 +45,11 @@ def stream_qc(
     """
     if langid_bc is None or ppl_bc is None:
         langid_bc, ppl_bc = broadcast_models(spark)
-    reader = spark.readStream.schema(CLIP_DDL)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    clips = reader.parquet(input_dir)
-
-    ann = annotate(clips, langid_bc, ppl_bc)
+    ann = annotate(source(spark, input_dir, CLIP_DDL), langid_bc, ppl_bc)
     # identical projection to the batch path (pipeline.qc_output_select):
     # stream==batch is a schema-level contract, not just a count-level one
     out = qc_output_select(ann)
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("status")
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_stream(out, checkpoint_dir, out_dir, partition_by=("status",))
 
 
 def status_counts(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -22,6 +22,7 @@ from pyspark.sql import SparkSession
 
 from ..operators.audioscreen import screen_audio
 from .qc_stream import CLIP_DDL
+from .runner import run_stream, source
 
 
 def stream_screen(
@@ -29,25 +30,8 @@ def stream_screen(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """readStream(input_dir) -> screen_audio -> append parquet verdicts.
-
-    Returns the started StreamingQuery; availableNow processes the
-    backlog then stops (the batch-equivalent test trigger), a
-    max_files_per_trigger reader is the continuous deployment."""
-    reader = spark.readStream.schema(CLIP_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    clips = reader.parquet(input_dir)
-    writer = (
-        screen_audio(clips)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    Returns the started StreamingQuery."""
+    clips = source(spark, input_dir, CLIP_DDL)
+    return run_stream(screen_audio(clips), checkpoint_dir, out_dir)

@@ -27,11 +27,9 @@ consumer-ready files.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import SparkSession
 
-DOC_DDL = "doc_id string, text string"
+from .runner import DOC_DDL, batch_dir, run_stream, source
 
 
 def stream_webdataset(
@@ -41,7 +39,6 @@ def stream_webdataset(
     receipts_dir: str,
     checkpoint_dir: str,
     samples_per_shard: int = 64,
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
     schema: str = DOC_DDL,
     id_col: str = "doc_id",
@@ -56,27 +53,16 @@ def stream_webdataset(
     tar_bytes, sha256, path) under ``receipts_dir/batch_id=<n>/``."""
     from ..sources.webdataset import shard_plan, write_shards
 
-    src = spark.readStream.schema(schema)
-    if max_files_per_trigger is not None:
-        src = src.option("maxFilesPerTrigger", int(max_files_per_trigger))
-    stream = src.parquet(input_dir)
-
     def _process(batch_df, batch_id: int) -> None:
         planned = shard_plan(batch_df, id_col, samples_per_shard)
         receipts = write_shards(
             planned,
-            os.path.join(out_dir, f"batch_id={int(batch_id)}"),
+            batch_dir(out_dir, batch_id),
             id_col,
             payload_col,
             meta_cols=meta_cols,
         )
-        receipts.write.mode("overwrite").parquet(
-            os.path.join(receipts_dir, f"batch_id={int(batch_id)}")
-        )
+        receipts.write.mode("overwrite").parquet(batch_dir(receipts_dir, batch_id))
 
-    writer = stream.writeStream.foreachBatch(_process).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    stream = source(spark, input_dir, schema, max_files_per_trigger)
+    return run_stream(stream, checkpoint_dir, per_batch=_process)

@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..pipeline import annotate, broadcast_models, qc_output_select
 from ..sources.warc import records_from_files
-from .warc_stream import _BINARY_FILE_DDL
+from .runner import BINARY_FILE_DDL, run_stream, source
 
 
 def stream_warc_audio_qc(
@@ -37,8 +37,6 @@ def stream_warc_audio_qc(
     checkpoint_dir: str,
     langid_bc=None,
     ppl_bc=None,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """readStream(binaryFile shards) -> records -> audio gate -> static
     catalog join -> annotate -> append parquet partitioned by status.
@@ -46,10 +44,8 @@ def stream_warc_audio_qc(
     transcript). Returns the started StreamingQuery."""
     if langid_bc is None or ppl_bc is None:
         langid_bc, ppl_bc = broadcast_models(spark)
-    reader = spark.readStream.format("binaryFile").schema(_BINARY_FILE_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    recs = records_from_files(reader.load(input_dir))
+    files = source(spark, input_dir, BINARY_FILE_DDL, fmt="binaryFile")
+    recs = records_from_files(files)
     audio = recs.where(
         (F.col("warc_type") == "response")
         & F.col("http_content_type").startswith("audio/")
@@ -61,13 +57,4 @@ def stream_warc_audio_qc(
         "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
     )
     out = qc_output_select(annotate(clips, langid_bc, ppl_bc))
-    writer = (
-        out.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("status")
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_stream(out, checkpoint_dir, out_dir, partition_by=("status",))

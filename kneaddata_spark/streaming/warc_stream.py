@@ -12,9 +12,8 @@ mapInPandas, soft per-record failure), so the identical plan runs under
 readStream — the stream==batch contract the QC and html ingests hold,
 extended to the container source (pytest-gated: identical rows, binary
 payloads byte-equal). Exactly-once comes from the sink checkpoint;
-binaryFile is a standard file streaming source, so backlog processing
-(availableNow) and rate-limited continuous runs (maxFilesPerTrigger —
-one shard == one task == the natural rate unit) both apply.
+binaryFile is a standard file streaming source, so the runner's
+backlog trigger applies unchanged.
 
 Reference lineage: the reference is strictly batch (SURVEY.md §2.8);
 engine extension like qc_stream/html_stream.
@@ -25,12 +24,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..sources.warc import records_from_files
-
-# binaryFile's fixed schema, spelled explicitly: streaming file sources
-# refuse schema inference even for fixed-schema formats
-_BINARY_FILE_DDL = (
-    "path STRING, modificationTime TIMESTAMP, length LONG, content BINARY"
-)
+from .runner import BINARY_FILE_DDL, run_stream, source
 
 
 def stream_warc_records(
@@ -38,25 +32,8 @@ def stream_warc_records(
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int | None = None,
 ):
     """readStream(binaryFile over input_dir) -> record walk -> append
-    parquet record rows. Returns the started StreamingQuery;
-    availableNow processes the backlog then stops (the batch-equivalent
-    test trigger); maxFilesPerTrigger bounds shards per micro-batch in
-    the continuous deployment."""
-    reader = spark.readStream.format("binaryFile").schema(_BINARY_FILE_DDL)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    files = reader.load(input_dir)
-    writer = (
-        records_from_files(files)
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    parquet record rows. Returns the started StreamingQuery."""
+    files = source(spark, input_dir, BINARY_FILE_DDL, fmt="binaryFile")
+    return run_stream(records_from_files(files), checkpoint_dir, out_dir)

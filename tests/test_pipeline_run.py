@@ -143,6 +143,8 @@ def test_training_pipeline_end_to_end(spark, tmp_path):
     assert stats["n_exact_dups_removed"] >= 5      # kept dups collapse
     assert stats["n_final"] <= stats["n_exact_unique"]
     assert spark.read.parquet(stats["final_path"]).count() == stats["n_final"]
+    uniq_path = str(tmp_path / "tp" / "clips_unique")
+    assert spark.read.parquet(uniq_path).count() == stats["n_exact_unique"]
 
 
 def test_lang_parity_all_rows(spark, clips_path, oracle_labels):

@@ -199,6 +199,9 @@ def test_stream_dedup_incremental_and_idempotent(spark, tmp_path):
 
     hashes = [r["h"] for r in spark.read.parquet(seen).collect()]
     assert len(hashes) == len(set(hashes)) == 15  # 10 + 5, each once
+    # one trigger per staged file, each reporting that file's rows
+    progress = q0.recentProgress + q1.recentProgress
+    assert [p["numInputRows"] for p in progress] == [len(a), len(b)]
 
     n_before = spark.read.parquet(out).count()
     q2 = stream_dedup(spark, src, out, seen, ckpt, max_files_per_trigger=1)
@@ -424,8 +427,10 @@ def test_stream_image_screen_cross_batch_and_replay(spark, tmp_path):
     import numpy as np
 
     from kneaddata_spark.multimodal import encode_bmp
+    from kneaddata_spark.operators import caching
     from kneaddata_spark.streaming.image_stream import stream_image_screen
 
+    caching.release_tracked()
     rng = np.random.RandomState(53)
     A = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
     B = rng.randint(0, 256, (16, 16, 3), dtype=np.uint8)
@@ -472,3 +477,46 @@ def test_stream_image_screen_cross_batch_and_replay(spark, tmp_path):
         r["media_id"]: r["status"] for r in spark.read.parquet(out).collect()
     }
     assert after == verdicts
+    # every micro-batch's tracked pins were released when the batch ended
+    assert caching._LIVE == []
+
+
+def test_only_the_runner_starts_streams():
+    """Every stream in kneaddata_spark/streaming/ is read, triggered and
+    written through runner.py; no other module there touches the
+    readStream/writeStream API, and no function takes an available_now
+    switch (the runner always uses availableNow)."""
+    import ast
+    import glob
+    import os
+
+    import kneaddata_spark.streaming as pkg
+
+    api = {"readStream", "writeStream", "trigger", "foreachBatch"}
+    touched, switches, rate_caps = set(), [], set()
+    for path in glob.glob(os.path.join(os.path.dirname(pkg.__file__), "*.py")):
+        name = os.path.basename(path)
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if (isinstance(node, ast.Attribute) and node.attr in api) or (
+                isinstance(node, ast.Name) and node.id in api
+            ):
+                touched.add(name)
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                a = node.args
+                params = a.posonlyargs + a.args + a.kwonlyargs
+                if any(p.arg == "available_now" for p in params):
+                    switches.append(f"{name}:{node.name}")
+                if any(p.arg == "max_files_per_trigger" for p in params):
+                    rate_caps.add(f"{name}:{node.name}")
+    assert touched == {"runner.py"}
+    assert switches == []
+    # the rate cap stays only where a cross-batch test needs one file
+    # per micro-batch
+    assert rate_caps == {
+        "runner.py:source",
+        "dedup_stream.py:stream_dedup",
+        "excise_stream.py:stream_excise",
+        "shard_stream.py:stream_webdataset",
+    }

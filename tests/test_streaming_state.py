@@ -65,9 +65,9 @@ def test_windowed_counts_match_batch(spark, event_dir, tmp_path):
 
 
 def test_stream_dedup_within_watermark(spark, event_dir, tmp_path):
-    from kneaddata_spark.streaming.metrics_stream import stream_dedup
+    from kneaddata_spark.streaming.metrics_stream import dedup_within_watermark
 
-    out = stream_dedup(spark, event_dir, watermark="30 minutes")
+    out = dedup_within_watermark(spark, event_dir, watermark="30 minutes")
     q = (
         out.writeStream.format("memory")
         .queryName("dedup_out")
