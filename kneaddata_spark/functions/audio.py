@@ -35,6 +35,7 @@ import pandas as pd
 import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import rules
 
@@ -393,6 +394,80 @@ def _binary_bounds(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
         else np.zeros(1, dtype=np.uint8)
     )
     return data, starts, ends
+
+
+def _decode_s16(data: np.ndarray, s: int, e: int, codec: str) -> "np.ndarray | None":
+    """Row decode against the shared uint8 buffer -> int16 samples, or None.
+    Same codec registry and structural gates as the QC kernel
+    (audio_features_core); pcm_u8 maps to the int16 domain as
+    (x - 128) << 8 so one quantization rule covers all codecs. Never
+    returns an empty array: an empty payload, a zero-length container
+    payload and an empty python-codec decode all return None."""
+    spec = CODECS.get(codec)
+    nb = e - s
+    if spec is None or nb <= 0:
+        return None
+    if spec.kind == "pcm_s16":
+        if nb % 2:
+            return None
+        return np.frombuffer(data[s:e].tobytes(), dtype="<i2")
+    if spec.kind == "pcm_u8":
+        return (data[s:e].astype(np.int16) - 128) << 8
+    if spec.kind == "container_s16":
+        if nb < 8 or data[s : s + 4].tobytes() != spec.magic:
+            return None
+        plen = int.from_bytes(data[s + 4 : s + 8].tobytes(), "little")
+        if plen != nb - 8 or plen % 2 or plen == 0:
+            return None
+        return np.frombuffer(data[s + 8 : e].tobytes(), dtype="<i2")
+    # kind == "python": registered real decoder (e.g. WAV RIFF walk)
+    pcm = spec.decode(bytes(data[s:e]))
+    if pcm is None or pcm.dtype != np.int16 or len(pcm) == 0:
+        return None
+    return pcm
+
+
+def clip_udf(return_type: T.DataType, kernel: Callable, rate: bool = False):
+    """The per-clip Arrow UDF every audio operator is built on. Call the
+    result as ``udf(bytes, codec, *args)``; it returns ``return_type``.
+
+    For each row it decodes ``bytes`` to int16 samples (zero-copy view of
+    the Arrow buffers, then `_decode_s16`) and returns
+    ``kernel(samples, *row_args)``: a dict or a tuple in field order for
+    a struct, a list for an array, or None. Rows that fail to decode are
+    NULL without calling the kernel. With ``rate=True`` the first extra
+    argument is the sample rate: a NULL or non-positive rate makes the
+    row NULL, and the kernel gets it as an int. The Arrow return type is
+    derived from ``return_type``; operators declare only the Spark type.
+
+    The UDF is pinned non-deterministic although the kernel is a pure
+    function of its inputs. Without the pin Catalyst duplicates the
+    decode: InferFiltersFromGenerate pushes the inferred
+    ``isnotnull(col) AND size(col) > 0`` of a downstream (pos)explode
+    below the projection, and CollapseProject may copy a deterministic
+    struct into every field that reads it; each copy is another Arrow
+    stage (observed: two ArrowEvalPython stages, 2x decode cost). The pin keeps
+    it to exactly one stage; retries stay safe because the result is
+    deterministic in fact."""
+    pa_type = to_arrow_type(return_type)
+
+    def udf(raw: pa.Array, codec: pa.Array, *args: pa.Array) -> pa.Array:
+        data, starts, ends = _binary_bounds(raw)
+        cols = [a.to_pylist() for a in args]
+        out = []
+        for i, c in enumerate(codec.to_pylist()):
+            row = [col[i] for col in cols]
+            if rate:
+                if not row[0] or row[0] <= 0:
+                    out.append(None)
+                    continue
+                row[0] = int(row[0])
+            x = _decode_s16(data, int(starts[i]), int(ends[i]), c)
+            out.append(None if x is None else kernel(x, *row))
+        return pa.array(out, type=pa_type)
+
+    udf.__name__ = kernel.__name__  # plans name the kernel
+    return F.arrow_udf(udf, return_type).asNondeterministic()
 
 
 @F.arrow_udf(AUDIO_STRUCT)

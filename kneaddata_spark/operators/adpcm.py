@@ -38,9 +38,11 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions.audio import clip_udf
 
 __all__ = [
     "ADPCM_BLOCK",
@@ -209,73 +211,44 @@ def _transcode_one(x: np.ndarray) -> tuple:
     return b"".join(packed_parts), rt, n_blocks
 
 
-_ADPCM_T = (
-    "struct<n_samples:bigint,n_blocks:bigint,n_code_bytes:bigint,"
-    "crc_code:bigint,crc_rt:bigint,max_abs_err:bigint,meansq_x:bigint,"
-    "snr_q:bigint>"
+_ADPCM_T = T.StructType(
+    [
+        T.StructField(n, T.LongType())
+        for n in (
+            "n_samples",
+            "n_blocks",
+            "n_code_bytes",
+            "crc_code",
+            "crc_rt",
+            "max_abs_err",
+            "meansq_x",
+            "snr_q",
+        )
+    ]
 )
 
 
-_UDF_CACHE = []
+def adpcm_of(x: np.ndarray) -> tuple:
+    """int16 samples -> the _ADPCM_T witnesses of one IMA round trip."""
+    packed, rt, n_blocks = _transcode_one(x.astype(np.int32))
+    xi = x.astype(np.int64)
+    err = np.abs(xi - rt.astype(np.int64))
+    meansq_x = int((xi**2).sum() // len(x))
+    meansq_e = int((err**2).sum() // len(x))
+    return (
+        int(len(x)),
+        int(n_blocks),
+        len(packed),
+        int(zlib.crc32(packed)),
+        int(zlib.crc32(rt.astype("<i2").tobytes())),
+        int(err.max()),
+        meansq_x,
+        # integer SNR (power ratio; the snr_screen no-dB rule)
+        meansq_x // max(meansq_e, 1),
+    )
 
 
-def _make_adpcm_udf():
-    """Built lazily (DDL return types parse against the active session —
-    the companding factory pattern); one decode per row via the
-    nondeterministic pin."""
-    if _UDF_CACHE:
-        return _UDF_CACHE[0]
-
-    @F.arrow_udf(_ADPCM_T)
-    def _adpcm_udf(raw: pa.Array, codec: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
-
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None or len(x) == 0:
-                out.append(None)
-                continue
-            packed, rt, n_blocks = _transcode_one(x.astype(np.int32))
-            xi = x.astype(np.int64)
-            err = np.abs(xi - rt.astype(np.int64))
-            meansq_x = int((xi**2).sum() // len(x))
-            meansq_e = int((err**2).sum() // len(x))
-            out.append(
-                {
-                    "n_samples": int(len(x)),
-                    "n_blocks": int(n_blocks),
-                    "n_code_bytes": len(packed),
-                    "crc_code": int(zlib.crc32(packed)),
-                    "crc_rt": int(zlib.crc32(rt.astype("<i2").tobytes())),
-                    "max_abs_err": int(err.max()),
-                    "meansq_x": meansq_x,
-                    # integer SNR (power ratio; the snr_screen no-dB rule)
-                    "snr_q": meansq_x // max(meansq_e, 1),
-                }
-            )
-        return pa.array(
-            out,
-            type=pa.struct(
-                [
-                    ("n_samples", pa.int64()),
-                    ("n_blocks", pa.int64()),
-                    ("n_code_bytes", pa.int64()),
-                    ("crc_code", pa.int64()),
-                    ("crc_rt", pa.int64()),
-                    ("max_abs_err", pa.int64()),
-                    ("meansq_x", pa.int64()),
-                    ("snr_q", pa.int64()),
-                ]
-            ),
-        )
-
-    # one decode per row (the audiodup/VAD nondeterministic pin)
-    _UDF_CACHE.append(_adpcm_udf.asNondeterministic())
-    return _UDF_CACHE[0]
+_adpcm_udf = clip_udf(_ADPCM_T, adpcm_of)
 
 
 def adpcm_transcode(
@@ -290,16 +263,6 @@ def adpcm_transcode(
     samples, ~3.95:1 vs s16), crc_rt proves the byte format decodes
     back. Undecodable clips drop (the screens' NULL rule). One Arrow
     stage, zero shuffles."""
-    st = _make_adpcm_udf()(F.col(bytes_col), F.col(codec_col)).alias("__a")
+    st = _adpcm_udf(F.col(bytes_col), F.col(codec_col)).alias("__a")
     ex = clips.select(F.col(id_col), st).where(F.col("__a").isNotNull())
-    return ex.select(
-        F.col(id_col),
-        F.col("__a.n_samples").alias("n_samples"),
-        F.col("__a.n_blocks").alias("n_blocks"),
-        F.col("__a.n_code_bytes").alias("n_code_bytes"),
-        F.col("__a.crc_code").alias("crc_code"),
-        F.col("__a.crc_rt").alias("crc_rt"),
-        F.col("__a.max_abs_err").alias("max_abs_err"),
-        F.col("__a.meansq_x").alias("meansq_x"),
-        F.col("__a.snr_q").alias("snr_q"),
-    )
+    return ex.select(F.col(id_col), "__a.*")

@@ -51,10 +51,11 @@ the keep-lowest-id convention downstream.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.audio import clip_udf
 
 FP_FRAME = 512          # samples per analysis frame
 FP_SHINGLE_W = 4        # frames per shingle
@@ -74,37 +75,6 @@ def band_coeffs(n_bands: int = FP_N_BANDS, seed: int = 9176) -> list[tuple[int, 
         x = (x * 1103515245 + 12345) % FP_MOD
         out.append((a, x))
     return out
-
-
-def _decode_s16(data: np.ndarray, s: int, e: int, codec: str) -> "np.ndarray | None":
-    """Row decode against the shared uint8 buffer -> int16 samples, or None.
-    Same codec registry and structural gates as the QC kernel
-    (functions/audio.audio_features_core); pcm_u8 maps to the int16 domain
-    as (x - 128) << 8 so one quantization rule covers all codecs."""
-    from ..functions.audio import CODECS
-
-    spec = CODECS.get(codec)
-    nb = e - s
-    if spec is None or nb <= 0:
-        return None
-    if spec.kind == "pcm_s16":
-        if nb % 2:
-            return None
-        return np.frombuffer(data[s:e].tobytes(), dtype="<i2")
-    if spec.kind == "pcm_u8":
-        return (data[s:e].astype(np.int16) - 128) << 8
-    if spec.kind == "container_s16":
-        if nb < 8 or data[s : s + 4].tobytes() != spec.magic:
-            return None
-        plen = int.from_bytes(data[s + 4 : s + 8].tobytes(), "little")
-        if plen != nb - 8 or plen % 2 or plen == 0:
-            return None
-        return np.frombuffer(data[s + 8 : e].tobytes(), dtype="<i2")
-    # kind == "python": registered real decoder (e.g. WAV RIFF walk)
-    pcm = spec.decode(bytes(data[s:e]))
-    if pcm is None or pcm.dtype != np.int16 or len(pcm) == 0:
-        return None
-    return pcm
 
 
 def fingerprint_samples(x: np.ndarray) -> "list[int] | None":
@@ -130,27 +100,7 @@ def fingerprint_samples(x: np.ndarray) -> "list[int] | None":
     return [int(((a * shr + c) % FP_MOD).min()) for a, c in band_coeffs()]
 
 
-@F.arrow_udf(T.ArrayType(T.LongType()))
-def _audio_fp_udf(raw: pa.Array, codec: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        out.append(None if x is None else fingerprint_samples(x))
-    return pa.array(out, type=pa.list_(pa.int64()))
-
-
-# The kernel IS deterministic; the flag exists purely to stop Catalyst from
-# duplicating the expensive decode: InferFiltersFromGenerate derives
-# `isnotnull(sig) AND size(sig) > 0` from the posexplode and pushes it below
-# the projection, re-evaluating the UDF once for the filter and once for the
-# output (observed: two ArrowEvalPython stages, decode cost 2x). Marking it
-# non-deterministic pins evaluation to exactly one stage; retries stay safe
-# because the function is in fact a pure function of its inputs.
-_audio_fp_udf = _audio_fp_udf.asNondeterministic()
+_audio_fp_udf = clip_udf(T.ArrayType(T.LongType()), fingerprint_samples)
 
 
 def audio_fingerprint(

@@ -26,11 +26,11 @@ from __future__ import annotations
 
 import zlib
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..functions.audio import clip_udf
 from .resample import apply_gain, loudness_gain, resample_linear
 
 _PREP_T = T.StructType(
@@ -46,49 +46,14 @@ _PREP_T = T.StructType(
 
 
 def _make_prep_udf(target_sr: int, target_rms: int, max_gain_q15: int):
-    @F.arrow_udf(_PREP_T)
-    def _prep_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
+    def prep_of(x, sr: int) -> tuple:
+        y = resample_linear(x, sr, target_sr)
+        rms_in, gain = loudness_gain(y, target_rms, max_gain_q15)
+        z = apply_gain(y, gain)
+        rms_out, _ = loudness_gain(z, target_rms, max_gain_q15)
+        return (len(x), len(z), rms_in, rms_out, gain, zlib.crc32(z.astype("<i2").tobytes()))
 
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        srs = sr.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None or not srs[i] or srs[i] <= 0:
-                out.append(None)
-                continue
-            y = resample_linear(x, int(srs[i]), target_sr)
-            rms_in, gain = loudness_gain(y, target_rms, max_gain_q15)
-            z = apply_gain(y, gain)
-            rms_out, _ = loudness_gain(z, target_rms, max_gain_q15)
-            out.append(
-                {
-                    "n_in": len(x),
-                    "n_out": len(z),
-                    "rms_in": rms_in,
-                    "rms_out": rms_out,
-                    "gain_q15": gain,
-                    "crc_out": zlib.crc32(z.astype("<i2").tobytes()),
-                }
-            )
-        return pa.array(
-            out,
-            type=pa.struct(
-                [
-                    ("n_in", pa.int64()),
-                    ("n_out", pa.int64()),
-                    ("rms_in", pa.int64()),
-                    ("rms_out", pa.int64()),
-                    ("gain_q15", pa.int64()),
-                    ("crc_out", pa.int64()),
-                ]
-            ),
-        )
-
-    return _prep_udf.asNondeterministic()  # the decode-once pin
+    return clip_udf(_PREP_T, prep_of, rate=True)
 
 
 def prep_audio(
@@ -120,14 +85,5 @@ def prep_audio(
     return (
         clips.select(F.col(id_col), F.col(sr_col), st)
         .where(F.col("__p").isNotNull())
-        .select(
-            F.col(id_col),
-            F.col(sr_col).cast("long").alias("sr_src"),
-            F.col("__p.n_in").alias("n_in"),
-            F.col("__p.n_out").alias("n_out"),
-            F.col("__p.rms_in").alias("rms_in"),
-            F.col("__p.rms_out").alias("rms_out"),
-            F.col("__p.gain_q15").alias("gain_q15"),
-            F.col("__p.crc_out").alias("crc_out"),
-        )
+        .select(F.col(id_col), F.col(sr_col).cast("long").alias("sr_src"), "__p.*")
     )

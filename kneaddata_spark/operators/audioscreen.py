@@ -32,12 +32,12 @@ Zero shuffles; nondeterministic-pinned (the CollapseProject lesson).
 
 from __future__ import annotations
 
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 from .bandwidth import band_of
 from .click import click_of
 from .dropout import dropout_of
@@ -76,88 +76,43 @@ _SCREEN_T = T.StructType(
 )
 
 
-@F.arrow_udf(_SCREEN_T)
-def _screen_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        s = int(srs[i])
-        segs = segment_samples(x, s)
-        snr_st, _, _, _, _, snr_ratio = snr_of(x, s)
-        p_st, _, f0, per = pitch_of(x, s)
-        h_st, _, dc, _, hum_p, hum_hz = hum_of(x, s)
-        b_st, _, _, est = band_of(x, s)
-        r_st, _, _, _, _, rt60 = reverb_of(x, s)
-        d_st, _, _, _, _, dr = dr_of(x, s)
-        g_st, _, _, _, _, _, _, _, dp_p, st_p = dropout_of(x, s)
-        c_st, _, _, _, _, _, cpm = click_of(x, s)
-        out.append(
-            {
-                "n_segments": len(segs),
-                "speech_frames": sum(e - b for b, e in segs),
-                "snr_status": snr_st,
-                "snr_ratio": snr_ratio,
-                "pitch_status": p_st,
-                "f0_centi_hz": f0,
-                "periodicity_permille": per,
-                "hum_status": h_st,
-                "dc_offset": dc,
-                "hum_permille": hum_p,
-                "hum_hz": hum_hz,
-                "bw_status": b_st,
-                "est_nyquist_hz": est,
-                "rev_status": r_st,
-                "rt60_ms": rt60,
-                "dr_status": d_st,
-                "dr_ratio_permille": dr,
-                "drop_status": g_st,
-                "dropout_permille": dp_p,
-                "stuck_permille": st_p,
-                "click_status": c_st,
-                "clicks_per_min": cpm,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("n_segments", pa.int64()),
-                ("speech_frames", pa.int64()),
-                ("snr_status", pa.string()),
-                ("snr_ratio", pa.int64()),
-                ("pitch_status", pa.string()),
-                ("f0_centi_hz", pa.int64()),
-                ("periodicity_permille", pa.int64()),
-                ("hum_status", pa.string()),
-                ("dc_offset", pa.int64()),
-                ("hum_permille", pa.int64()),
-                ("hum_hz", pa.int64()),
-                ("bw_status", pa.string()),
-                ("est_nyquist_hz", pa.int64()),
-                ("rev_status", pa.string()),
-                ("rt60_ms", pa.int64()),
-                ("dr_status", pa.string()),
-                ("dr_ratio_permille", pa.int64()),
-                ("drop_status", pa.string()),
-                ("dropout_permille", pa.int64()),
-                ("stuck_permille", pa.int64()),
-                ("click_status", pa.string()),
-                ("clicks_per_min", pa.int64()),
-            ]
-        ),
+def screens_of(x, sr: int) -> tuple:
+    segs = segment_samples(x, sr)
+    snr_st, _, _, _, _, snr_ratio = snr_of(x, sr)
+    p_st, _, f0, per = pitch_of(x, sr)
+    h_st, _, dc, _, hum_p, hum_hz = hum_of(x, sr)
+    b_st, _, _, est = band_of(x, sr)
+    r_st, _, _, _, _, rt60 = reverb_of(x, sr)
+    d_st, _, _, _, _, dr = dr_of(x, sr)
+    g_st, _, _, _, _, _, _, _, dp_p, st_p = dropout_of(x, sr)
+    c_st, _, _, _, _, _, cpm = click_of(x, sr)
+    return (
+        len(segs),
+        sum(e - b for b, e in segs),
+        snr_st,
+        snr_ratio,
+        p_st,
+        f0,
+        per,
+        h_st,
+        dc,
+        hum_p,
+        hum_hz,
+        b_st,
+        est,
+        r_st,
+        rt60,
+        d_st,
+        dr,
+        g_st,
+        dp_p,
+        st_p,
+        c_st,
+        cpm,
     )
 
 
-_screen_udf = _screen_udf.asNondeterministic()
+_screen_udf = clip_udf(_SCREEN_T, screens_of, rate=True)
 
 
 def screen_audio(
@@ -229,28 +184,7 @@ def screen_audio(
     return e.select(
         "clip_id",
         *passthrough,
-        F.col("a.n_segments").alias("n_segments"),
-        F.col("a.speech_frames").alias("speech_frames"),
-        F.col("a.snr_status").alias("snr_status"),
-        F.col("a.snr_ratio").alias("snr_ratio"),
-        F.col("a.pitch_status").alias("pitch_status"),
-        F.col("a.f0_centi_hz").alias("f0_centi_hz"),
-        F.col("a.periodicity_permille").alias("periodicity_permille"),
-        F.col("a.hum_status").alias("hum_status"),
-        F.col("a.dc_offset").alias("dc_offset"),
-        F.col("a.hum_permille").alias("hum_permille"),
-        F.col("a.hum_hz").alias("hum_hz"),
-        F.col("a.bw_status").alias("bw_status"),
-        F.col("a.est_nyquist_hz").alias("est_nyquist_hz"),
-        F.col("a.rev_status").alias("rev_status"),
-        F.col("a.rt60_ms").alias("rt60_ms"),
-        F.col("a.dr_status").alias("dr_status"),
-        F.col("a.dr_ratio_permille").alias("dr_ratio_permille"),
-        F.col("a.drop_status").alias("drop_status"),
-        F.col("a.dropout_permille").alias("dropout_permille"),
-        F.col("a.stuck_permille").alias("stuck_permille"),
-        F.col("a.click_status").alias("click_status"),
-        F.col("a.clicks_per_min").alias("clicks_per_min"),
+        "a.*",
         snr_keep.alias("snr_keep"),
         voiced.alias("voiced"),
         (voiced & in_band).alias("speechlike"),

@@ -53,12 +53,12 @@ zero shuffles, bytes never cross Python->JVM.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 __all__ = ["band_of", "bandwidth_screen"]
 
@@ -113,48 +113,12 @@ _BW_T = T.StructType(
 )
 
 
-@F.arrow_udf(_BW_T)
-def _bw_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n, octs, est = band_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_samples": n,
-                "oct1_permille": octs[0],
-                "oct2_permille": octs[1],
-                "oct3_permille": octs[2],
-                "est_nyquist_hz": est,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_samples", pa.int64()),
-                ("oct1_permille", pa.int64()),
-                ("oct2_permille", pa.int64()),
-                ("oct3_permille", pa.int64()),
-                ("est_nyquist_hz", pa.int64()),
-            ]
-        ),
-    )
+def _band_row(x: np.ndarray, sr: int) -> tuple:
+    st, n, octs, est = band_of(x, sr)
+    return (st, n, *octs, est)
 
 
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_bw_udf = _bw_udf.asNondeterministic()
+_bw_udf = clip_udf(_BW_T, _band_row, rate=True)
 
 
 def bandwidth_screen(
@@ -180,12 +144,7 @@ def bandwidth_screen(
     return e.select(
         "clip_id",
         "sr_hz",
-        F.col("b.status").alias("status"),
-        F.col("b.n_samples").alias("n_samples"),
-        F.col("b.oct1_permille").alias("oct1_permille"),
-        F.col("b.oct2_permille").alias("oct2_permille"),
-        F.col("b.oct3_permille").alias("oct3_permille"),
-        F.col("b.est_nyquist_hz").alias("est_nyquist_hz"),
+        "b.*",
         narrow.alias("narrowband"),
         keep.alias("keep"),
     )

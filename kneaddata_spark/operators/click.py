@@ -31,12 +31,12 @@ zero shuffles, bytes never cross Python->JVM.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 __all__ = ["click_of", "click_screen"]
 
@@ -78,40 +78,23 @@ def click_of(x: np.ndarray, sr: int):
     )
 
 
-_FIELDS = [
-    ("status", pa.string(), T.StringType()),
-    ("n_samples", pa.int64(), T.LongType()),
-    ("d2_mad", pa.int64(), T.LongType()),
-    ("n_click_samples", pa.int64(), T.LongType()),
-    ("n_click_events", pa.int64(), T.LongType()),
-    ("max_abs_d2", pa.int64(), T.LongType()),
-    ("clicks_per_min", pa.int64(), T.LongType()),
-]
-_CLICK_T = T.StructType([T.StructField(n, t) for n, _, t in _FIELDS])
-_CLICK_PA = pa.struct([(n, t) for n, t, _ in _FIELDS])
-_NAMES = [n for n, _, _ in _FIELDS]
+_CLICK_T = T.StructType(
+    [T.StructField("status", T.StringType())]
+    + [
+        T.StructField(n, T.LongType())
+        for n in (
+            "n_samples",
+            "d2_mad",
+            "n_click_samples",
+            "n_click_events",
+            "max_abs_d2",
+            "clicks_per_min",
+        )
+    ]
+)
 
 
-@F.arrow_udf(_CLICK_T)
-def _click_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        out.append(dict(zip(_NAMES, click_of(x, int(srs[i])))))
-    return pa.array(out, type=_CLICK_PA)
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_click_udf = _click_udf.asNondeterministic()
+_click_udf = clip_udf(_CLICK_T, click_of, rate=True)
 
 
 def click_screen(
@@ -135,7 +118,7 @@ def click_screen(
     keep = (F.col("c.status") == "ok") & ~det
     return e.select(
         "clip_id",
-        *[F.col(f"c.{n}").alias(n) for n in _NAMES],
+        "c.*",
         det.alias("click_detected"),
         keep.alias("keep"),
     )

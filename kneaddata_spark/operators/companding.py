@@ -23,9 +23,11 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions.audio import clip_udf
 
 MU_BIAS = 0x84  # 132
 MU_CLIP = 32635
@@ -57,68 +59,46 @@ def mulaw_decode(mu: np.ndarray) -> np.ndarray:
     return np.where(sign != 0, -mag, mag).astype(np.int16)
 
 
-_G711_T = (
-    "array<struct<law:string,n_samples:bigint,crc_code:bigint,crc_rt:bigint,"
-    "max_abs_err:bigint,meansq_x:bigint,snr_q:bigint>>"
+_G711_T = T.ArrayType(
+    T.StructType(
+        [T.StructField("law", T.StringType())]
+        + [
+            T.StructField(n, T.LongType())
+            for n in ("n_samples", "crc_code", "crc_rt", "max_abs_err", "meansq_x", "snr_q")
+        ]
+    )
 )
 
+
 def _make_g711_udf(laws: tuple):
-    @F.arrow_udf(_G711_T)
-    def _g_udf(raw: pa.Array, codec: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
+    kernels = {"mulaw": (mulaw_encode, mulaw_decode), "alaw": (alaw_encode, alaw_decode)}
 
-        kernels = {"mulaw": (mulaw_encode, mulaw_decode), "alaw": (alaw_encode, alaw_decode)}
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None or len(x) == 0:
-                out.append(None)
-                continue
-            xi = x.astype(np.int64)
-            meansq_x = int((xi**2).sum() // len(x))
-            row = []
-            for law in laws:
-                enc, dec = kernels[law]
-                code = enc(x)
-                rt = dec(code)
-                err = np.abs(xi - rt.astype(np.int64))
-                meansq_e = int((err**2).sum() // len(x))
-                row.append(
-                    {
-                        "law": law,
-                        "n_samples": int(len(x)),
-                        "crc_code": int(zlib.crc32(code.tobytes())),
-                        "crc_rt": int(zlib.crc32(rt.astype("<i2").tobytes())),
-                        "max_abs_err": int(err.max()),
-                        "meansq_x": meansq_x,
-                        # integer companding SNR (power ratio, snr_screen
-                        # convention: 100 ~ 20 dB)
-                        "snr_q": meansq_x // max(meansq_e, 1),
-                    }
+    def g711_of(x: np.ndarray) -> list:
+        xi = x.astype(np.int64)
+        meansq_x = int((xi**2).sum() // len(x))
+        row = []
+        for law in laws:
+            enc, dec = kernels[law]
+            code = enc(x)
+            rt = dec(code)
+            err = np.abs(xi - rt.astype(np.int64))
+            meansq_e = int((err**2).sum() // len(x))
+            row.append(
+                (
+                    law,
+                    int(len(x)),
+                    int(zlib.crc32(code.tobytes())),
+                    int(zlib.crc32(rt.astype("<i2").tobytes())),
+                    int(err.max()),
+                    meansq_x,
+                    # integer companding SNR (power ratio, snr_screen
+                    # convention: 100 ~ 20 dB)
+                    meansq_x // max(meansq_e, 1),
                 )
-            out.append(row)
-        return pa.array(
-            out,
-            type=pa.list_(
-                pa.struct(
-                    [
-                        ("law", pa.string()),
-                        ("n_samples", pa.int64()),
-                        ("crc_code", pa.int64()),
-                        ("crc_rt", pa.int64()),
-                        ("max_abs_err", pa.int64()),
-                        ("meansq_x", pa.int64()),
-                        ("snr_q", pa.int64()),
-                    ]
-                )
-            ),
-        )
+            )
+        return row
 
-    # one decode per row (the audiodup/VAD nondeterministic pin)
-    return _g_udf.asNondeterministic()
+    return clip_udf(_G711_T, g711_of)
 
 
 def g711_transcode(
@@ -141,16 +121,7 @@ def g711_transcode(
         .where(F.col("__g").isNotNull())
         .select(F.col(id_col), F.explode("__g").alias("r"))
     )
-    return ex.select(
-        F.col(id_col),
-        F.col("r.law").alias("law"),
-        F.col("r.n_samples").alias("n_samples"),
-        F.col("r.crc_code").alias("crc_code"),
-        F.col("r.crc_rt").alias("crc_rt"),
-        F.col("r.max_abs_err").alias("max_abs_err"),
-        F.col("r.meansq_x").alias("meansq_x"),
-        F.col("r.snr_q").alias("snr_q"),
-    )
+    return ex.select(F.col(id_col), "r.*")
 
 
 def mulaw_transcode(

@@ -42,9 +42,11 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..functions.audio import clip_udf
 
 CLIP_S16 = 32736  # |x| >= this == |x/32768| >= rules.CLIP_SAMPLE_THRESH
 
@@ -83,67 +85,37 @@ def declip_samples(x: np.ndarray) -> tuple:
     return out.astype(np.int16), n_clipped, n_runs, 1
 
 
-_DECLIP_T = (
-    "struct<n_samples:bigint,n_clipped:bigint,n_runs:bigint,"
-    "repaired:int,residual_clip_permille:bigint,max_abs_change:bigint,"
-    "crc_raw:bigint,crc_repaired:bigint>"
+_DECLIP_T = T.StructType(
+    [
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("n_clipped", T.LongType()),
+        T.StructField("n_runs", T.LongType()),
+        T.StructField("repaired", T.IntegerType()),
+        T.StructField("residual_clip_permille", T.LongType()),
+        T.StructField("max_abs_change", T.LongType()),
+        T.StructField("crc_raw", T.LongType()),
+        T.StructField("crc_repaired", T.LongType()),
+    ]
 )
 
-_UDF_CACHE = []
+
+def declip_of(x: np.ndarray) -> tuple:
+    """int16 samples -> the _DECLIP_T witnesses of one repair."""
+    rep, n_clipped, n_runs, repaired = declip_samples(x)
+    ri = rep.astype(np.int64)
+    return (
+        int(len(x)),
+        int(n_clipped),
+        int(n_runs),
+        int(repaired),
+        int((np.abs(ri) >= CLIP_S16).sum()) * 1000 // len(x),
+        int(np.abs(ri - x.astype(np.int64)).max()),
+        int(zlib.crc32(x.astype("<i2").tobytes())),
+        int(zlib.crc32(rep.astype("<i2").tobytes())),
+    )
 
 
-def _make_declip_udf():
-    """Built lazily (DDL types parse against the active session — the
-    companding factory pattern)."""
-    if _UDF_CACHE:
-        return _UDF_CACHE[0]
-
-    @F.arrow_udf(_DECLIP_T)
-    def _declip_udf(raw: pa.Array, codec: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
-
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None or len(x) == 0:
-                out.append(None)
-                continue
-            rep, n_clipped, n_runs, repaired = declip_samples(x)
-            ri = rep.astype(np.int64)
-            residual = int((np.abs(ri) >= CLIP_S16).sum()) * 1000 // len(x)
-            out.append(
-                {
-                    "n_samples": int(len(x)),
-                    "n_clipped": int(n_clipped),
-                    "n_runs": int(n_runs),
-                    "repaired": int(repaired),
-                    "residual_clip_permille": residual,
-                    "max_abs_change": int(np.abs(ri - x.astype(np.int64)).max()),
-                    "crc_raw": int(zlib.crc32(x.astype("<i2").tobytes())),
-                    "crc_repaired": int(zlib.crc32(rep.astype("<i2").tobytes())),
-                }
-            )
-        return pa.array(
-            out,
-            type=pa.struct(
-                [
-                    ("n_samples", pa.int64()),
-                    ("n_clipped", pa.int64()),
-                    ("n_runs", pa.int64()),
-                    ("repaired", pa.int32()),
-                    ("residual_clip_permille", pa.int64()),
-                    ("max_abs_change", pa.int64()),
-                    ("crc_raw", pa.int64()),
-                    ("crc_repaired", pa.int64()),
-                ]
-            ),
-        )
-
-    _UDF_CACHE.append(_declip_udf.asNondeterministic())
-    return _UDF_CACHE[0]
+_declip_udf = clip_udf(_DECLIP_T, declip_of)
 
 
 def declip_stats(
@@ -157,21 +129,6 @@ def declip_stats(
     one row per decodable clip. Clean clips report n_clipped = 0 with
     crc_repaired == crc_raw; repaired clips report residual permille 0
     unless unrecoverable. One Arrow stage, zero shuffles."""
-    st = _make_declip_udf()(F.col(bytes_col), F.col(codec_col)).alias("__d")
+    st = _declip_udf(F.col(bytes_col), F.col(codec_col)).alias("__d")
     ex = clips.select(F.col(id_col), st).where(F.col("__d").isNotNull())
-    return ex.select(
-        F.col(id_col),
-        *[
-            F.col(f"__d.{f}").alias(f)
-            for f in (
-                "n_samples",
-                "n_clipped",
-                "n_runs",
-                "repaired",
-                "residual_clip_permille",
-                "max_abs_change",
-                "crc_raw",
-                "crc_repaired",
-            )
-        ],
-    )
+    return ex.select(F.col(id_col), "__d.*")

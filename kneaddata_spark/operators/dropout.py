@@ -33,12 +33,12 @@ zero shuffles, bytes never cross Python->JVM.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 __all__ = ["dropout_of", "dropout_screen"]
 
@@ -85,43 +85,26 @@ def dropout_of(x: np.ndarray, sr: int):
     )
 
 
-_FIELDS = [
-    ("status", pa.string(), T.StringType()),
-    ("n_samples", pa.int64(), T.LongType()),
-    ("active_n", pa.int64(), T.LongType()),
-    ("n_dropouts", pa.int64(), T.LongType()),
-    ("dropout_samples", pa.int64(), T.LongType()),
-    ("max_dropout_run", pa.int64(), T.LongType()),
-    ("n_stuck", pa.int64(), T.LongType()),
-    ("stuck_samples", pa.int64(), T.LongType()),
-    ("dropout_permille", pa.int64(), T.LongType()),
-    ("stuck_permille", pa.int64(), T.LongType()),
-]
-_DROP_T = T.StructType([T.StructField(n, t) for n, _, t in _FIELDS])
-_DROP_PA = pa.struct([(n, t) for n, t, _ in _FIELDS])
-_NAMES = [n for n, _, _ in _FIELDS]
+_DROP_T = T.StructType(
+    [T.StructField("status", T.StringType())]
+    + [
+        T.StructField(n, T.LongType())
+        for n in (
+            "n_samples",
+            "active_n",
+            "n_dropouts",
+            "dropout_samples",
+            "max_dropout_run",
+            "n_stuck",
+            "stuck_samples",
+            "dropout_permille",
+            "stuck_permille",
+        )
+    ]
+)
 
 
-@F.arrow_udf(_DROP_T)
-def _dropout_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        out.append(dict(zip(_NAMES, dropout_of(x, int(srs[i])))))
-    return pa.array(out, type=_DROP_PA)
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_dropout_udf = _dropout_udf.asNondeterministic()
+_dropout_udf = clip_udf(_DROP_T, dropout_of, rate=True)
 
 
 def dropout_screen(
@@ -149,7 +132,7 @@ def dropout_screen(
     keep = (F.col("d.status") == "ok") & ~drop & ~stuck
     return e.select(
         "clip_id",
-        *[F.col(f"d.{n}").alias(n) for n in _NAMES],
+        "d.*",
         drop.alias("dropout_detected"),
         stuck.alias("stuck_detected"),
         keep.alias("keep"),

@@ -41,12 +41,12 @@ zero shuffles, bytes never cross Python->JVM.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 __all__ = ["dr_of", "dynrange_screen"]
 
@@ -86,48 +86,7 @@ _DR_T = T.StructType(
 )
 
 
-@F.arrow_udf(_DR_T)
-def _dr_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n_f, n_a, p10, p95, ratio = dr_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_frames": n_f,
-                "n_active": n_a,
-                "p10_energy": p10,
-                "p95_energy": p95,
-                "dr_ratio_permille": ratio,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_frames", pa.int64()),
-                ("n_active", pa.int64()),
-                ("p10_energy", pa.int64()),
-                ("p95_energy", pa.int64()),
-                ("dr_ratio_permille", pa.int64()),
-            ]
-        ),
-    )
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_dr_udf = _dr_udf.asNondeterministic()
+_dr_udf = clip_udf(_DR_T, dr_of, rate=True)
 
 
 def dynrange_screen(
@@ -150,12 +109,7 @@ def dynrange_screen(
     )
     return e.select(
         "clip_id",
-        F.col("d.status").alias("status"),
-        F.col("d.n_frames").alias("n_frames"),
-        F.col("d.n_active").alias("n_active"),
-        F.col("d.p10_energy").alias("p10_energy"),
-        F.col("d.p95_energy").alias("p95_energy"),
-        F.col("d.dr_ratio_permille").alias("dr_ratio_permille"),
+        "d.*",
         comp.alias("compressed"),
         (~comp).alias("keep"),
     )

@@ -39,12 +39,12 @@ keeps the pytest replica bit-identical.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 __all__ = ["fbank_stats", "fbank_frames", "logmel_of", "mel_filterbank"]
 
@@ -121,72 +121,25 @@ _FB_T = T.StructType(
     ]
 )
 
-_PA_T = pa.struct(
-    [
-        (
-            "stats",
-            pa.struct(
-                [
-                    ("n_frames", pa.int64()),
-                    ("n_mels", pa.int64()),
-                    ("dominant_band", pa.int64()),
-                    ("logmel_mean_milli", pa.int64()),
-                    ("logmel_std_milli", pa.int64()),
-                ]
-            ),
-        ),
-        ("frames", pa.list_(pa.struct([("frame_idx", pa.int32()), ("mel", pa.list_(pa.float32()))]))),
-    ]
-)
-
 
 def _make_fbank_udf(with_frames: bool):
-    @F.arrow_udf(_FB_T)
-    def _udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
+    def fbank_of(x: np.ndarray, sr: int) -> tuple:
+        lm = logmel_of(x, sr)
+        nf = int(lm.shape[0])
+        if nf:
+            dom = int(np.argmax(lm.mean(axis=0)))
+            mean = float(lm.mean())
+            std = float(lm.std())
+        else:
+            dom, mean, std = 0, 0.0, 0.0
+        frames = (
+            [(int(j), lm[j].astype(np.float32).tolist()) for j in range(nf)]
+            if with_frames
+            else []
+        )
+        return (nf, int(rules.FBANK_N_MELS), dom, _milli(mean), _milli(std)), frames
 
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        srs = sr.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None or not srs[i] or srs[i] <= 0:
-                out.append(None)
-                continue
-            lm = logmel_of(x, int(srs[i]))
-            nf = int(lm.shape[0])
-            if nf:
-                dom = int(np.argmax(lm.mean(axis=0)))
-                mean = float(lm.mean())
-                std = float(lm.std())
-            else:
-                dom, mean, std = 0, 0.0, 0.0
-            frames = (
-                [
-                    {"frame_idx": int(j), "mel": lm[j].astype(np.float32).tolist()}
-                    for j in range(nf)
-                ]
-                if with_frames
-                else []
-            )
-            out.append(
-                {
-                    "stats": {
-                        "n_frames": nf,
-                        "n_mels": int(rules.FBANK_N_MELS),
-                        "dominant_band": dom,
-                        "logmel_mean_milli": _milli(mean),
-                        "logmel_std_milli": _milli(std),
-                    },
-                    "frames": frames,
-                }
-            )
-        return pa.array(out, type=_PA_T)
-
-    # one decode per row (the VAD/resample CollapseProject pin)
-    return _udf.asNondeterministic()
+    return clip_udf(_FB_T, fbank_of, rate=True)
 
 
 _STATS_UDF = _make_fbank_udf(with_frames=False)
@@ -208,14 +161,7 @@ def fbank_stats(
         F.col(id_col).alias("clip_id"),
         _STATS_UDF(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("f"),
     ).where(F.col("f").isNotNull())
-    return e.select(
-        "clip_id",
-        F.col("f.stats.n_frames").alias("n_frames"),
-        F.col("f.stats.n_mels").alias("n_mels"),
-        F.col("f.stats.dominant_band").alias("dominant_band"),
-        F.col("f.stats.logmel_mean_milli").alias("logmel_mean_milli"),
-        F.col("f.stats.logmel_std_milli").alias("logmel_std_milli"),
-    )
+    return e.select("clip_id", "f.stats.*")
 
 
 def fbank_frames(

@@ -28,122 +28,75 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-_FLAC_T = (
-    "struct<n_samples:bigint, raw_bytes:bigint, flac_bytes:bigint, "
-    "ratio_permille:bigint, crc_pcm:bigint, crc_rt:bigint, "
-    "roundtrip_exact:boolean, n_frames:bigint>"
+from ..functions.audio import clip_udf
+from ..functions.flaccodec import decode_flac, encode_flac
+
+_FLAC_T = T.StructType(
+    [
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("raw_bytes", T.LongType()),
+        T.StructField("flac_bytes", T.LongType()),
+        T.StructField("ratio_permille", T.LongType()),
+        T.StructField("crc_pcm", T.LongType()),
+        T.StructField("crc_rt", T.LongType()),
+        T.StructField("roundtrip_exact", T.BooleanType()),
+        T.StructField("n_frames", T.LongType()),
+    ]
 )
 
 
 def _make_flac_udf(block_size: int):
-    @F.arrow_udf(_FLAC_T)
-    def _f_udf(raw: pa.Array, codec: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from ..functions.flaccodec import decode_flac, encode_flac
-        from .audiodup import _decode_s16
-
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None or len(x) == 0:
-                out.append(None)
-                continue
-            x = x.astype(np.int16, copy=False)
-            enc = encode_flac(x, 16000, block_size=block_size)
-            rt = decode_flac(enc)
-            exact = rt is not None and np.array_equal(rt, x)
-            crc_pcm = int(zlib.crc32(x.astype("<i2").tobytes()))
-            out.append(
-                {
-                    "n_samples": int(len(x)),
-                    "raw_bytes": int(2 * len(x)),
-                    "flac_bytes": int(len(enc)),
-                    # integer permille (the shared-threshold convention:
-                    # Spark/DuckDB integer div agree, float round doesn't)
-                    "ratio_permille": int(len(enc) * 1000 // (2 * len(x))),
-                    "crc_pcm": crc_pcm,
-                    "crc_rt": (
-                        int(zlib.crc32(rt.astype("<i2").tobytes()))
-                        if rt is not None
-                        else -1
-                    ),
-                    "roundtrip_exact": bool(exact),
-                    "n_frames": int((len(x) + block_size - 1) // block_size),
-                }
-            )
-        return pa.array(
-            out,
-            type=pa.struct(
-                [
-                    ("n_samples", pa.int64()),
-                    ("raw_bytes", pa.int64()),
-                    ("flac_bytes", pa.int64()),
-                    ("ratio_permille", pa.int64()),
-                    ("crc_pcm", pa.int64()),
-                    ("crc_rt", pa.int64()),
-                    ("roundtrip_exact", pa.bool_()),
-                    ("n_frames", pa.int64()),
-                ]
-            ),
+    def flac_of(x: np.ndarray) -> tuple:
+        x = x.astype(np.int16, copy=False)
+        enc = encode_flac(x, 16000, block_size=block_size)
+        rt = decode_flac(enc)
+        return (
+            int(len(x)),
+            int(2 * len(x)),
+            int(len(enc)),
+            # integer permille (the shared-threshold convention:
+            # Spark/DuckDB integer div agree, float round doesn't)
+            int(len(enc) * 1000 // (2 * len(x))),
+            int(zlib.crc32(x.astype("<i2").tobytes())),
+            int(zlib.crc32(rt.astype("<i2").tobytes())) if rt is not None else -1,
+            bool(rt is not None and np.array_equal(rt, x)),
+            int((len(x) + block_size - 1) // block_size),
         )
 
-    # one decode+encode per row (the audiodup/VAD nondeterministic pin so
-    # Catalyst cannot duplicate the Arrow stage)
-    return _f_udf.asNondeterministic()
+    return clip_udf(_FLAC_T, flac_of)
 
 
-_RE_T = "struct<bytes:binary, n_samples:bigint, flac_bytes:bigint, roundtrip_exact:boolean>"
+_RE_T = T.StructType(
+    [
+        T.StructField("bytes", T.BinaryType()),
+        T.StructField("n_samples", T.LongType()),
+        T.StructField("flac_bytes", T.LongType()),
+        T.StructField("roundtrip_exact", T.BooleanType()),
+    ]
+)
 
 
 def _make_reencode_udf(block_size: int):
-    @F.arrow_udf(_RE_T)
-    def _r_udf(raw: pa.Array, codec: pa.Array, s: pa.Array, e: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from ..functions.flaccodec import decode_flac, encode_flac
-        from .audiodup import _decode_s16
-
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        ss = s.to_pylist()
-        es = e.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            lo = int(ss[i] or 0)
-            hi = int(es[i]) if es[i] is not None else (len(x) if x is not None else 0)
-            if x is None or hi <= lo or hi > len(x):
-                out.append(None)
-                continue
-            seg = x[lo:hi].astype(np.int16, copy=False)
-            enc = encode_flac(seg, 16000, block_size=block_size)
-            rt = decode_flac(enc)
-            out.append(
-                {
-                    "bytes": enc,
-                    "n_samples": int(len(seg)),
-                    "flac_bytes": int(len(enc)),
-                    "roundtrip_exact": bool(rt is not None and np.array_equal(rt, seg)),
-                }
-            )
-        return pa.array(
-            out,
-            type=pa.struct(
-                [
-                    ("bytes", pa.binary()),
-                    ("n_samples", pa.int64()),
-                    ("flac_bytes", pa.int64()),
-                    ("roundtrip_exact", pa.bool_()),
-                ]
-            ),
+    def reencode_of(x: np.ndarray, s, e) -> "tuple | None":
+        lo = int(s or 0)
+        hi = int(e) if e is not None else len(x)
+        if hi <= lo or hi > len(x):
+            return None
+        seg = x[lo:hi].astype(np.int16, copy=False)
+        enc = encode_flac(seg, 16000, block_size=block_size)
+        rt = decode_flac(enc)
+        return (
+            enc,
+            int(len(seg)),
+            int(len(enc)),
+            bool(rt is not None and np.array_equal(rt, seg)),
         )
 
-    return _r_udf.asNondeterministic()
+    return clip_udf(_RE_T, reencode_of)
 
 
 def reencode_trimmed(
@@ -203,14 +156,4 @@ def flac_archive(
         F.col(bytes_col), F.col(codec_col)
     ).alias("__f")
     ex = clips.select(F.col(id_col), st).where(F.col("__f").isNotNull())
-    return ex.select(
-        F.col(id_col),
-        F.col("__f.n_samples").alias("n_samples"),
-        F.col("__f.raw_bytes").alias("raw_bytes"),
-        F.col("__f.flac_bytes").alias("flac_bytes"),
-        F.col("__f.ratio_permille").alias("ratio_permille"),
-        F.col("__f.crc_pcm").alias("crc_pcm"),
-        F.col("__f.crc_rt").alias("crc_rt"),
-        F.col("__f.roundtrip_exact").alias("roundtrip_exact"),
-        F.col("__f.n_frames").alias("n_frames"),
-    )
+    return ex.select(F.col(id_col), "__f.*")

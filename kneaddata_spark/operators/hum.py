@@ -42,12 +42,12 @@ zero shuffles, bytes never cross Python->JVM.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 Q15 = 32767
 
@@ -118,50 +118,12 @@ _HUM_T = T.StructType(
 )
 
 
-@F.arrow_udf(_HUM_T)
-def _hum_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n, dc, per, hp, hz = hum_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_samples": n,
-                "dc_offset": dc,
-                "hum50_permille": per[0],
-                "hum60_permille": per[1],
-                "hum_permille": hp,
-                "hum_hz": hz,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_samples", pa.int64()),
-                ("dc_offset", pa.int64()),
-                ("hum50_permille", pa.int64()),
-                ("hum60_permille", pa.int64()),
-                ("hum_permille", pa.int64()),
-                ("hum_hz", pa.int64()),
-            ]
-        ),
-    )
+def _hum_row(x: np.ndarray, sr: int) -> tuple:
+    st, n, dc, per, hp, hz = hum_of(x, sr)
+    return (st, n, dc, *per, hp, hz)
 
 
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_hum_udf = _hum_udf.asNondeterministic()
+_hum_udf = clip_udf(_HUM_T, _hum_row, rate=True)
 
 
 def hum_screen(
@@ -187,13 +149,7 @@ def hum_screen(
     keep = (F.col("h.status") == "ok") & ~hum & ~dc
     return e.select(
         "clip_id",
-        F.col("h.status").alias("status"),
-        F.col("h.n_samples").alias("n_samples"),
-        F.col("h.dc_offset").alias("dc_offset"),
-        F.col("h.hum50_permille").alias("hum50_permille"),
-        F.col("h.hum60_permille").alias("hum60_permille"),
-        F.col("h.hum_permille").alias("hum_permille"),
-        F.col("h.hum_hz").alias("hum_hz"),
+        "h.*",
         hum.alias("hum_detected"),
         dc.alias("dc_detected"),
         keep.alias("keep"),

@@ -48,12 +48,12 @@ partitioning.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 
 def pitch_of(x: np.ndarray, sr: int):
@@ -111,44 +111,7 @@ _PITCH_T = T.StructType(
 )
 
 
-@F.arrow_udf(_PITCH_T)
-def _pitch_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        status, lag, f0, per = pitch_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": status,
-                "best_lag": lag,
-                "f0_centi_hz": f0,
-                "periodicity_permille": per,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("best_lag", pa.int64()),
-                ("f0_centi_hz", pa.int64()),
-                ("periodicity_permille", pa.int64()),
-            ]
-        ),
-    )
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_pitch_udf = _pitch_udf.asNondeterministic()
+_pitch_udf = clip_udf(_PITCH_T, pitch_of, rate=True)
 
 
 def pitch_screen(
@@ -175,10 +138,7 @@ def pitch_screen(
     )
     return e.select(
         "clip_id",
-        F.col("p.status").alias("status"),
-        F.col("p.best_lag").alias("best_lag"),
-        F.col("p.f0_centi_hz").alias("f0_centi_hz"),
-        F.col("p.periodicity_permille").alias("periodicity_permille"),
+        "p.*",
         voiced.alias("voiced"),
         (voiced & in_band).alias("speechlike"),
     )

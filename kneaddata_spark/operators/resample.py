@@ -39,10 +39,11 @@ from __future__ import annotations
 import zlib
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ..functions.audio import clip_udf
 
 
 def resample_linear(x: np.ndarray, sr_src: int, sr_dst: int) -> np.ndarray:
@@ -76,41 +77,13 @@ _RES_T = T.StructType(
 
 
 def _make_udf(target_sr: int):
-    @F.arrow_udf(_RES_T)
-    def _resample_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
+    def resample_of(x: np.ndarray, sr: int) -> tuple:
+        y = resample_linear(x, sr, target_sr)
+        # crc over the canonical little-endian stream: the consumer-side
+        # join key for the Python-side payload
+        return (len(x), len(y), zlib.crc32(y.astype("<i2").tobytes()))
 
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        srs = sr.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None or not srs[i] or srs[i] <= 0:
-                out.append(None)
-                continue
-            y = resample_linear(x, int(srs[i]), target_sr)
-            out.append(
-                {
-                    "n_in": len(x),
-                    "n_out": len(y),
-                    # crc over the canonical little-endian stream: the
-                    # consumer-side join key for the Python-side payload
-                    "crc_out": zlib.crc32(y.astype("<i2").tobytes()),
-                }
-            )
-        return pa.array(
-            out,
-            type=pa.struct(
-                [("n_in", pa.int64()), ("n_out", pa.int64()), ("crc_out", pa.int64())]
-            ),
-        )
-
-    # decode+resample must evaluate exactly once per row: without the pin,
-    # optimizer rules that duplicate deterministic projections re-run the
-    # Arrow stage (the audiodup/VAD lesson, plan-audit-enforced)
-    return _resample_udf.asNondeterministic()
+    return clip_udf(_RES_T, resample_of, rate=True)
 
 
 def resample_audio(
@@ -137,9 +110,7 @@ def resample_audio(
             F.col(id_col),
             F.col(sr_col).cast("long").alias("sr_src"),
             F.lit(int(target_sr)).cast("long").alias("sr_dst"),
-            F.col("__r.n_in").alias("n_in"),
-            F.col("__r.n_out").alias("n_out"),
-            F.col("__r.crc_out").alias("crc_out"),
+            "__r.*",
             (F.col(sr_col) == F.lit(int(target_sr))).cast("int").alias("passthrough"),
         )
     )
@@ -188,45 +159,13 @@ _LN_T = T.StructType(
 
 
 def _make_loudnorm_udf(target_rms: int, max_gain_q15: int):
-    @F.arrow_udf(_LN_T)
-    def _ln_udf(raw: pa.Array, codec: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
+    def loudnorm_of(x: np.ndarray) -> tuple:
+        rms_in, gain = loudness_gain(x, target_rms, max_gain_q15)
+        y = apply_gain(x, gain)
+        rms_out, _ = loudness_gain(y, target_rms, max_gain_q15)
+        return (len(x), rms_in, rms_out, gain, zlib.crc32(y.astype("<i2").tobytes()))
 
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None:
-                out.append(None)
-                continue
-            rms_in, gain = loudness_gain(x, target_rms, max_gain_q15)
-            y = apply_gain(x, gain)
-            rms_out, _ = loudness_gain(y, target_rms, max_gain_q15)
-            out.append(
-                {
-                    "n": len(x),
-                    "rms_in": rms_in,
-                    "rms_out": rms_out,
-                    "gain_q15": gain,
-                    "crc_out": zlib.crc32(y.astype("<i2").tobytes()),
-                }
-            )
-        return pa.array(
-            out,
-            type=pa.struct(
-                [
-                    ("n", pa.int64()),
-                    ("rms_in", pa.int64()),
-                    ("rms_out", pa.int64()),
-                    ("gain_q15", pa.int64()),
-                    ("crc_out", pa.int64()),
-                ]
-            ),
-        )
-
-    return _ln_udf.asNondeterministic()  # the decode-once pin (VAD lesson)
+    return clip_udf(_LN_T, loudnorm_of)
 
 
 def loudness_normalize(
@@ -248,14 +187,7 @@ def loudness_normalize(
     return (
         clips.select(F.col(id_col), st)
         .where(F.col("__l").isNotNull())
-        .select(
-            F.col(id_col),
-            F.col("__l.n").alias("n"),
-            F.col("__l.rms_in").alias("rms_in"),
-            F.col("__l.rms_out").alias("rms_out"),
-            F.col("__l.gain_q15").alias("gain_q15"),
-            F.col("__l.crc_out").alias("crc_out"),
-        )
+        .select(F.col(id_col), "__l.*")
     )
 
 
@@ -281,49 +213,16 @@ _SP_T = T.ArrayType(
 
 
 def _make_speed_udf(rates: tuple):
-    @F.arrow_udf(_SP_T)
-    def _speed_udf(raw: pa.Array, codec: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
+    def speed_of(x: np.ndarray) -> list:
+        row = []
+        for num, den in rates:
+            # speed s = num/den plays n*den/num samples in the original
+            # duration: resample_linear(x, num, den) emits exactly that
+            y = x if num == den else resample_linear(x, int(num), int(den))
+            row.append((int(num), int(den), len(y), zlib.crc32(y.astype("<i2").tobytes())))
+        return row
 
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None:
-                out.append(None)
-                continue
-            row = []
-            for num, den in rates:
-                # speed s = num/den plays n*den/num samples in the original
-                # duration: resample_linear(x, num, den) emits exactly that
-                y = x if num == den else resample_linear(x, int(num), int(den))
-                row.append(
-                    {
-                        "num": int(num),
-                        "den": int(den),
-                        "n_out": len(y),
-                        "crc_out": zlib.crc32(y.astype("<i2").tobytes()),
-                    }
-                )
-            out.append(row)
-        return pa.array(
-            out,
-            type=pa.list_(
-                pa.struct(
-                    [
-                        ("num", pa.int64()),
-                        ("den", pa.int64()),
-                        ("n_out", pa.int64()),
-                        ("crc_out", pa.int64()),
-                    ]
-                )
-            ),
-        )
-
-    # one decode per row (the audiodup/VAD nondeterministic pin)
-    return _speed_udf.asNondeterministic()
+    return clip_udf(_SP_T, speed_of)
 
 
 def speed_perturb(
@@ -408,50 +307,17 @@ _NM_T = T.ArrayType(
 
 
 def _make_noise_udf(ratios: tuple):
-    @F.arrow_udf(_NM_T)
-    def _noise_udf(cid: pa.Array, raw: pa.Array, codec: pa.Array) -> pa.Array:
-        from ..functions.audio import _binary_bounds
-        from .audiodup import _decode_s16
+    def noise_of(x: np.ndarray, cid) -> list:
+        key = zlib.crc32(str(cid).encode())
+        xs = x.astype(np.int64)
+        meansq_x = int((xs * xs).sum()) // max(len(x), 1)
+        row = []
+        for ratio in ratios:
+            y, g = mix_noise(x, key, int(ratio))
+            row.append((int(ratio), g, meansq_x, zlib.crc32(y.astype("<i2").tobytes())))
+        return row
 
-        data, starts, ends = _binary_bounds(raw)
-        codecs = codec.to_pylist()
-        cids = cid.to_pylist()
-        out = []
-        for i in range(len(codecs)):
-            x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-            if x is None:
-                out.append(None)
-                continue
-            key = zlib.crc32(str(cids[i]).encode())
-            xs = x.astype(np.int64)
-            meansq_x = int((xs * xs).sum()) // max(len(x), 1)
-            row = []
-            for ratio in ratios:
-                y, g = mix_noise(x, key, int(ratio))
-                row.append(
-                    {
-                        "ratio": int(ratio),
-                        "gain_q15": g,
-                        "meansq_x": meansq_x,
-                        "crc_out": zlib.crc32(y.astype("<i2").tobytes()),
-                    }
-                )
-            out.append(row)
-        return pa.array(
-            out,
-            type=pa.list_(
-                pa.struct(
-                    [
-                        ("ratio", pa.int64()),
-                        ("gain_q15", pa.int64()),
-                        ("meansq_x", pa.int64()),
-                        ("crc_out", pa.int64()),
-                    ]
-                )
-            ),
-        )
-
-    return _noise_udf.asNondeterministic()
+    return clip_udf(_NM_T, noise_of)
 
 
 def noise_mix(
@@ -472,7 +338,7 @@ def noise_mix(
         if ratio <= 0:
             raise ValueError(f"ratios must be positive ({ratio})")
     st = _make_noise_udf(tuple(int(r) for r in ratios))(
-        F.col(id_col), F.col(bytes_col), F.col(codec_col)
+        F.col(bytes_col), F.col(codec_col), F.col(id_col)
     ).alias("__m")
     return (
         clips.select(F.col(id_col), st)

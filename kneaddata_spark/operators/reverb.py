@@ -42,12 +42,12 @@ zero shuffles, bytes never cross Python->JVM.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 __all__ = ["reverb_of", "reverb_screen"]
 
@@ -97,48 +97,7 @@ _REVERB_T = T.StructType(
 )
 
 
-@F.arrow_udf(_REVERB_T)
-def _reverb_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or len(x) == 0 or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, n_f, last, tf, t20, rt = reverb_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_frames": n_f,
-                "last_active_frame": last,
-                "tail_frames": tf,
-                "t20_frames": t20,
-                "rt60_ms": rt,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_frames", pa.int64()),
-                ("last_active_frame", pa.int64()),
-                ("tail_frames", pa.int64()),
-                ("t20_frames", pa.int64()),
-                ("rt60_ms", pa.int64()),
-            ]
-        ),
-    )
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_reverb_udf = _reverb_udf.asNondeterministic()
+_reverb_udf = clip_udf(_REVERB_T, reverb_of, rate=True)
 
 
 def reverb_screen(
@@ -161,12 +120,7 @@ def reverb_screen(
     )
     return e.select(
         "clip_id",
-        F.col("r.status").alias("status"),
-        F.col("r.n_frames").alias("n_frames"),
-        F.col("r.last_active_frame").alias("last_active_frame"),
-        F.col("r.tail_frames").alias("tail_frames"),
-        F.col("r.t20_frames").alias("t20_frames"),
-        F.col("r.rt60_ms").alias("rt60_ms"),
+        "r.*",
         rev.alias("reverb_detected"),
         (~rev).alias("keep"),
     )

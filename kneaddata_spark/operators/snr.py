@@ -32,12 +32,12 @@ REPORTED verdict (the stage_counts taxonomy) instead of a silent drop.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 
 def snr_of(x: np.ndarray, sr: int):
@@ -76,48 +76,7 @@ _SNR_T = T.StructType(
 )
 
 
-@F.arrow_udf(_SNR_T)
-def _snr_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-            continue
-        st, nsp, nnz, spm, nzm, ratio = snr_of(x, int(srs[i]))
-        out.append(
-            {
-                "status": st,
-                "n_speech_frames": nsp,
-                "n_noise_frames": nnz,
-                "speech_meansq": spm,
-                "noise_meansq": nzm,
-                "snr_ratio": ratio,
-            }
-        )
-    return pa.array(
-        out,
-        type=pa.struct(
-            [
-                ("status", pa.string()),
-                ("n_speech_frames", pa.int64()),
-                ("n_noise_frames", pa.int64()),
-                ("speech_meansq", pa.int64()),
-                ("noise_meansq", pa.int64()),
-                ("snr_ratio", pa.int64()),
-            ]
-        ),
-    )
-
-
-# one evaluation per row (the VAD/resample CollapseProject pin)
-_snr_udf = _snr_udf.asNondeterministic()
+_snr_udf = clip_udf(_SNR_T, snr_of, rate=True)
 
 
 def snr_screen(
@@ -142,11 +101,6 @@ def snr_screen(
     )
     return e.select(
         "clip_id",
-        F.col("s.status").alias("status"),
-        F.col("s.n_speech_frames").alias("n_speech_frames"),
-        F.col("s.n_noise_frames").alias("n_noise_frames"),
-        F.col("s.speech_meansq").alias("speech_meansq"),
-        F.col("s.noise_meansq").alias("noise_meansq"),
-        F.col("s.snr_ratio").alias("snr_ratio"),
+        "s.*",
         keep.alias("keep"),
     )

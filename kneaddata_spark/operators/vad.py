@@ -38,12 +38,12 @@ per read to the full alternation list.
 from __future__ import annotations
 
 import numpy as np
-import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from .. import rules
+from ..functions.audio import clip_udf
 
 
 def segment_samples(x: np.ndarray, sr: int) -> list[tuple[int, int]]:
@@ -79,33 +79,7 @@ _SEG_T = T.ArrayType(
 )
 
 
-@F.arrow_udf(_SEG_T)
-def _vad_udf(raw: pa.Array, codec: pa.Array, sr: pa.Array) -> pa.Array:
-    from ..functions.audio import _binary_bounds
-    from .audiodup import _decode_s16
-
-    data, starts, ends = _binary_bounds(raw)
-    codecs = codec.to_pylist()
-    srs = sr.to_pylist()
-    out = []
-    for i in range(len(codecs)):
-        x = _decode_s16(data, int(starts[i]), int(ends[i]), codecs[i])
-        if x is None or not srs[i] or srs[i] <= 0:
-            out.append(None)
-        else:
-            out.append(
-                [{"s": s, "e": e} for s, e in segment_samples(x, int(srs[i]))]
-            )
-    return pa.array(
-        out, type=pa.list_(pa.struct([("s", pa.int64()), ("e", pa.int64())]))
-    )
-
-
-# Deterministic decode cost must evaluate exactly once: without this flag
-# InferFiltersFromGenerate pushes the inferred isnotnull/size constraint of
-# the posexplode below the projection and duplicates the Arrow stage (the
-# audiodup lesson; plan-audit-enforced there and here).
-_vad_udf = _vad_udf.asNondeterministic()
+_vad_udf = clip_udf(_SEG_T, segment_samples, rate=True)
 
 
 def vad_segments(

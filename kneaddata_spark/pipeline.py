@@ -23,9 +23,6 @@ Physical shape (the 100 TB argument):
  - model artifacts are broadcast once (bowtie2-index analog).
  - binary column is pruned from the text-side expressions by Catalyst;
    the scan never reads columns a stage does not use.
- - skew (en≈58% of langs, pcm_s16le≈52% of codecs) is neutralized by
-   repartitioning on xxhash64(clip_id) — uniform by construction — before
-   the write, NOT by the skewed lang/codec keys.
 """
 
 from __future__ import annotations
@@ -272,7 +269,6 @@ def run_qc(
     out_dir: str,
     langid_bc=None,
     ppl_bc=None,
-    write_partitions: int | None = None,
 ) -> QcResult:
     """ONE map-only job: scan -> annotate -> write partitioned by status;
     metrics ride along via observe() (no second scan — kneaddata re-reads
@@ -282,9 +278,6 @@ def run_qc(
     if langid_bc is None or ppl_bc is None:
         langid_bc, ppl_bc = broadcast_models(spark)
     ann = annotate(clips, langid_bc, ppl_bc)
-    if write_partitions:
-        # salt on uniform xxhash64(clip_id), not on skewed lang/codec keys
-        ann = ann.repartition(write_partitions, F.xxhash64("clip_id"))
 
     obs = Observation("qc_metrics")
     rule_counts = [

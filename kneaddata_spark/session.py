@@ -9,6 +9,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """Half of the host's MemTotal in whole GB, at least 1g. A local-mode
+    driver heap larger than the box lets the JVM grow until the kernel
+    OOM-kills it mid-sweep; half leaves room for the python workers and
+    for /dev/shm, which is the same RAM."""
+    with open(meminfo) as fh:
+        kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{max(1, kb // (2 * 1024 * 1024))}g"
+
+
 def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: int | None = None) -> SparkSession:
     # one python worker per core is the parallelism unit; BLAS/OpenMP fan-out
     # inside numpy would oversubscribe and wreck N->4N scaling
@@ -30,7 +40,10 @@ def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: in
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config(
             # vectorized parquet batches are sized in ROWS (default 4096);
             # audio rows carry ~100 KB binary payloads, so a 4096-row

@@ -111,16 +111,6 @@ def test_distributed_generator_matches_local(spark):
     assert [bytes(b) for b in got["bytes"]] == [bytes(b) for b in want["bytes"]]
 
 
-def test_run_qc_with_write_partitions(spark, clips_path, tmp_path, oracle_labels):
-    """The salted-repartition write path must produce identical verdicts."""
-    from kneaddata_spark.pipeline import run_qc
-
-    df = spark.read.parquet(clips_path)
-    res = run_qc(spark, df, str(tmp_path / "outp"), write_partitions=4)
-    assert res.metrics["n_rows"] == df.count()
-    assert res.metrics["n_kept"] == int(oracle_labels["expect_keep"].sum())
-
-
 def test_training_pipeline_end_to_end(spark, tmp_path):
     """QC -> exact dedup -> near-dup screen: planted duplicates must fall
     out at the right stages."""
@@ -179,10 +169,10 @@ def test_lang_parity_all_rows(spark, clips_path, oracle_labels):
 
 
 def test_write_repartition_balance(spark, clips_path):
-    """north_rule salting evidence: the write path repartitions on uniform
-    xxhash64(clip_id); under the deliberately skewed codec corpus the
-    resulting partitions stay balanced, while keying by the skewed codec
-    column (pcm_s16le ~52%) funnels most rows into few partitions."""
+    """north_rule salting evidence: repartitioning on uniform
+    xxhash64(clip_id) keeps the deliberately skewed codec corpus balanced,
+    while keying by the skewed codec column (pcm_s16le ~52%) funnels most
+    rows into few partitions."""
     df = spark.read.parquet(clips_path)
 
     def sizes(rep):

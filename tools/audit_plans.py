@@ -208,6 +208,18 @@ AUDIT = [
     # r4f: PQ ANN — encode + query LUT are Arrow-batched matmuls; ADC
     # scoring is a JVM fold over the code array on the broadcast-NL side
     ("ann_pq_topk", {"broadcast_join": True}),
+    # per-clip audio screens and transcodes — each is ONE Arrow decode
+    # stage (the functions/audio.clip_udf pin), zero shuffles
+    ("hum_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("bandwidth_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("reverb_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("dynrange_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("dropout_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("click_screen", {"max_exchanges": 0, "arrow_only": True}),
+    ("declip_stats", {"max_exchanges": 0, "arrow_only": True}),
+    ("audio_g711", {"max_exchanges": 0, "arrow_only": True}),
+    ("audio_flac", {"max_exchanges": 0, "arrow_only": True}),
+    ("speech_rate", {"max_exchanges": 0, "arrow_only": True}),
 ]
 
 
@@ -216,6 +228,12 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+def arrow_stages(plan: str) -> int:
+    """ArrowEvalPython nodes in a formatted plan (detail headers, one per
+    node id)."""
+    return len(re.findall(r"\(\d+\) ArrowEvalPython", plan))
 
 
 def global_window_lines(df) -> list[str]:
@@ -324,7 +342,7 @@ def main() -> None:
             # decode per branch). MapInPandas is allowed ONLY for the
             # synth input generator (Arguments: gen(id#N)) — compare
             # DETAIL headers (deduped per node id) to generator lines.
-            n_arrow = len(re.findall(r"\(\d+\) ArrowEvalPython", p))
+            n_arrow = arrow_stages(p)
             n_mip = len(re.findall(r"\(\d+\) MapInPandas", p))
             n_gen = len(re.findall(r"Arguments: gen\(id#\d+L?\)", p))
             checks.append(f"ArrowEvalPython stages: {n_arrow} (want 1); "
@@ -339,7 +357,7 @@ def main() -> None:
             # decode-FREE audio op: the only Python allowed is the synth
             # input generator itself — zero Arrow stages, zero
             # BatchEvalPython, MapInPandas prints all generator lines
-            n_arrow = len(re.findall(r"\(\d+\) ArrowEvalPython", p))
+            n_arrow = arrow_stages(p)
             n_mip = len(re.findall(r"\(\d+\) MapInPandas", p))
             n_gen = len(re.findall(r"Arguments: gen\(id#\d+L?\)", p))
             checks.append(f"ArrowEvalPython stages: {n_arrow} (want 0); "
