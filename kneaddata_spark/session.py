@@ -64,6 +64,22 @@ def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: in
         )
         .config("spark.ui.enabled", "false")
         .config(
+            # the JVM-wide cache of Janino-compiled generated classes,
+            # keyed by the generated source. Spark's default of 100 is
+            # below what this engine repeats: one sf0.001 sweep of the
+            # 195 entry queries compiles ~2,200 distinct classes, and
+            # the 10 benchmarked document queries ~300. At 100 the LRU
+            # evicts every class before its query comes round again, so
+            # each rebuild pays Janino (and the JIT) afresh: a second
+            # sweep compiled ~3,000 classes. 4096 holds the whole surface
+            # with headroom, for ~11 MB more Metaspace and ~17 MB more
+            # code heap after two sweeps. Static conf: read at JVM start.
+            # Re-measure (tools/profile_query.py prints per-rep compiles)
+            # before lowering it.
+            "spark.sql.codegen.cache.maxEntries",
+            "4096",
+        )
+        .config(
             # r6 sweep-churn fix (guide §5): a 150+-query sweep in ONE
             # session accumulates unreferenced localCheckpoint blocks
             # (dup_clusters rounds), broadcast relations and shuffle
@@ -100,3 +116,13 @@ def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: in
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def codegen_compiles(spark: SparkSession) -> tuple[int, float]:
+    """(generated classes compiled, milliseconds spent compiling them)
+    since this JVM started. A cache hit compiles nothing, so the
+    difference across a rebuilt query counts its codegen cache misses."""
+    jvm = spark.sparkContext._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6

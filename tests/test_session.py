@@ -39,3 +39,43 @@ def test_default_heap_never_exceeds_memtotal(spark, tmp_path):
         got = default_driver_memory(str(f))
         assert got == want
         assert _gib(got) <= _mem_total_bytes(str(f))
+
+
+# benchmarked document queries whose rebuilds reuse every compiled class.
+# dup_clusters and distinctive_terms are left out: AQE numbers their
+# codegen stages in the order concurrent query stages finish, and the
+# number is part of the generated class, so some rebuilds compile a few.
+_REBUILT = (
+    "minhash_dedup_pairs", "simhash_near_dups", "substring_dup_pairs",
+    "paragraph_dedup", "pmi_collocations", "rollup_lattice",
+)
+
+
+def test_rebuilt_queries_reuse_compiled_classes(spark):
+    """Rebuilding a query reuses its generated classes: the codegen cache
+    holds a working set larger than Spark's default 100 entries, so a
+    second pass over these queries compiles nothing. The first pass must
+    compile more than 100 classes, or this would not tell the sizes apart."""
+    from kneaddata_spark.plans.entry_queries import QUERIES
+    from kneaddata_spark.session import codegen_compiles
+    from test_partitioning import SF_DIR
+
+    # the cache is JVM-wide, and earlier tests leave classes these queries
+    # share in it; Spark has no public call to empty it, so go through
+    # reflection, and the first pass compiles the whole working set
+    module = spark.sparkContext._jvm.java.lang.Class.forName(
+        "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator$"
+    )
+    field = module.getDeclaredField("cache")
+    field.setAccessible(True)
+    field.get(None).loadingCache().invalidateAll()
+
+    compiled = []
+    for _ in range(2):
+        before, _ms = codegen_compiles(spark)
+        for name in _REBUILT:
+            QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
+            spark.catalog.clearCache()
+        compiled.append(codegen_compiles(spark)[0] - before)
+    assert compiled[0] > 100, compiled
+    assert compiled[1] == 0, compiled

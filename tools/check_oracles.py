@@ -1,6 +1,8 @@
 """Local replica of the driver's correctness gate: run every queries()
 entry on Spark and its oracle_sql() on DuckDB at sf0.01; compare row count,
-column names, and an order-insensitive value hash. Usage:
+column names, and an order-insensitive value hash. At the end it prints the
+generated classes the sweep compiled and the JVM's used Metaspace and code
+heaps, the memory that the session's codegen cache costs. Usage:
 
     python tools/check_oracles.py [sf_dir] [name ...]
 """
@@ -49,7 +51,7 @@ def main():
     only = set(sys.argv[2:])
     import __spark_entry__ as entry
 
-    from kneaddata_spark.session import get_spark
+    from kneaddata_spark.session import codegen_compiles, get_spark
 
     spark = get_spark(cores=8)
     con = duckdb.connect()
@@ -103,6 +105,13 @@ def main():
             print(f"ok {name}: {len(rows)} rows  {el:.1f}s")
             n_pass += 1
     print(f"\n{n_pass} pass, {n_fail} fail")
+    n_classes, compile_ms = codegen_compiles(spark)
+    print(f"codegen: {n_classes} classes compiled in {compile_ms / 1000:.1f} s")
+    for pool in spark.sparkContext._jvm.java.lang.management.ManagementFactory.getMemoryPoolMXBeans():
+        if pool.getName() == "Metaspace" or pool.getName().startswith("CodeHeap"):
+            usage = pool.getUsage()
+            cap = f" of {usage.getMax() / 2**20:.0f} MB" if usage.getMax() > 0 else ""
+            print(f"jvm {pool.getName()}: {usage.getUsed() / 2**20:.1f} MB used{cap}")
     spark.stop()
     sys.exit(1 if n_fail else 0)
 

@@ -6,6 +6,9 @@ Usage: python tools/profile_query.py <sf_dir> <name> [<name> ...]
 
 Times fn(spark, sf).count() like bench.py (best-of-reps, clearCache
 between reps) and writes the formatted plan to <plans-dir>/<name>.txt.
+Next to each rep's wall it prints the generated classes that rep compiled
+and the milliseconds spent compiling them: a rebuild that finds its classes
+in the session's codegen cache reads 0 from rep 2 on.
 This is the round-6 optimization measurement harness (guide §1) — kept
 OUT of bench.py, which is frozen for driver measurement.
 """
@@ -34,7 +37,7 @@ def main() -> None:
     sf_dir, names = args[0], args[1:]
 
     from kneaddata_spark.plans.entry_queries import QUERIES
-    from kneaddata_spark.session import get_spark
+    from kneaddata_spark.session import codegen_compiles, get_spark
 
     from pyspark.sql import functions as F
 
@@ -58,12 +61,15 @@ def main() -> None:
                 f.write(buf.getvalue())
             spark.catalog.clearCache()
         walls = []
-        for _ in range(reps):
+        for rep in range(1, reps + 1):
             spark.catalog.clearCache()
             spark.sparkContext.setJobDescription(f"profile:{name}")
+            c0, ms0 = codegen_compiles(spark)
             t0 = time.time()
             n = fn(spark, sf_dir).count()
             walls.append(round(time.time() - t0, 3))
+            c1, ms1 = codegen_compiles(spark)
+            print(f"{name} rep {rep}: {walls[-1]}s, compiled {c1 - c0} classes in {ms1 - ms0:.0f} ms", flush=True)
         print(f"{name}: {n} rows, reps {walls} -> best {min(walls)}s", flush=True)
     spark.stop()
 
