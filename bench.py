@@ -209,14 +209,17 @@ def _sf_of(path: str) -> float:
 
 
 def ensure_clips(spark, n: int) -> str:
+    from kneaddata_spark.plans.entry_queries import cached, clip_sources
     from kneaddata_spark.synth import clips_spark_df
 
-    path = f"/tmp/kneaddata_bench/clips_{n}.parquet"
-    if not os.path.exists(path + "/_SUCCESS"):
-        clips_spark_df(spark, n, n_partitions=max(CPUS, 8)).write.mode(
+    parts = max(CPUS, 8)
+    return cached(
+        "spark_clips",
+        lambda d: clips_spark_df(spark, n, n_partitions=parts).write.mode(
             "overwrite"
-        ).parquet(path)
-    return path
+        ).parquet(d),
+        n, parts, *clip_sources(),
+    )
 
 
 def bench_qc_pipeline(spark, n_clips: int, reps: int = 5) -> tuple[float, list, dict]:

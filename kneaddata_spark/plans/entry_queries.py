@@ -11,8 +11,10 @@ Deterministic cross-engine sampling/hashing uses plain integer arithmetic
 from __future__ import annotations
 
 import hashlib
+import inspect
 import os
 import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,7 +40,8 @@ from .. import rules as _rules
 
 # ----------------------------------------------------------- helpers ----
 
-_SPLIT_DIR = "/tmp/kneaddata_bench/split_v1"
+_FIXTURE_ROOT = "/tmp/kneaddata_bench"  # every cached() fixture lives here
+
 # The corpus tables _t splits one file per core: every row-local text,
 # event and vector stage reads one of these. The TPC-H tables keep their
 # single source file, and so their file-order scan: their oracles round
@@ -46,6 +49,40 @@ _SPLIT_DIR = "/tmp/kneaddata_bench/split_v1"
 # only DuckDB's own file-order summation reproduces its last ulp
 # (q1_pricing_summary flips at sf0.001 under any other order).
 _SPLIT_TABLES = ("documents", "events", "embeddings")
+
+
+def cached(name: str, build, *key) -> str:
+    """Directory `<root>/<name>_<sha of key>` holding what `build(dir)`
+    writes into `dir`: the one cache of every generated query and bench
+    input. `key` must hold everything the files depend on — parameters,
+    source file stats, and for generated files the generator's source
+    (generator_sources) — so a cached directory is never stale and
+    deleting the root is always safe. A miss builds into a private temp
+    directory and publishes it with one atomic rename, so a reader never
+    sees a partial fixture; a build that raises publishes nothing, and a
+    concurrent writer that published first wins."""
+    digest = hashlib.sha256(repr(key).encode()).hexdigest()[:16]
+    dest = f"{_FIXTURE_ROOT}/{name}_{digest}"
+    if os.path.isdir(dest):
+        return dest
+    os.makedirs(_FIXTURE_ROOT, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{name}_", dir=_FIXTURE_ROOT)
+    try:
+        build(tmp)
+        try:
+            os.rename(tmp, dest)
+        except OSError:  # a concurrent writer published the same key first
+            if not os.path.isdir(dest):
+                raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+    return dest
+
+
+def generator_sources(*code) -> tuple[str, ...]:
+    """Source text of the modules and functions that generate a fixture,
+    for its key."""
+    return tuple(inspect.getsource(c) for c in code)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -63,43 +100,31 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     oracles read the source file; row values are untouched."""
     path = f"{sf_dir}/{name}.parquet"
     if name in _SPLIT_TABLES:
-        path = _split_fixture(os.path.abspath(path), _clip_parts(spark))
+        src, n_parts = os.path.abspath(path), _clip_parts(spark)
+        st = os.stat(src)
+        path = cached(
+            f"split_{name}",
+            lambda d: _split_fixture(src, n_parts, d),
+            src, st.st_size, st.st_mtime_ns, n_parts,
+            *generator_sources(_split_fixture),
+        )
     return spark.read.parquet(path)
 
 
-def _split_fixture(src: str, n_parts: int) -> str:
-    """Directory holding `src` rewritten as `n_parts` parquet files, row i
-    in file i % n_parts. Dealt, not sliced: the tables are stored in id
-    order, and queries pin id ranges (`vec_id < 500`, `doc_id < 40`), so
-    contiguous slices would put every surviving row in one split (row-
-    group stats prune the rest) and run the query's quadratic stage on
-    one core. The rewrite is pyarrow in this process (no Spark job, so
-    query builds stay job-free) and is cached under /tmp/kneaddata_bench
-    keyed by source path, size, mtime and part count; it is published by
-    one atomic rename, so a reader never sees a partial split."""
-    st = os.stat(src)
-    key = hashlib.sha256(
-        f"{src}|{st.st_size}|{st.st_mtime_ns}|{n_parts}".encode()
-    ).hexdigest()[:16]
-    name = os.path.basename(src).removesuffix(".parquet")
-    dest = f"{_SPLIT_DIR}/{name}_{n_parts}_{key}"
-    if os.path.isdir(dest):
-        return dest
+def _split_fixture(src: str, n_parts: int, dest: str) -> None:
+    """Write `src` into `dest` as `n_parts` parquet files, row i in file
+    i % n_parts. Dealt, not sliced: the tables are stored in id order, and
+    queries pin id ranges (`vec_id < 500`, `doc_id < 40`), so contiguous
+    slices would put every surviving row in one split (row-group stats
+    prune the rest) and run the query's quadratic stage on one core. The
+    rewrite is pyarrow in this process, not a Spark job."""
     import numpy as np
     import pyarrow.parquet as pq
 
     table = pq.read_table(src)
-    tmp = f"{dest}.tmp{os.getpid()}"
-    shutil.rmtree(tmp, ignore_errors=True)
-    os.makedirs(tmp)
     for i in range(n_parts):
         rows = np.arange(i, table.num_rows, n_parts)
-        pq.write_table(table.take(rows), f"{tmp}/part-{i:05d}.parquet")
-    try:
-        os.rename(tmp, dest)
-    except OSError:  # a concurrent writer published the same split first
-        shutil.rmtree(tmp, ignore_errors=True)
-    return dest
+        pq.write_table(table.take(rows), f"{dest}/part-{i:05d}.parquet")
 
 
 def _docs_with_dups(spark, sf_dir) -> DataFrame:
@@ -160,42 +185,38 @@ def _clip_parts(spark: SparkSession) -> int:
     return max(int(spark.sparkContext.defaultParallelism), 8)
 
 
-def _synth_clips(
-    spark: SparkSession, n: int, n_partitions: int | None = None
-) -> DataFrame:
-    """Deterministic synth clip table, generated ONCE per (n, partitions)
-    into /tmp/kneaddata_bench and read as parquet afterwards: ~14 audio
-    driver queries share the same basis, so a budgeted driver sweep pays
-    the Arrow generation once instead of per query (values identical —
-    the generator is a pure function of the row id; parquet round-trips
-    binary/int/string exactly). Same cache dir/trap as bench.py's
-    ensure_clips (delete after changing synth.py)."""
-    if n_partitions is None:
-        n_partitions = _clip_parts(spark)
-    path = f"/tmp/kneaddata_bench/clips_q_{n}_{n_partitions}.parquet"
-    if not os.path.exists(path + "/_SUCCESS"):
-        from ..synth import clips_spark_df
+def clip_sources() -> tuple[str, ...]:
+    """Key part of every synth clip fixture: its generator's source."""
+    from .. import rules, synth, vocab
+    from ..functions import flaccodec
 
-        clips_spark_df(spark, n, n_partitions=n_partitions).write.mode(
-            "overwrite"
-        ).parquet(path)
-    return spark.read.parquet(path)
+    return generator_sources(synth, rules, vocab, flaccodec)
 
 
-# Every clip count the query builders request — keep in sync with the
-# _synth_clips call sites below (grep "_synth_clips(spark"). The partition
-# count is derived per session (_clip_parts), not enumerated here.
-CLIP_CACHE_SIZES = [300, 400]
+def _clip_fixture(n: int, n_parts: int) -> str:
+    """Directory of synth clips [0, n) in n_parts files, file i holding
+    ids [i*n//n_parts, (i+1)*n//n_parts) (the layout
+    synth.clips_spark_df(n, n_parts) writes), generated by pyarrow in
+    this process: no Spark job, so query builds stay job-free."""
+    from ..synth import write_clips_parquet
+
+    return cached(
+        "clips",
+        lambda d: write_clips_parquet(d, n, parts=n_parts),
+        n, n_parts, *clip_sources(),
+    )
 
 
-def prewarm_clip_cache(spark: SparkSession) -> None:
-    """Materialize every clip-cache shape the builders read (ADVICE r4):
-    builders are job-free EXCEPT that a cold /tmp clip cache makes the
-    first audio builder run a one-time synthesis write. Tools that build
-    plans without executing them (tools/audit_plans.py) call this first
-    so the build phase itself stays job-free."""
-    for n in CLIP_CACHE_SIZES:
-        _synth_clips(spark, n)
+def _synth_clips(spark: SparkSession, n: int) -> DataFrame:
+    """Deterministic synth clip table of n rows, one file per core: ~14
+    audio driver queries share the same basis, so a driver sweep pays the
+    generation once instead of per query (values identical — the
+    generator is a pure function of the row id; parquet round-trips
+    binary/int/string exactly). The schema is given, so the read plans
+    no schema-inference job."""
+    from ..synth import CLIP_DDL
+
+    return spark.read.schema(CLIP_DDL).parquet(_clip_fixture(n, _clip_parts(spark)))
 
 
 # ------------------------------------------------------------ queries ----
@@ -215,9 +236,6 @@ def q(name: str, sql: str | None = None):
         # pinned storage accumulates across the sweep. Releasing at build
         # time keeps each query's own caches alive for its action(s) and
         # keeps builders job-free (the plan audit builds without running).
-        # One documented exception: a COLD /tmp clip cache triggers a
-        # one-time synthesis write inside the first audio builder — tools
-        # that must stay job-free call prewarm_clip_cache() up front.
         @functools.wraps(fn)
         def wrapped(spark, sf_dir):
             from ..operators.caching import release_tracked
@@ -2865,33 +2883,38 @@ def qc_stream_counts(spark, sf):
     Budget-proofed for the driver's per-query gate (VERDICT r2 missing #1):
     small deterministic input (120 clips), cached model broadcasts, and a
     hard 60 s stream timeout — availableNow completes in a few seconds; the
-    timeout only bounds a wedged stream."""
-    import tempfile
-
+    timeout only bounds a wedged stream. The stream reads the cached clip
+    fixture in place (a file source only lists its input); its output and
+    checkpoint are removed once the per-status rows are collected."""
     from ..streaming import stream_qc
     from ..streaming.qc_stream import status_counts
-    from ..synth import clips_spark_df
 
     base = tempfile.mkdtemp(prefix="qc_stream_")
-    src, out, ckpt = f"{base}/in", f"{base}/out", f"{base}/ckpt"
-    clips_spark_df(spark, 120, n_partitions=2).write.mode("overwrite").parquet(src)
-    q = stream_qc(spark, src, out, ckpt, *_cached_models(spark))
-    q.awaitTermination(60)
-    if q.isActive:
-        # a wedged stream must FAIL loudly, not return partial counts —
-        # this query is rows-only (no oracle), so silently counting only
-        # the batches that committed would go entirely unnoticed
-        q.stop()
-        raise RuntimeError("qc_stream_counts: stream did not drain within 60 s")
-    return status_counts(spark, out)
+    try:
+        q = stream_qc(
+            spark, _clip_fixture(120, 2), f"{base}/out", f"{base}/ckpt",
+            *_cached_models(spark),
+        )
+        q.awaitTermination(60)
+        if q.isActive:
+            # a wedged stream must FAIL loudly, not return partial counts —
+            # this query is rows-only (no oracle), so silently counting only
+            # the batches that committed would go entirely unnoticed
+            q.stop()
+            raise RuntimeError("qc_stream_counts: stream did not drain within 60 s")
+        rows = status_counts(spark, f"{base}/out").collect()
+    finally:
+        shutil.rmtree(base, ignore_errors=True)
+    return spark.createDataFrame(rows, "status string, n long")
 
 
 @q("qc_pipeline_clips")
 def qc_pipeline_clips(spark, sf):
     """Flagship domain pipeline over a deterministic synthetic clip table
-    (BASELINE.json input_hint shape), generated in-Spark. Returns per-rule
-    counts. No SQL oracle: binary PCM decode + broadcast model scoring are
-    not ANSI-SQL-expressible; pytest provides the parity gate instead.
+    (BASELINE.json input_hint shape, the shared clip fixture). Returns
+    per-rule counts. No SQL oracle: binary PCM decode + broadcast model
+    scoring are not ANSI-SQL-expressible; pytest provides the parity gate
+    instead.
     Budget-proofed: 400 clips + cached model broadcasts (sized for the
     driver's per-query gate; bench.py exercises the 40k-clip version)."""
     from ..pipeline import annotate
@@ -5513,6 +5536,39 @@ def readability_score_q(spark, sf):
     return textstats.readability_score(planted, "doc_id", "text")
 
 
+def _synth_images(base_ids: DataFrame, tag: str, perturb: bool) -> DataFrame:
+    """Test images (media_id, bytes, mime) for the `base_id` rows: a
+    crc32-seeded 16x16 RGB image per id, one pixel inverted when
+    `perturb` (Hamming <= 1 from the unperturbed twin), BMP for even ids
+    and PNG for odd ones; media_id is `tag` then the 5-digit id."""
+
+    def gen(it):
+        import zlib
+
+        import numpy as np
+        import pandas as pd
+
+        from ..multimodal import encode_bmp, encode_png
+
+        for pdf in it:
+            ids, blobs, mimes = [], [], []
+            for b in pdf["base_id"]:
+                rng = np.random.RandomState(zlib.crc32(f"img{int(b)}".encode()) & 0x7FFFFFFF)
+                px = rng.randint(0, 256, (16, 16, 3)).astype(np.uint8)
+                if perturb:
+                    px[0, 0] = 255 - px[0, 0]
+                if int(b) % 2 == 0:
+                    blob, mime = encode_bmp(px), "image/bmp"
+                else:
+                    blob, mime = encode_png(px), "image/png"
+                ids.append(f"{tag}{int(b):05d}")
+                blobs.append(blob)
+                mimes.append(mime)
+            yield pd.DataFrame({"media_id": ids, "bytes": blobs, "mime": mimes})
+
+    return base_ids.mapInPandas(gen, schema="media_id string, bytes binary, mime string")
+
+
 @q("image_dup_pairs")
 def image_dup_pairs_q(spark, sf):
     """Perceptual image near-dup (operators/imagedup.image_dup_pairs):
@@ -5532,47 +5588,12 @@ def image_dup_pairs_q(spark, sf):
         .where("doc_id < 60")
         .select(F.col("doc_id").cast("long").alias("base_id"))
     )
-    u = (
-        base.select("base_id", F.lit(0).alias("variant"))
+    media = (
+        _synth_images(base, "m", False)
+        .unionByName(_synth_images(base.where("base_id < 15"), "n", True))
         .unionByName(
-            base.where("base_id < 15").select("base_id", F.lit(1).alias("variant"))
+            _synth_images(base.where("base_id >= 15 and base_id < 30"), "x", False)
         )
-        .unionByName(
-            base.where("base_id >= 15 and base_id < 30").select(
-                "base_id", F.lit(2).alias("variant")
-            )
-        )
-    )
-
-    def _synth_media(it):
-        import zlib as _z
-
-        import numpy as _np
-        import pandas as _pd
-
-        from ..multimodal import encode_bmp, encode_png
-
-        for pdf in it:
-            ids, blobs, mimes = [], [], []
-            for b, v in zip(pdf["base_id"], pdf["variant"]):
-                rng = _np.random.RandomState(
-                    _z.crc32(f"img{int(b)}".encode()) & 0x7FFFFFFF
-                )
-                px = rng.randint(0, 256, (16, 16, 3)).astype(_np.uint8)
-                if int(v) == 1:
-                    px = px.copy()
-                    px[0, 0] = 255 - px[0, 0]
-                if int(b) % 2 == 0:
-                    blob, mime = encode_bmp(px), "image/bmp"
-                else:
-                    blob, mime = encode_png(px), "image/png"
-                ids.append(f"{'mnx'[int(v)]}{int(b):05d}")
-                blobs.append(blob)
-                mimes.append(mime)
-            yield _pd.DataFrame({"media_id": ids, "bytes": blobs, "mime": mimes})
-
-    media = u.mapInPandas(
-        _synth_media, schema="media_id string, bytes binary, mime string"
     )
     return image_dup_pairs(media, max_hamming=3)
 
@@ -5732,50 +5753,16 @@ def incremental_image_screen_q(spark, sf):
     and FRESH ids 1000..1009 ('f', survive). Output (media_id, status)."""
     from ..operators.imagedup import image_band_index, incremental_image_dedup
 
-    def synth(ids_df, prefix: str, perturb: bool):
-        def _mk(it):
-            import zlib as _z
-
-            import numpy as _np
-            import pandas as _pd
-
-            from ..multimodal import encode_bmp, encode_png
-
-            for pdf in it:
-                out_i, out_b, out_m = [], [], []
-                for b in pdf["base_id"]:
-                    rng = _np.random.RandomState(
-                        _z.crc32(f"img{int(b)}".encode()) & 0x7FFFFFFF
-                    )
-                    px = rng.randint(0, 256, (16, 16, 3)).astype(_np.uint8)
-                    if perturb:
-                        px = px.copy()
-                        px[0, 0] = 255 - px[0, 0]
-                    if int(b) % 2 == 0:
-                        blob, mime = encode_bmp(px), "image/bmp"
-                    else:
-                        blob, mime = encode_png(px), "image/png"
-                    out_i.append(f"{prefix}{int(b):05d}")
-                    out_b.append(blob)
-                    out_m.append(mime)
-                yield _pd.DataFrame(
-                    {"media_id": out_i, "bytes": out_b, "mime": out_m}
-                )
-
-        return ids_df.mapInPandas(
-            _mk, schema="media_id string, bytes binary, mime string"
-        )
-
     docs = _t(spark, sf, "documents")
     corpus_ids = docs.where("doc_id < 40").select(
         F.col("doc_id").cast("long").alias("base_id")
     )
-    idx = image_band_index(synth(corpus_ids, "c", False))
+    idx = image_band_index(_synth_images(corpus_ids, "c", False))
     batch = (
-        synth(corpus_ids.where("base_id % 4 = 0"), "r", False)
-        .unionByName(synth(corpus_ids.where("base_id % 4 = 1"), "p", True))
+        _synth_images(corpus_ids.where("base_id % 4 = 0"), "r", False)
+        .unionByName(_synth_images(corpus_ids.where("base_id % 4 = 1"), "p", True))
         .unionByName(
-            synth(
+            _synth_images(
                 docs.where("doc_id < 10").select(
                     (F.col("doc_id") + 1000).cast("long").alias("base_id")
                 ),
@@ -7159,23 +7146,13 @@ def robots_parse_q(spark, sf):
 
 # --- WARC container ingest (r5: the mile BEFORE the crawl screens) --------
 
-_WARC_FIXTURE_DIR = "/tmp/kneaddata_bench/warc_v1"
-
-
 def _warc_fixture_dir() -> str:
     """Deterministic WARC shard fixtures, written ONCE with stdlib file
     I/O (no Spark job — builders stay job-free). 6 shards: plain and
     member-gzip spellings, html/404/request/binary record mix derived
     from the shard+record index, plus one shard with a torn tail record
     exercising the soft per-record failure contract."""
-    import os
-
-    from ..sources.warc import build_warc_bytes
-
-    done = os.path.join(_WARC_FIXTURE_DIR, "_DONE")
-    if os.path.exists(done):
-        return _WARC_FIXTURE_DIR
-    os.makedirs(_WARC_FIXTURE_DIR, exist_ok=True)
+    from ..sources import warc
 
     def shard(s: int) -> list[dict]:
         recs: list[dict] = [
@@ -7209,16 +7186,16 @@ def _warc_fixture_dir() -> str:
                              "payload": body.encode()})
         return recs
 
-    for s in range(6):
-        raw = build_warc_bytes(shard(s), member_gzip=s % 2 == 1)
-        if s == 4:  # torn tail (plain shard): records before the tear
-            raw = raw[:-9]  # survive, then exactly one invalid row
-        name = f"shard{s}.warc" + (".gz" if s % 2 == 1 else "")
-        with open(os.path.join(_WARC_FIXTURE_DIR, name), "wb") as f:
-            f.write(raw)
-    with open(done, "w") as f:
-        f.write("v1")
-    return _WARC_FIXTURE_DIR
+    def build(d: str) -> None:
+        for s in range(6):
+            raw = warc.build_warc_bytes(shard(s), member_gzip=s % 2 == 1)
+            if s == 4:  # torn tail (plain shard): records before the tear
+                raw = raw[:-9]  # survive, then exactly one invalid row
+            name = f"shard{s}.warc" + (".gz" if s % 2 == 1 else "")
+            with open(os.path.join(d, name), "wb") as f:
+                f.write(raw)
+
+    return cached("warc", build, *generator_sources(warc, _warc_fixture_dir))
 
 
 @q("wet_shards")
@@ -8126,7 +8103,6 @@ def crawl_funnel_q(spark, sf):
     )
 
 
-_WARC_AUDIO_DIR = "/tmp/kneaddata_bench/warc_audio_v1"
 _WARC_AUDIO_N = 240
 
 _AUDIO_MIME = {
@@ -8145,52 +8121,53 @@ def _warc_audio_dir() -> str:
     stay job-free). Payload bytes live ONLY in the WARC shards; the
     catalog carries metadata — the split a real crawl+caption-DB
     pipeline has."""
-    import os
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ..sources.warc import build_warc_bytes
+    from ..sources import warc
     from ..synth import gen_clip
 
-    done = os.path.join(_WARC_AUDIO_DIR, "_DONE")
-    if os.path.exists(done):
-        return _WARC_AUDIO_DIR
-    os.makedirs(_WARC_AUDIO_DIR, exist_ok=True)
-    clips = [gen_clip(i) for i in range(_WARC_AUDIO_N)]
-    per_shard = _WARC_AUDIO_N // 4
-    for s in range(4):
-        recs = []
-        for c in clips[s * per_shard : (s + 1) * per_shard]:
-            recs.append({
-                "warc_type": "response",
-                "target_uri": f"https://cdn{s}.example.org/clips/{c['clip_id']}.bin",
-                "http_status": 200,
-                "http_content_type": _AUDIO_MIME[c["codec"]],
-                "payload": c["bytes"],
-            })
-            if int(c["clip_id"][1:]) % 12 == 0:  # html distractors the
-                recs.append({                    # audio filter must skip
+    def build(d: str) -> None:
+        clips = [gen_clip(i) for i in range(_WARC_AUDIO_N)]
+        per_shard = _WARC_AUDIO_N // 4
+        for s in range(4):
+            recs = []
+            for c in clips[s * per_shard : (s + 1) * per_shard]:
+                recs.append({
                     "warc_type": "response",
-                    "target_uri": f"https://cdn{s}.example.org/pages/{c['clip_id']}",
+                    "target_uri": f"https://cdn{s}.example.org/clips/{c['clip_id']}.bin",
                     "http_status": 200,
-                    "http_content_type": "text/html",
-                    "payload": b"<html><body><p>about this clip</p></body></html>",
+                    "http_content_type": _AUDIO_MIME[c["codec"]],
+                    "payload": c["bytes"],
                 })
-        raw = build_warc_bytes(recs, member_gzip=True)
-        with open(os.path.join(_WARC_AUDIO_DIR, f"audio{s}.warc.gz"), "wb") as f:
-            f.write(raw)
-    cat = pa.table({
-        "clip_id": [c["clip_id"] for c in clips],
-        "sr_hz": pa.array([c["sr_hz"] for c in clips], pa.int32()),
-        "dur_ms": pa.array([c["dur_ms"] for c in clips], pa.int32()),
-        "codec": [c["codec"] for c in clips],
-        "transcript": [c["transcript"] for c in clips],
-    })
-    pq.write_table(cat, os.path.join(_WARC_AUDIO_DIR, "catalog.parquet"))
-    with open(done, "w") as f:
-        f.write("v1")
-    return _WARC_AUDIO_DIR
+                if int(c["clip_id"][1:]) % 12 == 0:  # html distractors the
+                    recs.append({                    # audio filter must skip
+                        "warc_type": "response",
+                        "target_uri": f"https://cdn{s}.example.org/pages/{c['clip_id']}",
+                        "http_status": 200,
+                        "http_content_type": "text/html",
+                        "payload": b"<html><body><p>about this clip</p></body></html>",
+                    })
+            raw = warc.build_warc_bytes(recs, member_gzip=True)
+            with open(os.path.join(d, f"audio{s}.warc.gz"), "wb") as f:
+                f.write(raw)
+        cat = pa.table({
+            "clip_id": [c["clip_id"] for c in clips],
+            "sr_hz": pa.array([c["sr_hz"] for c in clips], pa.int32()),
+            "dur_ms": pa.array([c["dur_ms"] for c in clips], pa.int32()),
+            "codec": [c["codec"] for c in clips],
+            "transcript": [c["transcript"] for c in clips],
+        })
+        pq.write_table(cat, os.path.join(d, "catalog.parquet"))
+
+    return cached(
+        "warc_audio",
+        build,
+        _WARC_AUDIO_N,
+        _AUDIO_MIME,
+        *clip_sources(),
+        *generator_sources(warc, _warc_audio_dir),
+    )
 
 
 @q("warc_audio_qc")
@@ -8218,7 +8195,9 @@ def warc_audio_qc_q(spark, sf):
         F.regexp_extract("target_uri", r"/([^/]+)\.bin$", 1).alias("clip_id"),
         F.col("payload").alias("bytes"),
     )
-    cat = spark.read.parquet(d + "/catalog.parquet")
+    cat = spark.read.schema(
+        "clip_id string, sr_hz int, dur_ms int, codec string, transcript string"
+    ).parquet(d + "/catalog.parquet")
     clips = audio.join(F.broadcast(cat), "clip_id").select(
         "clip_id", "bytes", "sr_hz", "dur_ms", "codec", "transcript"
     )

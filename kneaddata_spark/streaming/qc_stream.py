@@ -20,12 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..pipeline import annotate, broadcast_models, qc_output_select
+from ..synth import CLIP_DDL
 from .runner import run_stream, source
-
-CLIP_DDL = (
-    "clip_id string, bytes binary, sr_hz int, dur_ms int, "
-    "codec string, transcript string"
-)
 
 
 def stream_qc(

@@ -26,6 +26,10 @@ from . import rules
 from .vocab import LANGS, make_sentence
 
 GLOBAL_SEED = 20260816
+CLIP_DDL = (
+    "clip_id string, bytes binary, sr_hz int, dur_ms int, "
+    "codec string, transcript string"
+)
 
 # skewed distributions (skew exercises salting / AQE per north_rule)
 CODECS = ["pcm_s16le", "pcm_u8", "flac", "opus", "mp3", "wav", "bogus"]
@@ -200,8 +204,13 @@ def gen_clips_pdf(n: int, start: int = 0, hidden: bool = False) -> pd.DataFrame:
     return pdf
 
 
-def write_clips_parquet(path: str, n: int, chunk: int = 2000) -> str:
-    """Write n clips to parquet deterministically, in chunks (bounded RAM)."""
+def write_clips_parquet(
+    path: str, n: int, chunk: int = 2000, parts: int | None = None
+) -> str:
+    """Write n clips to parquet deterministically, in chunks (bounded RAM).
+    With ``parts``, ``path`` is a directory of that many files, file i
+    holding ids [i*n//parts, (i+1)*n//parts): Spark's ``range`` bounds,
+    the layout ``clips_spark_df(n, parts)`` writes."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -215,11 +224,19 @@ def write_clips_parquet(path: str, n: int, chunk: int = 2000) -> str:
             ("transcript", pa.string()),
         ]
     )
-    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    with pq.ParquetWriter(path, schema) as w:
-        for s in range(0, n, chunk):
-            pdf = gen_clips_pdf(min(chunk, n - s), start=s)
-            w.write_table(pa.Table.from_pandas(pdf, schema=schema, preserve_index=False))
+    if parts is None:
+        files = [(path, 0, n)]
+    else:
+        files = [
+            (f"{path}/part-{i:05d}.parquet", i * n // parts, (i + 1) * n // parts)
+            for i in range(parts)
+        ]
+    for file, lo, hi in files:
+        os.makedirs(os.path.dirname(file) or ".", exist_ok=True)
+        with pq.ParquetWriter(file, schema) as w:
+            for s in range(lo, hi, chunk):
+                pdf = gen_clips_pdf(min(chunk, hi - s), start=s)
+                w.write_table(pa.Table.from_pandas(pdf, schema=schema, preserve_index=False))
     return path
 
 

@@ -102,15 +102,8 @@ def test_clip_udf_nulls_gate_and_pin(spark):
     assert arrow_stages(plan_of(two_fields)) == 1
 
 
-@pytest.fixture(scope="module")
-def warm_clips(spark):
-    from kneaddata_spark.plans.entry_queries import prewarm_clip_cache
-
-    prewarm_clip_cache(spark)
-
-
 @pytest.mark.parametrize("name", CLIP_UDF_QUERIES)
-def test_clip_udf_queries_plan_one_arrow_stage(spark, warm_clips, name):
+def test_clip_udf_queries_plan_one_arrow_stage(spark, name):
     """The decode-once pin lives in clip_udf: every driver query built on
     it plans exactly one ArrowEvalPython."""
     from kneaddata_spark.plans.entry_queries import QUERIES

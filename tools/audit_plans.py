@@ -292,12 +292,6 @@ def main() -> None:
     from kneaddata_spark.session import get_spark
 
     spark = get_spark(app="planaudit", cores=8)
-    # warm the /tmp clip cache UP FRONT (ADVICE r4): the audit only BUILDS
-    # plans, and builders are job-free except for a cold clip cache, which
-    # would otherwise trigger a synthesis write inside a builder
-    from kneaddata_spark.plans.entry_queries import prewarm_clip_cache
-
-    prewarm_clip_cache(spark)
     sections, problems = [], []
 
     # the flagship QC pipeline plan

@@ -151,11 +151,17 @@ def clips_table(spark, n: int):
     what the ratio must measure."""
     from pyspark.sql import functions as F
 
+    from kneaddata_spark.plans.entry_queries import (
+        cached,
+        clip_sources,
+        generator_sources,
+    )
     from kneaddata_spark.synth import clips_spark_df
 
-    path = f"/tmp/kneaddata_bench/scale_clips_{n}"
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        clips_spark_df(spark, n, n_partitions=32).select(
+    parts = 32
+
+    def build(d: str) -> None:
+        clips_spark_df(spark, n, n_partitions=parts).select(
             F.explode(
                 F.when(
                     F.crc32(F.col("clip_id")) % 7 == 0,
@@ -168,8 +174,10 @@ def clips_table(spark, n: int):
             "bytes",
             "codec",
             "sr_hz",
-        ).write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+        ).write.mode("overwrite").parquet(d)
+
+    key = (n, parts, *clip_sources(), *generator_sources(clips_table))
+    return spark.read.parquet(cached("scale_clips", build, *key))
 
 
 def run_audio_suite(spark, n: int) -> dict:

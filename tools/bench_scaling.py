@@ -111,14 +111,16 @@ def run_interleaved(levels: tuple, path: str, rounds: int = 3) -> dict:
 
 
 def main() -> None:
+    from kneaddata_spark.plans.entry_queries import cached, clip_sources
     from kneaddata_spark.session import get_spark
     from kneaddata_spark.synth import clips_spark_df
 
-    path = f"/tmp/kneaddata_bench/clips_{N_CLIPS}.parquet"
-    if not os.path.exists(path + "/_SUCCESS"):
+    def build(d: str) -> None:
         spark = get_spark(app="gen", cores=32)
-        clips_spark_df(spark, N_CLIPS, n_partitions=64).write.mode("overwrite").parquet(path)
+        clips_spark_df(spark, N_CLIPS, n_partitions=64).write.mode("overwrite").parquet(d)
         spark.stop()
+
+    path = cached("spark_clips", build, N_CLIPS, 64, *clip_sources())
 
     roof = machine_roofline()
     pair_walls = run_interleaved((1, 4), path, rounds=3)
