@@ -429,15 +429,17 @@ def _decode_s16(data: np.ndarray, s: int, e: int, codec: str) -> "np.ndarray | N
 
 def clip_udf(return_type: T.DataType, kernel: Callable, rate: bool = False):
     """The per-clip Arrow UDF every audio operator is built on. Call the
-    result as ``udf(bytes, codec, *args)``; it returns ``return_type``.
+    result with only the kernel's extra row columns, ``udf(*args)``; it
+    binds the clip schema's ``bytes`` and ``codec`` columns itself (and
+    ``sr_hz`` with ``rate=True``) and returns ``return_type``.
 
     For each row it decodes ``bytes`` to int16 samples (zero-copy view of
     the Arrow buffers, then `_decode_s16`) and returns
     ``kernel(samples, *row_args)``: a dict or a tuple in field order for
     a struct, a list for an array, or None. Rows that fail to decode are
-    NULL without calling the kernel. With ``rate=True`` the first extra
-    argument is the sample rate: a NULL or non-positive rate makes the
-    row NULL, and the kernel gets it as an int. The Arrow return type is
+    NULL without calling the kernel. With ``rate=True`` the first row
+    argument is ``sr_hz``: a NULL or non-positive rate makes the row
+    NULL, and the kernel gets it as an int. The Arrow return type is
     derived from ``return_type``; operators declare only the Spark type.
 
     The UDF is pinned non-deterministic although the kernel is a pure
@@ -467,7 +469,9 @@ def clip_udf(return_type: T.DataType, kernel: Callable, rate: bool = False):
         return pa.array(out, type=pa_type)
 
     udf.__name__ = kernel.__name__  # plans name the kernel
-    return F.arrow_udf(udf, return_type).asNondeterministic()
+    arrow = F.arrow_udf(udf, return_type).asNondeterministic()
+    clip_cols = ("bytes", "codec", "sr_hz") if rate else ("bytes", "codec")
+    return lambda *args: arrow(*clip_cols, *args)
 
 
 @F.arrow_udf(AUDIO_STRUCT)

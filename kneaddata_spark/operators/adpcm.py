@@ -251,18 +251,12 @@ def adpcm_of(x: np.ndarray) -> tuple:
 _adpcm_udf = clip_udf(_ADPCM_T, adpcm_of)
 
 
-def adpcm_transcode(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-) -> DataFrame:
+def adpcm_transcode(clips: DataFrame) -> DataFrame:
     """(clip_id, n_samples, n_blocks, n_code_bytes, crc_code, crc_rt,
     max_abs_err, meansq_x, snr_q) — one row per decodable clip; the
     crc_code payload is the packed block stream (256 bytes per 505
     samples, ~3.95:1 vs s16), crc_rt proves the byte format decodes
     back. Undecodable clips drop (the screens' NULL rule). One Arrow
     stage, zero shuffles."""
-    st = _adpcm_udf(F.col(bytes_col), F.col(codec_col)).alias("__a")
-    ex = clips.select(F.col(id_col), st).where(F.col("__a").isNotNull())
-    return ex.select(F.col(id_col), "__a.*")
+    ex = clips.select("clip_id", _adpcm_udf().alias("__a"))
+    return ex.where(F.col("__a").isNotNull()).select("clip_id", "__a.*")

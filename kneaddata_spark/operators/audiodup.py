@@ -62,14 +62,15 @@ FP_SHINGLE_W = 4        # frames per shingle
 FP_SYMBOL_BASE = 1 << 14  # symbol packing base (symbol = q*1024 + z < 2^14)
 FP_N_BANDS = 16
 FP_MOD = 1 << 31
+FP_SEED = 9176          # band_coeffs LCG seed
 
 
-def band_coeffs(n_bands: int = FP_N_BANDS, seed: int = 9176) -> list[tuple[int, int]]:
+def band_coeffs() -> list[tuple[int, int]]:
     """(A, C) per band from a fixed LCG; A forced odd so x -> A*x + C is a
     bijection mod 2^31. Inlined in the pure-python test replica the same
     way similarity.int_planes is inlined in its oracle."""
-    out, x = [], seed
-    for _ in range(n_bands):
+    out, x = [], FP_SEED
+    for _ in range(FP_N_BANDS):
         x = (x * 1103515245 + 12345) % FP_MOD
         a = (2 * x + 1) % FP_MOD
         x = (x * 1103515245 + 12345) % FP_MOD
@@ -78,7 +79,7 @@ def band_coeffs(n_bands: int = FP_N_BANDS, seed: int = 9176) -> list[tuple[int, 
 
 
 def fingerprint_samples(x: np.ndarray) -> "list[int] | None":
-    """int16 samples -> n_bands minhash signature (None if < w frames).
+    """int16 samples -> FP_N_BANDS minhash signature (None if < w frames).
     Shared by the Arrow UDF below and callers embedding the kernel; the
     test replica reimplements this in pure python from the docstring."""
     n_frames = len(x) // FP_FRAME
@@ -103,31 +104,16 @@ def fingerprint_samples(x: np.ndarray) -> "list[int] | None":
 _audio_fp_udf = clip_udf(T.ArrayType(T.LongType()), fingerprint_samples)
 
 
-def audio_fingerprint(
-    df: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-) -> DataFrame:
+def audio_fingerprint(df: DataFrame) -> DataFrame:
     """(id, sig array<long> | null) — one ArrowEvalPython stage."""
-    return df.select(
-        F.col(id_col).alias("id"),
-        _audio_fp_udf(F.col(bytes_col), F.col(codec_col)).alias("sig"),
-    )
+    return df.select(F.col("clip_id").alias("id"), _audio_fp_udf().alias("sig"))
 
 
-def audio_dup_pairs(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    min_bands: int = 12,
-) -> DataFrame:
+def audio_dup_pairs(clips: DataFrame, min_bands: int = 12) -> DataFrame:
     """(id_a, id_b, n_match) for clip pairs whose fingerprints agree in >=
     min_bands of the 16 bands (id_a < id_b). See module docstring for the
     kernel and the scale argument."""
-    fp = audio_fingerprint(df=clips, id_col=id_col, bytes_col=bytes_col, codec_col=codec_col)
-    ex = fp.where(F.col("sig").isNotNull()).select(
+    ex = audio_fingerprint(clips).where(F.col("sig").isNotNull()).select(
         "id", F.posexplode("sig").alias("band", "v")
     )
     buckets = (
@@ -153,18 +139,13 @@ def audio_dup_pairs(
     )
 
 
-def audio_band_table(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-) -> DataFrame:
+def audio_band_table(clips: DataFrame) -> DataFrame:
     """Persistable (band, v) index of a clip corpus — the audio analog of
     dedup.corpus_band_table (the artifact a production incremental audio
     dedup pipeline stores as a table and probes per ingest batch). One
     Arrow decode stage, one distinct shuffle."""
     return (
-        audio_fingerprint(clips, id_col, bytes_col, codec_col)
+        audio_fingerprint(clips)
         .where(F.col("sig").isNotNull())
         .select(F.posexplode("sig").alias("band", "v"))
         .distinct()
@@ -174,9 +155,6 @@ def audio_band_table(
 def incremental_audio_screen(
     new_clips: DataFrame,
     band_table: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
     min_bands: int = 1,
 ) -> "tuple[DataFrame, DataFrame]":
     """Screen an ingest batch against a stored corpus band index:
@@ -194,7 +172,7 @@ def incremental_audio_screen(
     from .caching import persist_tracked
 
     ex = (
-        audio_fingerprint(new_clips, id_col, bytes_col, codec_col)
+        audio_fingerprint(new_clips)
         .where(F.col("sig").isNotNull())
         .select("id", F.posexplode("sig").alias("band", "v"))
     )
@@ -203,8 +181,8 @@ def incremental_audio_screen(
         .groupBy("id")
         .agg(F.count("*").alias("__nb"))
         .where(F.col("__nb") >= min_bands)
-        .select(F.col("id").alias(id_col))
+        .select(F.col("id").alias("clip_id"))
     )
-    flagged = new_clips.join(F.broadcast(flagged_ids), id_col, "left_semi")
-    survivors = new_clips.join(F.broadcast(flagged_ids), id_col, "left_anti")
+    flagged = new_clips.join(F.broadcast(flagged_ids), "clip_id", "left_semi")
+    survivors = new_clips.join(F.broadcast(flagged_ids), "clip_id", "left_anti")
     return survivors, flagged

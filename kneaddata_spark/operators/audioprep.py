@@ -31,7 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.audio import clip_udf
-from .resample import apply_gain, loudness_gain, resample_linear
+from .resample import MAX_GAIN_Q15, apply_gain, loudness_gain, resample_linear
 
 _PREP_T = T.StructType(
     [
@@ -45,12 +45,12 @@ _PREP_T = T.StructType(
 )
 
 
-def _make_prep_udf(target_sr: int, target_rms: int, max_gain_q15: int):
+def _make_prep_udf(target_sr: int, target_rms: int):
     def prep_of(x, sr: int) -> tuple:
         y = resample_linear(x, sr, target_sr)
-        rms_in, gain = loudness_gain(y, target_rms, max_gain_q15)
+        rms_in, gain = loudness_gain(y, target_rms, MAX_GAIN_Q15)
         z = apply_gain(y, gain)
-        rms_out, _ = loudness_gain(z, target_rms, max_gain_q15)
+        rms_out, _ = loudness_gain(z, target_rms, MAX_GAIN_Q15)
         return (len(x), len(z), rms_in, rms_out, gain, zlib.crc32(z.astype("<i2").tobytes()))
 
     return clip_udf(_PREP_T, prep_of, rate=True)
@@ -60,11 +60,6 @@ def prep_audio(
     clips: DataFrame,
     target_sr: int = 16000,
     target_rms: int = 4096,
-    max_gain_q15: int = 1 << 18,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
 ) -> DataFrame:
     """(clip_id, sr_src, n_in, n_out, rms_in, rms_out, gain_q15, crc_out)
     — the full canonical-form prep (rate then loudness) from ONE decode.
@@ -79,11 +74,9 @@ def prep_audio(
     proportional to codec cost: a real flac/opus/mp3 kernel through the
     registry seam is 10-100x the kernel math, and the bytes-column scan
     alone is the dominant I/O at 100 TB."""
-    st = _make_prep_udf(int(target_sr), int(target_rms), int(max_gain_q15))(
-        F.col(bytes_col), F.col(codec_col), F.col(sr_col)
-    ).alias("__p")
+    st = _make_prep_udf(int(target_sr), int(target_rms))().alias("__p")
     return (
-        clips.select(F.col(id_col), F.col(sr_col), st)
+        clips.select("clip_id", "sr_hz", st)
         .where(F.col("__p").isNotNull())
-        .select(F.col(id_col), F.col(sr_col).cast("long").alias("sr_src"), "__p.*")
+        .select("clip_id", F.col("sr_hz").cast("long").alias("sr_src"), "__p.*")
     )

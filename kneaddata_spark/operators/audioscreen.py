@@ -115,14 +115,7 @@ def screens_of(x, sr: int) -> tuple:
 _screen_udf = clip_udf(_SCREEN_T, screens_of, rate=True)
 
 
-def screen_audio(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-    passthrough: tuple[str, ...] = (),
-) -> DataFrame:
+def screen_audio(clips: DataFrame, passthrough: tuple[str, ...] = ()) -> DataFrame:
     """(clip_id, n_segments, speech_frames, snr_status, snr_ratio,
     pitch_status, f0_centi_hz, periodicity_permille, hum_status,
     dc_offset, hum_permille, hum_hz, bw_status, est_nyquist_hz,
@@ -142,10 +135,7 @@ def screen_audio(
     the same projection), so compositions like rate.speech_rate read
     transcript next to the verdicts without a join or second decode."""
     e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(sr_col).alias("sr_hz"),
-        *[F.col(c) for c in passthrough],
-        _screen_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("a"),
+        "clip_id", "sr_hz", *passthrough, _screen_udf().alias("a")
     ).where(F.col("a").isNotNull())
     snr_keep = (F.col("a.snr_status") == "clean") | (
         (F.col("a.snr_status") == "ok") & (F.col("a.snr_ratio") >= rules.SNR_MIN_RATIO)

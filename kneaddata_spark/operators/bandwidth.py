@@ -121,22 +121,14 @@ def _band_row(x: np.ndarray, sr: int) -> tuple:
 _bw_udf = clip_udf(_BW_T, _band_row, rate=True)
 
 
-def bandwidth_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def bandwidth_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, sr_hz, status, n_samples, oct1_permille, oct2_permille,
     oct3_permille, est_nyquist_hz, narrowband, keep) — one row per
     decodable clip; narrowband/keep are JVM-side integer comparisons
     (2*est_nyquist_hz < sr_hz). Zero shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(sr_col).alias("sr_hz"),
-        _bw_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("b"),
-    ).where(F.col("b").isNotNull())
+    e = clips.select("clip_id", "sr_hz", _bw_udf().alias("b")).where(
+        F.col("b").isNotNull()
+    )
     narrow = F.coalesce(
         2 * F.col("b.est_nyquist_hz") < F.col("sr_hz"), F.lit(False)
     )

@@ -97,21 +97,14 @@ _CLICK_T = T.StructType(
 _click_udf = clip_udf(_CLICK_T, click_of, rate=True)
 
 
-def click_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def click_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, status, n_samples, d2_mad, n_click_samples,
     n_click_events, max_abs_d2, clicks_per_min, click_detected, keep) —
     one row per decodable clip; verdicts are JVM-side integer
     comparisons. Zero shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _click_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("c"),
-    ).where(F.col("c").isNotNull())
+    e = clips.select("clip_id", _click_udf().alias("c")).where(
+        F.col("c").isNotNull()
+    )
     det = F.coalesce(
         F.col("c.clicks_per_min") >= rules.CLICK_MAX_PER_MIN, F.lit(False)
     )

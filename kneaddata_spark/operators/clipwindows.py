@@ -43,10 +43,6 @@ def clip_windows(
     clips: DataFrame,
     win_ms: int = 2000,
     stride_ms: int = 1000,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
 ) -> DataFrame:
     """(clip_id, win_idx, start_ms, n_samples, pcm_codec, win_bytes) —
     one row per full fixed-duration window. Integer-exact: win/stride in
@@ -66,10 +62,7 @@ def clip_windows(
         f"substring(bytes, 41, 4) = {le_u32_sql('octet_length(bytes) - 44')})"
     )
     a = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(codec_col).alias("codec"),
-        F.col(sr_col).cast("long").alias("sr_hz"),
-        F.col(bytes_col).alias("bytes"),
+        "clip_id", "codec", F.col("sr_hz").cast("long").alias("sr_hz"), "bytes"
     ).select(
         "*",
         # 1-based payload start, bytes/sample, sample count — NULL when the

@@ -35,21 +35,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .. import rules
-from .fbank import _FRAMES_UDF
+from .fbank import clip_frames
 
 __all__ = ["cmvn_over", "cmvn_stats", "cmvn_frames"]
-
-
-def _frames_plan(
-    clips: DataFrame, id_col: str, bytes_col: str, codec_col: str, sr_col: str
-) -> DataFrame:
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _FRAMES_UDF(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("f"),
-    ).where(F.col("f").isNotNull())
-    return e.select("clip_id", F.col("f.frames").alias("frames")).where(
-        F.size("frames") > 0
-    )
 
 
 def cmvn_over(frames_df: DataFrame) -> DataFrame:
@@ -117,13 +105,7 @@ def cmvn_over(frames_df: DataFrame) -> DataFrame:
     return e.withColumn("normalized", normalized)
 
 
-def cmvn_stats(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def cmvn_stats(clips: DataFrame) -> DataFrame:
     """Scalar witness panel: (clip_id, n_frames, n_mels,
     max_abs_band_mean_micro, min_band_var_milli, max_band_var_milli,
     norm_digest_milli). The first three audit the normalization's own
@@ -132,9 +114,7 @@ def cmvn_stats(
     post-CMVN variance is 1.000 (milli) — and the digest fingerprints
     the normalized matrix. One Arrow stage, zero shuffles."""
     n_mels = int(rules.FBANK_N_MELS)
-    e = cmvn_over(
-        _frames_plan(clips, id_col, bytes_col, codec_col, sr_col)
-    ).withColumn("n_frames", F.size("frames"))
+    e = cmvn_over(clip_frames(clips)).withColumn("n_frames", F.size("frames"))
     nf = F.col("n_frames").cast("double")
     zeros = F.array_repeat(F.lit(0.0), n_mels)
     nsum = F.aggregate(
@@ -170,17 +150,11 @@ def cmvn_stats(
     )
 
 
-def cmvn_frames(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def cmvn_frames(clips: DataFrame) -> DataFrame:
     """The training surface: (clip_id, frame_idx, mel array<float>) with
     per-clip mean-variance normalization applied. Same single Arrow
     stage; fan-out is a JVM explode."""
-    e = cmvn_over(_frames_plan(clips, id_col, bytes_col, codec_col, sr_col))
+    e = cmvn_over(clip_frames(clips))
     return e.select("clip_id", F.explode("normalized").alias("fr")).select(
         "clip_id",
         F.col("fr.frame_idx").alias("frame_idx"),

@@ -9,9 +9,9 @@ like the resample/noise kernels.
 
 Engine shape (the speed_perturb pattern): ONE Arrow stage decodes s16
 once, compands, expands back, and emits SCALAR witnesses (code crc,
-round-trip crc, max abs error, integer companding SNR) — mu-law payload
+round-trip crc, max abs error, integer companding SNR) — coded payload
 bytes stay Python-side (the `bytes` boundary rule), consumers key on
-(clip_id, crc_mu). Zero shuffles.
+(clip_id, law, crc_code). Zero shuffles.
 
 Reference lineage: the trimmed-output re-emission stage (kneaddata
 writes transformed reads back per stage, run.py tmp outputs) — here the
@@ -104,9 +104,6 @@ def _make_g711_udf(laws: tuple):
 def g711_transcode(
     clips: DataFrame,
     laws: tuple = ("mulaw", "alaw"),
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
 ) -> DataFrame:
     """(clip_id, law, n_samples, crc_code, crc_rt, max_abs_err, meansq_x,
     snr_q) — |laws| rows per decodable clip, BOTH companding laws from
@@ -115,33 +112,13 @@ def g711_transcode(
     for law in laws:
         if law not in ("mulaw", "alaw"):
             raise ValueError(f"unknown companding law: {law}")
-    st = _make_g711_udf(tuple(laws))(F.col(bytes_col), F.col(codec_col)).alias("__g")
+    st = _make_g711_udf(tuple(laws))().alias("__g")
     ex = (
-        clips.select(F.col(id_col), st)
+        clips.select("clip_id", st)
         .where(F.col("__g").isNotNull())
-        .select(F.col(id_col), F.explode("__g").alias("r"))
+        .select("clip_id", F.explode("__g").alias("r"))
     )
-    return ex.select(F.col(id_col), "r.*")
-
-
-def mulaw_transcode(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-) -> DataFrame:
-    """Back-compat single-law shape: mu-law only, historical column
-    names (crc_mu)."""
-    out = g711_transcode(clips, ("mulaw",), id_col, bytes_col, codec_col)
-    return out.select(
-        F.col(id_col),
-        "n_samples",
-        F.col("crc_code").alias("crc_mu"),
-        "crc_rt",
-        "max_abs_err",
-        "meansq_x",
-        "snr_q",
-    )
+    return ex.select("clip_id", "r.*")
 
 
 # A-law — G.711's other half (European trunks); same segment structure,

@@ -118,17 +118,11 @@ def declip_of(x: np.ndarray) -> tuple:
 _declip_udf = clip_udf(_DECLIP_T, declip_of)
 
 
-def declip_stats(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-) -> DataFrame:
+def declip_stats(clips: DataFrame) -> DataFrame:
     """(clip_id, n_samples, n_clipped, n_runs, repaired,
     residual_clip_permille, max_abs_change, crc_raw, crc_repaired) —
     one row per decodable clip. Clean clips report n_clipped = 0 with
     crc_repaired == crc_raw; repaired clips report residual permille 0
     unless unrecoverable. One Arrow stage, zero shuffles."""
-    st = _declip_udf(F.col(bytes_col), F.col(codec_col)).alias("__d")
-    ex = clips.select(F.col(id_col), st).where(F.col("__d").isNotNull())
-    return ex.select(F.col(id_col), "__d.*")
+    ex = clips.select("clip_id", _declip_udf().alias("__d"))
+    return ex.where(F.col("__d").isNotNull()).select("clip_id", "__d.*")

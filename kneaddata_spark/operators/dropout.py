@@ -107,22 +107,15 @@ _DROP_T = T.StructType(
 _dropout_udf = clip_udf(_DROP_T, dropout_of, rate=True)
 
 
-def dropout_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def dropout_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, status, n_samples, active_n, n_dropouts, dropout_samples,
     max_dropout_run, n_stuck, stuck_samples, dropout_permille,
     stuck_permille, dropout_detected, stuck_detected, keep) — one row per
     decodable clip; verdicts are JVM-side integer comparisons. Zero
     shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _dropout_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("d"),
-    ).where(F.col("d").isNotNull())
+    e = clips.select("clip_id", _dropout_udf().alias("d")).where(
+        F.col("d").isNotNull()
+    )
     drop = F.coalesce(
         F.col("d.dropout_permille") >= rules.DROPOUT_MAX_PERMILLE, F.lit(False)
     )

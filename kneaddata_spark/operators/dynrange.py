@@ -89,21 +89,14 @@ _DR_T = T.StructType(
 _dr_udf = clip_udf(_DR_T, dr_of, rate=True)
 
 
-def dynrange_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def dynrange_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, status, n_frames, n_active, p10_energy, p95_energy,
     dr_ratio_permille, compressed, keep) — one row per decodable clip;
     verdicts are JVM-side integer comparisons against
     rules.DR_COMPRESSED_MIN_PERMILLE. Zero shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _dr_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("d"),
-    ).where(F.col("d").isNotNull())
+    e = clips.select("clip_id", _dr_udf().alias("d")).where(
+        F.col("d").isNotNull()
+    )
     comp = (F.col("d.status") == "ok") & (
         F.col("d.dr_ratio_permille") >= rules.DR_COMPRESSED_MIN_PERMILLE
     )

@@ -46,7 +46,7 @@ from pyspark.sql import types as T
 from .. import rules
 from ..functions.audio import clip_udf
 
-__all__ = ["fbank_stats", "fbank_frames", "logmel_of", "mel_filterbank"]
+__all__ = ["clip_frames", "fbank_stats", "fbank_frames", "logmel_of", "mel_filterbank"]
 
 
 def _hz_to_mel(f):
@@ -146,42 +146,38 @@ _STATS_UDF = _make_fbank_udf(with_frames=False)
 _FRAMES_UDF = _make_fbank_udf(with_frames=True)
 
 
-def fbank_stats(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def fbank_stats(clips: DataFrame) -> DataFrame:
     """(clip_id, n_frames, n_mels, dominant_band, logmel_mean_milli,
     logmel_std_milli) — one row per decodable clip (clips shorter than a
     window report n_frames = 0). ONE Arrow stage, zero shuffles; the
     frame matrices never cross back to the JVM on this path."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _STATS_UDF(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("f"),
-    ).where(F.col("f").isNotNull())
+    e = clips.select("clip_id", _STATS_UDF().alias("f")).where(
+        F.col("f").isNotNull()
+    )
     return e.select("clip_id", "f.stats.*")
 
 
-def fbank_frames(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def clip_frames(clips: DataFrame) -> DataFrame:
+    """(clip_id, frames array<struct<frame_idx, mel>>) for every clip with
+    at least one full frame — the frames schema the feature family
+    (mfcc, cmvn, specaugment) composes over. One Arrow stage."""
+    e = clips.select("clip_id", _FRAMES_UDF().alias("f")).where(
+        F.col("f").isNotNull()
+    )
+    return e.select("clip_id", F.col("f.frames").alias("frames")).where(
+        F.size("frames") > 0
+    )
+
+
+def fbank_frames(clips: DataFrame) -> DataFrame:
     """(clip_id, frame_idx, mel array<float>) — the training-feature
     surface, one row per 10 ms frame. Same single Arrow stage; the
     fan-out is a JVM posexplode under whole-stage codegen (clips with
     no full frame emit nothing)."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _FRAMES_UDF(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("f"),
-    ).where(F.col("f").isNotNull())
-    return e.select(
-        "clip_id", F.explode(F.col("f.frames")).alias("fr")
-    ).select(
+    e = clips.select("clip_id", _FRAMES_UDF().alias("f")).where(
+        F.col("f").isNotNull()
+    )
+    return e.select("clip_id", F.explode(F.col("f.frames")).alias("fr")).select(
         "clip_id",
         F.col("fr.frame_idx").alias("frame_idx"),
         F.col("fr.mel").alias("mel"),

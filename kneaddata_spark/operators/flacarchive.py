@@ -35,6 +35,8 @@ from pyspark.sql import types as T
 from ..functions.audio import clip_udf
 from ..functions.flaccodec import decode_flac, encode_flac
 
+BLOCK_SIZE = 4096  # samples per FLAC frame
+
 _FLAC_T = T.StructType(
     [
         T.StructField("n_samples", T.LongType()),
@@ -49,25 +51,25 @@ _FLAC_T = T.StructType(
 )
 
 
-def _make_flac_udf(block_size: int):
-    def flac_of(x: np.ndarray) -> tuple:
-        x = x.astype(np.int16, copy=False)
-        enc = encode_flac(x, 16000, block_size=block_size)
-        rt = decode_flac(enc)
-        return (
-            int(len(x)),
-            int(2 * len(x)),
-            int(len(enc)),
-            # integer permille (the shared-threshold convention:
-            # Spark/DuckDB integer div agree, float round doesn't)
-            int(len(enc) * 1000 // (2 * len(x))),
-            int(zlib.crc32(x.astype("<i2").tobytes())),
-            int(zlib.crc32(rt.astype("<i2").tobytes())) if rt is not None else -1,
-            bool(rt is not None and np.array_equal(rt, x)),
-            int((len(x) + block_size - 1) // block_size),
-        )
+def flac_of(x: np.ndarray) -> tuple:
+    x = x.astype(np.int16, copy=False)
+    enc = encode_flac(x, 16000, block_size=BLOCK_SIZE)
+    rt = decode_flac(enc)
+    return (
+        int(len(x)),
+        int(2 * len(x)),
+        int(len(enc)),
+        # integer permille (the shared-threshold convention:
+        # Spark/DuckDB integer div agree, float round doesn't)
+        int(len(enc) * 1000 // (2 * len(x))),
+        int(zlib.crc32(x.astype("<i2").tobytes())),
+        int(zlib.crc32(rt.astype("<i2").tobytes())) if rt is not None else -1,
+        bool(rt is not None and np.array_equal(rt, x)),
+        int((len(x) + BLOCK_SIZE - 1) // BLOCK_SIZE),
+    )
 
-    return clip_udf(_FLAC_T, flac_of)
+
+_flac_udf = clip_udf(_FLAC_T, flac_of)
 
 
 _RE_T = T.StructType(
@@ -80,30 +82,26 @@ _RE_T = T.StructType(
 )
 
 
-def _make_reencode_udf(block_size: int):
-    def reencode_of(x: np.ndarray, s, e) -> "tuple | None":
-        lo = int(s or 0)
-        hi = int(e) if e is not None else len(x)
-        if hi <= lo or hi > len(x):
-            return None
-        seg = x[lo:hi].astype(np.int16, copy=False)
-        enc = encode_flac(seg, 16000, block_size=block_size)
-        rt = decode_flac(enc)
-        return (
-            enc,
-            int(len(seg)),
-            int(len(enc)),
-            bool(rt is not None and np.array_equal(rt, seg)),
-        )
-
-    return clip_udf(_RE_T, reencode_of)
+def reencode_of(x: np.ndarray, s, e) -> "tuple | None":
+    lo = int(s or 0)
+    hi = int(e) if e is not None else len(x)
+    if hi <= lo or hi > len(x):
+        return None
+    seg = x[lo:hi].astype(np.int16, copy=False)
+    enc = encode_flac(seg, 16000, block_size=BLOCK_SIZE)
+    rt = decode_flac(enc)
+    return (
+        enc,
+        int(len(seg)),
+        int(len(enc)),
+        bool(rt is not None and np.array_equal(rt, seg)),
+    )
 
 
-def reencode_trimmed(
-    qc_out: DataFrame,
-    block_size: int = 4096,
-    id_col: str = "clip_id",
-) -> DataFrame:
+_reencode_udf = clip_udf(_RE_T, reencode_of)
+
+
+def reencode_trimmed(qc_out: DataFrame) -> DataFrame:
     """Archival sink for the QC output's `needs_reencode` rows (real FLAC
     and any future compressed codec): decode the ORIGINAL payload once,
     slice [trim_start, trim_end), re-encode as FLAC, and emit the trimmed
@@ -120,16 +118,14 @@ def reencode_trimmed(
     Reference lineage: kneaddata re-writes trimmed reads per stage
     (run.py:372-450 tmp outputs); this is that re-emission for payloads the
     JVM byte algebra cannot slice."""
-    st = _make_reencode_udf(int(block_size))(
-        F.col("bytes"), F.col("codec"), F.col("trim_start"), F.col("trim_end")
-    ).alias("__r")
+    st = _reencode_udf(F.col("trim_start"), F.col("trim_end")).alias("__r")
     ex = (
         qc_out.where(F.col("needs_reencode"))
-        .select(F.col(id_col), F.col("sr_hz"), F.col("dur_ms"), st)
+        .select("clip_id", "sr_hz", "dur_ms", st)
         .where(F.col("__r").isNotNull())
     )
     return ex.select(
-        F.col(id_col),
+        "clip_id",
         F.col("__r.bytes").alias("bytes"),
         F.lit("flac").alias("codec"),
         F.col("sr_hz"),
@@ -140,20 +136,11 @@ def reencode_trimmed(
     )
 
 
-def flac_archive(
-    clips: DataFrame,
-    block_size: int = 4096,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-) -> DataFrame:
+def flac_archive(clips: DataFrame) -> DataFrame:
     """(clip_id, n_samples, raw_bytes, flac_bytes, ratio_permille,
     crc_pcm, crc_rt, roundtrip_exact, n_frames) — one row per decodable
     clip. Undecodable clips drop (the screens' NULL rule). roundtrip_exact
     is the per-row lossless proof: crc_rt == crc_pcm for every emitted row
     (pytest-pinned; also an aggregate gate in the driver query's test)."""
-    st = _make_flac_udf(int(block_size))(
-        F.col(bytes_col), F.col(codec_col)
-    ).alias("__f")
-    ex = clips.select(F.col(id_col), st).where(F.col("__f").isNotNull())
-    return ex.select(F.col(id_col), "__f.*")
+    ex = clips.select("clip_id", _flac_udf().alias("__f"))
+    return ex.where(F.col("__f").isNotNull()).select("clip_id", "__f.*")

@@ -126,22 +126,15 @@ def _hum_row(x: np.ndarray, sr: int) -> tuple:
 _hum_udf = clip_udf(_HUM_T, _hum_row, rate=True)
 
 
-def hum_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def hum_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, status, n_samples, dc_offset, hum50_permille,
     hum60_permille, hum_permille, hum_hz, hum_detected, dc_detected,
     keep) — one row per decodable clip; verdicts are JVM-side integer
     comparisons against rules.HUM_MAX_PERMILLE / rules.DC_OFFSET_MAX.
     Zero shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _hum_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("h"),
-    ).where(F.col("h").isNotNull())
+    e = clips.select("clip_id", _hum_udf().alias("h")).where(
+        F.col("h").isNotNull()
+    )
     hum = F.coalesce(
         F.col("h.hum_permille") >= rules.HUM_MAX_PERMILLE, F.lit(False)
     )

@@ -48,13 +48,7 @@ def dhash64(px: np.ndarray) -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def image_dhash(
-    df: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-    mime_col: str = "mime",
-    strict: bool = False,
-) -> DataFrame:
+def image_dhash(df: DataFrame, strict: bool = False) -> DataFrame:
     """(id, dhash) per image — the one Arrow decode stage. Undecodable
     payloads yield NULL dhash (or raise under strict=True, the marked
     missing-kernel mode, like image_feature_stage)."""
@@ -64,7 +58,7 @@ def image_dhash(
 
         for pdf in it:
             ids, hs = [], []
-            for mid, raw, mime in zip(pdf[id_col], pdf[bytes_col], pdf[mime_col]):
+            for mid, raw, mime in zip(pdf["media_id"], pdf["bytes"], pdf["mime"]):
                 decode = multimodal.IMAGE_DECODERS.get(mime)
                 px = decode(bytes(raw)) if (decode and raw is not None) else None
                 if px is None:
@@ -75,10 +69,10 @@ def image_dhash(
                     continue
                 ids.append(mid)
                 hs.append(dhash64(px))
-            yield pd.DataFrame({id_col: ids, "dhash": pd.array(hs, dtype="Int64")})
+            yield pd.DataFrame({"media_id": ids, "dhash": pd.array(hs, dtype="Int64")})
 
-    return df.select(id_col, bytes_col, mime_col).mapInPandas(
-        stage, schema=f"{id_col} string, dhash long"
+    return df.select("media_id", "bytes", "mime").mapInPandas(
+        stage, schema="media_id string, dhash long"
     )
 
 
@@ -136,24 +130,15 @@ def banded_hamming_pairs(
     ).where(F.col("hamming") <= max_hamming)
 
 
-def image_dup_pairs(
-    df: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-    mime_col: str = "mime",
-    max_hamming: int = 3,
-    strict: bool = False,
-) -> DataFrame:
+def image_dup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate image pairs (id_a < id_b, Hamming(dhash) <=
     max_hamming); see banded_hamming_pairs for the candidate shape."""
     if max_hamming >= N_BANDS:  # fail before any decode work is planned
         raise ValueError(
             f"max_hamming={max_hamming} breaks the {N_BANDS}-band pigeonhole"
         )
-    h = image_dhash(df, id_col, bytes_col, mime_col, strict=strict).where(
-        F.col("dhash").isNotNull()
-    )
-    return banded_hamming_pairs(h, id_col, "dhash", max_hamming)
+    h = image_dhash(df).where(F.col("dhash").isNotNull())
+    return banded_hamming_pairs(h, "media_id", "dhash", max_hamming)
 
 
 def video_dhash64(frames: "list[np.ndarray]") -> int:
@@ -170,18 +155,9 @@ def video_dhash64(frames: "list[np.ndarray]") -> int:
     return out - (1 << 64) if out >= (1 << 63) else out
 
 
-def video_dhash(
-    df: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-    mime_col: str = "mime",
-    frame_stride: int = 1,
-    strict: bool = False,
-) -> DataFrame:
+def video_dhash(df: DataFrame, strict: bool = False) -> DataFrame:
     """(id, vhash) per video — ONE Arrow stage through the
-    multimodal.VIDEO_DECODERS registry, sampling every frame_stride-th
-    frame before hashing (the cost dial for long clips: the signature is
-    a majority vote, so a stride subsample barely moves it). Undecodable
+    multimodal.VIDEO_DECODERS registry, hashing every frame. Undecodable
     payloads yield NULL (or raise under strict=True)."""
 
     def stage(it):
@@ -189,7 +165,7 @@ def video_dhash(
 
         for pdf in it:
             ids, hs = [], []
-            for mid, raw, mime in zip(pdf[id_col], pdf[bytes_col], pdf[mime_col]):
+            for mid, raw, mime in zip(pdf["media_id"], pdf["bytes"], pdf["mime"]):
                 decode = multimodal.VIDEO_DECODERS.get(mime)
                 frames = decode(bytes(raw)) if (decode and raw is not None) else None
                 if not frames:
@@ -199,23 +175,15 @@ def video_dhash(
                     hs.append(None)
                     continue
                 ids.append(mid)
-                hs.append(video_dhash64(frames[::frame_stride]))
-            yield pd.DataFrame({id_col: ids, "vhash": pd.array(hs, dtype="Int64")})
+                hs.append(video_dhash64(frames))
+            yield pd.DataFrame({"media_id": ids, "vhash": pd.array(hs, dtype="Int64")})
 
-    return df.select(id_col, bytes_col, mime_col).mapInPandas(
-        stage, schema=f"{id_col} string, vhash long"
+    return df.select("media_id", "bytes", "mime").mapInPandas(
+        stage, schema="media_id string, vhash long"
     )
 
 
-def video_dup_pairs(
-    df: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-    mime_col: str = "mime",
-    max_hamming: int = 3,
-    frame_stride: int = 1,
-    strict: bool = False,
-) -> DataFrame:
+def video_dup_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Near-duplicate video pairs (id_a < id_b, Hamming(majority-dhash)
     <= max_hamming) — same banded candidate shape as images; video bytes
     never leave the one Arrow decode stage."""
@@ -223,28 +191,18 @@ def video_dup_pairs(
         raise ValueError(
             f"max_hamming={max_hamming} breaks the {N_BANDS}-band pigeonhole"
         )
-    h = video_dhash(
-        df, id_col, bytes_col, mime_col, frame_stride=frame_stride, strict=strict
-    ).where(F.col("vhash").isNotNull())
-    return banded_hamming_pairs(h, id_col, "vhash", max_hamming)
+    h = video_dhash(df).where(F.col("vhash").isNotNull())
+    return banded_hamming_pairs(h, "media_id", "vhash", max_hamming)
 
 
-def image_band_index(
-    df: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-    mime_col: str = "mime",
-    strict: bool = False,
-) -> DataFrame:
+def image_band_index(df: DataFrame) -> DataFrame:
     """(band, chunk, id, dhash) — the stored corpus-side index an ingest
     pipeline maintains (write it bucketed/partitioned by band, chunk):
     each image contributes N_BANDS rows; the corpus is decoded ONCE when
     the index is built and never again."""
-    h = image_dhash(df, id_col, bytes_col, mime_col, strict=strict).where(
-        F.col("dhash").isNotNull()
-    )
+    h = image_dhash(df).where(F.col("dhash").isNotNull())
     return h.select(
-        id_col,
+        "media_id",
         "dhash",
         F.explode(
             F.array(
@@ -259,17 +217,13 @@ def image_band_index(
                 ]
             )
         ).alias("bc"),
-    ).select("bc.band", "bc.chunk", F.col(id_col).alias("id"), "dhash")
+    ).select("bc.band", "bc.chunk", F.col("media_id").alias("id"), "dhash")
 
 
 def incremental_image_dedup(
     new_images: DataFrame,
     band_index: DataFrame,
-    id_col: str = "media_id",
-    bytes_col: str = "bytes",
-    mime_col: str = "mime",
     max_hamming: int = 3,
-    strict: bool = False,
 ) -> "tuple[DataFrame, DataFrame]":
     """Screen an ingest batch of images against a stored corpus band
     index: (survivors, flagged) — the image analog of
@@ -289,7 +243,7 @@ def incremental_image_dedup(
         raise ValueError(
             f"max_hamming={max_hamming} breaks the {N_BANDS}-band pigeonhole"
         )
-    probe = image_band_index(new_images, id_col, bytes_col, mime_col, strict=strict)
+    probe = image_band_index(new_images)
     flagged_ids = persist_tracked(
         probe.join(
             band_index.select(
@@ -298,9 +252,9 @@ def incremental_image_dedup(
             ["band", "chunk"],
         )
         .where(F.expr(f"bit_count(dhash ^ __seen_h) <= {max_hamming}"))
-        .select(F.col("id").alias(id_col))
+        .select(F.col("id").alias("media_id"))
         .distinct()
     )
-    flagged = new_images.join(F.broadcast(flagged_ids), id_col, "left_semi")
-    survivors = new_images.join(F.broadcast(flagged_ids), id_col, "left_anti")
+    flagged = new_images.join(F.broadcast(flagged_ids), "media_id", "left_semi")
+    survivors = new_images.join(F.broadcast(flagged_ids), "media_id", "left_anti")
     return survivors, flagged

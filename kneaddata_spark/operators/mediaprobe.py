@@ -68,20 +68,13 @@ def _le32(col: Column, pos: int) -> Column:
     ).cast("long")
 
 
-def media_probe(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-    dur_col: str = "dur_ms",
-) -> DataFrame:
+def media_probe(clips: DataFrame) -> DataFrame:
     """(clip_id, codec, sr_hz, dur_ms, probe_kind, probe_status,
     container_sr_hz, probed_n_samples, probed_dur_ms, dur_delta_ms,
     sr_mismatch, dur_mismatch, keep) — one row per input row (nothing is
     dropped: an audit reports). Pure Column algebra: zero Python, zero
     shuffles, one codegen stage."""
-    b = F.col("__raw")
+    b = F.col("bytes")
     nb = F.length(b)
     codec = F.col("codec")
 
@@ -158,13 +151,7 @@ def media_probe(
     probed_dur = F.expr("1000 * __n div __sr")
 
     out = (
-        clips.select(
-            F.col(id_col).alias("clip_id"),
-            F.col(codec_col).alias("codec"),
-            F.col(sr_col).alias("sr_hz"),
-            F.col(dur_col).alias("dur_ms"),
-            F.col(bytes_col).alias("__raw"),
-        )
+        clips.select("clip_id", "codec", "sr_hz", "dur_ms", "bytes")
         .withColumn("probe_kind", kind)
         .withColumn("probe_status", status)
         .withColumn("container_sr_hz", container_sr)

@@ -39,7 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import rules
-from .fbank import _FRAMES_UDF
+from .fbank import clip_frames
 
 __all__ = ["MFCC_N_CEPS", "dct_weights", "mfcc_over", "mfcc_stats", "mfcc_frames"]
 
@@ -69,43 +69,24 @@ def _dot(mel: Column, weights: list) -> Column:
     )
 
 
-def _frames_plan(
-    clips: DataFrame, id_col: str, bytes_col: str, codec_col: str, sr_col: str
-) -> DataFrame:
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _FRAMES_UDF(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("f"),
-    ).where(F.col("f").isNotNull())
-    return e.select("clip_id", F.col("f.frames").alias("frames")).where(
-        F.size("frames") > 0
-    )
-
-
-def mfcc_over(frames_df: DataFrame, n_ceps: int = MFCC_N_CEPS) -> DataFrame:
+def mfcc_over(frames_df: DataFrame) -> DataFrame:
     """Attach `ceps` (array<struct<frame_idx:int, c:array<double>>>) to
     any df carrying the fbank frames schema (clip_id, frames) — the
     composition seam (fbank output or SpecAugment-masked frames alike).
     Pure Column algebra; no Python, no shuffle."""
     n_mels = int(rules.FBANK_N_MELS)
-    w = dct_weights(n_ceps, n_mels)
+    w = dct_weights(MFCC_N_CEPS, n_mels)
     ceps = F.transform(
         F.col("frames"),
         lambda fr: F.struct(
             fr["frame_idx"].alias("frame_idx"),
-            F.array(*[_dot(fr["mel"], w[k]) for k in range(n_ceps)]).alias("c"),
+            F.array(*[_dot(fr["mel"], wk) for wk in w]).alias("c"),
         ),
     )
     return frames_df.withColumn("ceps", ceps)
 
 
-def mfcc_stats(
-    clips: DataFrame,
-    n_ceps: int = MFCC_N_CEPS,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def mfcc_stats(clips: DataFrame) -> DataFrame:
     """Scalar witness panel: (clip_id, n_frames, n_ceps, c0_sum_milli,
     cep_digest_milli). c0_sum_milli is the integer sum of the per-frame
     half-up-milli c0 (energy-like term; a SUM, not a mean — no division,
@@ -113,9 +94,7 @@ def mfcc_stats(
     cep_digest_milli is the half-up milli sum over every (frame,
     coefficient) cell — a deterministic fingerprint of the whole
     cepstral matrix. One Arrow stage, zero shuffles, DCT in JVM HOFs."""
-    e = mfcc_over(
-        _frames_plan(clips, id_col, bytes_col, codec_col, sr_col), n_ceps
-    ).withColumn("n_frames", F.size("frames"))
+    e = mfcc_over(clip_frames(clips)).withColumn("n_frames", F.size("frames"))
     milli = lambda v: F.floor(v * 1000.0 + 0.5).cast("long")  # noqa: E731
     c0_sum = F.aggregate(
         F.col("ceps"),
@@ -133,24 +112,17 @@ def mfcc_stats(
     return e.select(
         "clip_id",
         F.col("n_frames").cast("long").alias("n_frames"),
-        F.lit(n_ceps).cast("long").alias("n_ceps"),
+        F.lit(MFCC_N_CEPS).cast("long").alias("n_ceps"),
         c0_sum.alias("c0_sum_milli"),
         digest.alias("cep_digest_milli"),
     )
 
 
-def mfcc_frames(
-    clips: DataFrame,
-    n_ceps: int = MFCC_N_CEPS,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def mfcc_frames(clips: DataFrame) -> DataFrame:
     """The training surface: (clip_id, frame_idx, mfcc array<float>) —
-    one row per 10 ms frame, n_ceps coefficients. Same single Arrow
+    one row per 10 ms frame, MFCC_N_CEPS coefficients. Same single Arrow
     stage; fan-out is a JVM explode."""
-    e = mfcc_over(_frames_plan(clips, id_col, bytes_col, codec_col, sr_col), n_ceps)
+    e = mfcc_over(clip_frames(clips))
     return e.select("clip_id", F.explode("ceps").alias("fr")).select(
         "clip_id",
         F.col("fr.frame_idx").alias("frame_idx"),

@@ -114,22 +114,15 @@ _PITCH_T = T.StructType(
 _pitch_udf = clip_udf(_PITCH_T, pitch_of, rate=True)
 
 
-def pitch_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def pitch_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, status, best_lag, f0_centi_hz, periodicity_permille,
     voiced, speechlike) — one row per decodable clip; verdict columns are
     JVM-side integer comparisons against the rules constants (shared
     thresholds stay integer — the cast-truncation discipline). Zero
     shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _pitch_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("p"),
-    ).where(F.col("p").isNotNull())
+    e = clips.select("clip_id", _pitch_udf().alias("p")).where(
+        F.col("p").isNotNull()
+    )
     voiced = (F.col("p.status") == "ok") & (
         F.col("p.periodicity_permille") >= rules.PITCH_VOICED_MIN_PERMILLE
     )

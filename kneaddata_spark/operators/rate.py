@@ -79,14 +79,7 @@ def speaking_rate(
     )
 
 
-def speech_rate(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-    text_col: str = "transcript",
-) -> DataFrame:
+def speech_rate(clips: DataFrame) -> DataFrame:
     """Speaking rate against SPEECH time, not clip time: chars-per-second
     over the VAD-detected speech span (speech_frames × VAD_FRAME_MS) —
     the refinement of speaking_rate that doesn't punish clips with long
@@ -99,14 +92,12 @@ def speech_rate(
     applied to speech-time cps."""
     from .audioscreen import screen_audio
 
-    s = screen_audio(
-        clips, id_col, bytes_col, codec_col, sr_col, passthrough=(text_col,)
-    )
-    t = F.trim(F.col(text_col))
+    s = screen_audio(clips, passthrough=("transcript",))
+    t = F.trim(F.col("transcript"))
     n_chars = F.coalesce(F.length(t), F.lit(0)).cast("long")
     speech_ms = (F.col("speech_frames") * rules.VAD_FRAME_MS).cast("long")
     base = s.select(
-        F.col("clip_id").alias(id_col) if id_col != "clip_id" else F.col("clip_id"),
+        "clip_id",
         n_chars.alias("n_chars"),
         F.col("n_segments"),
         speech_ms.alias("speech_ms"),
@@ -114,7 +105,7 @@ def speech_rate(
         .cast("long")
         .alias("__c"),
     ).select(
-        id_col,
+        "clip_id",
         "n_chars",
         "n_segments",
         "speech_ms",
@@ -128,7 +119,7 @@ def speech_rate(
         .otherwise("ok")
     )
     return base.select(
-        id_col,
+        "clip_id",
         "n_chars",
         "n_segments",
         "speech_ms",

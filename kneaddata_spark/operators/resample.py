@@ -86,32 +86,23 @@ def _make_udf(target_sr: int):
     return clip_udf(_RES_T, resample_of, rate=True)
 
 
-def resample_audio(
-    clips: DataFrame,
-    target_sr: int = 16000,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def resample_audio(clips: DataFrame, target_sr: int = 16000) -> DataFrame:
     """(clip_id, sr_src, sr_dst, n_in, n_out, crc_out, passthrough) — one
     row per decodable clip; undecodable payloads/invalid rates drop (a QC
     stage upstream already labeled them). passthrough=1 marks clips
     already at target_sr (crc is then the crc of the ORIGINAL stream —
     the identity shortcut, byte-for-byte). Zero shuffles, one Arrow
     stage."""
-    st = _make_udf(int(target_sr))(
-        F.col(bytes_col), F.col(codec_col), F.col(sr_col)
-    ).alias("__r")
+    st = _make_udf(int(target_sr))().alias("__r")
     return (
-        clips.select(F.col(id_col), F.col(sr_col), st)
+        clips.select("clip_id", "sr_hz", st)
         .where(F.col("__r").isNotNull())
         .select(
-            F.col(id_col),
-            F.col(sr_col).cast("long").alias("sr_src"),
+            "clip_id",
+            F.col("sr_hz").cast("long").alias("sr_src"),
             F.lit(int(target_sr)).cast("long").alias("sr_dst"),
             "__r.*",
-            (F.col(sr_col) == F.lit(int(target_sr))).cast("int").alias("passthrough"),
+            (F.col("sr_hz") == F.lit(int(target_sr))).cast("int").alias("passthrough"),
         )
     )
 
@@ -121,14 +112,16 @@ def resample_audio(
 # rate, bring everyone to one loudness. Integer Q15 fixed-point gain so
 # engine and replica agree bit-for-bit:
 #   rms_in  = isqrt(sum(x^2) // n)            (integer RMS, int64 safe)
-#   gain    = min(target_rms * 32768 // max(rms_in, 1), max_gain_q15)
+#   gain    = min(target_rms * 32768 // max(rms_in, 1), MAX_GAIN_Q15)
 #   y       = clip((x * gain) >> 15, -32768, 32767)
 # (>> on negatives is an arithmetic shift = floor division by 2^15 in
 # both numpy int64 and python int — same rounding everywhere.)
-# max_gain caps the boost on near-silent clips: amplifying noise-floor
+# MAX_GAIN_Q15 caps the boost on near-silent clips: amplifying noise-floor
 # clips 1000x manufactures garbage, not loudness parity.
 
 import math
+
+MAX_GAIN_Q15 = 1 << 18  # 8x boost cap
 
 
 def loudness_gain(x: np.ndarray, target_rms: int, max_gain_q15: int) -> tuple[int, int]:
@@ -158,36 +151,27 @@ _LN_T = T.StructType(
 )
 
 
-def _make_loudnorm_udf(target_rms: int, max_gain_q15: int):
+def _make_loudnorm_udf(target_rms: int):
     def loudnorm_of(x: np.ndarray) -> tuple:
-        rms_in, gain = loudness_gain(x, target_rms, max_gain_q15)
+        rms_in, gain = loudness_gain(x, target_rms, MAX_GAIN_Q15)
         y = apply_gain(x, gain)
-        rms_out, _ = loudness_gain(y, target_rms, max_gain_q15)
+        rms_out, _ = loudness_gain(y, target_rms, MAX_GAIN_Q15)
         return (len(x), rms_in, rms_out, gain, zlib.crc32(y.astype("<i2").tobytes()))
 
     return clip_udf(_LN_T, loudnorm_of)
 
 
-def loudness_normalize(
-    clips: DataFrame,
-    target_rms: int = 4096,
-    max_gain_q15: int = 1 << 18,  # 8x boost cap
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-) -> DataFrame:
+def loudness_normalize(clips: DataFrame, target_rms: int = 4096) -> DataFrame:
     """(clip_id, n, rms_in, rms_out, gain_q15, crc_out) — one row per
     decodable clip, normalized toward target_rms (~ -18 dBFS at the 4096
     default) under the Q15 integer kernel above; normalized BYTES stay
     Python-side (the resample/resize rule), consumers key on
     (clip_id, crc_out). Zero shuffles, one Arrow stage."""
-    st = _make_loudnorm_udf(int(target_rms), int(max_gain_q15))(
-        F.col(bytes_col), F.col(codec_col)
-    ).alias("__l")
+    st = _make_loudnorm_udf(int(target_rms))().alias("__l")
     return (
-        clips.select(F.col(id_col), st)
+        clips.select("clip_id", st)
         .where(F.col("__l").isNotNull())
-        .select(F.col(id_col), "__l.*")
+        .select("clip_id", "__l.*")
     )
 
 
@@ -228,10 +212,6 @@ def _make_speed_udf(rates: tuple):
 def speed_perturb(
     clips: DataFrame,
     rates: tuple = ((9, 10), (10, 10), (11, 10)),
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
 ) -> DataFrame:
     """(clip_id, sr_hz, speed_permille, n_out, dur_out_ms, crc_out) —
     |rates| rows per decodable clip (the augmented training copies; the
@@ -244,16 +224,14 @@ def speed_perturb(
     for num, den in rates:
         if num <= 0 or den <= 0:
             raise ValueError(f"rates must be positive rationals ({num}/{den})")
-    st = _make_speed_udf(tuple((int(n), int(d)) for n, d in rates))(
-        F.col(bytes_col), F.col(codec_col)
-    ).alias("__a")
+    st = _make_speed_udf(tuple((int(n), int(d)) for n, d in rates))().alias("__a")
     ex = clips.select(
-        F.col(id_col), F.col(sr_col).cast("long").alias("sr_hz"), st
-    ).where(F.col("__a").isNotNull() & (F.col(sr_col) > 0)).select(
-        F.col(id_col), "sr_hz", F.explode("__a").alias("r")
+        "clip_id", F.col("sr_hz").cast("long").alias("sr_hz"), st
+    ).where(F.col("__a").isNotNull() & (F.col("sr_hz") > 0)).select(
+        "clip_id", "sr_hz", F.explode("__a").alias("r")
     )
     return ex.select(
-        F.col(id_col),
+        "clip_id",
         "sr_hz",
         F.expr("r.num * 1000 div r.den").cast("long").alias("speed_permille"),
         F.col("r.n_out").alias("n_out"),
@@ -323,9 +301,6 @@ def _make_noise_udf(ratios: tuple):
 def noise_mix(
     clips: DataFrame,
     ratios: tuple = (10, 100),
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
 ) -> DataFrame:
     """(clip_id, snr_ratio, gain_q15, meansq_x, crc_out) — |ratios| noisy
     training copies per decodable clip (ratio 10 ~ 10 dB, 100 ~ 20 dB),
@@ -337,15 +312,13 @@ def noise_mix(
     for ratio in ratios:
         if ratio <= 0:
             raise ValueError(f"ratios must be positive ({ratio})")
-    st = _make_noise_udf(tuple(int(r) for r in ratios))(
-        F.col(bytes_col), F.col(codec_col), F.col(id_col)
-    ).alias("__m")
+    st = _make_noise_udf(tuple(int(r) for r in ratios))(F.col("clip_id")).alias("__m")
     return (
-        clips.select(F.col(id_col), st)
+        clips.select("clip_id", st)
         .where(F.col("__m").isNotNull())
-        .select(F.col(id_col), F.explode("__m").alias("r"))
+        .select("clip_id", F.explode("__m").alias("r"))
         .select(
-            F.col(id_col),
+            "clip_id",
             F.col("r.ratio").alias("snr_ratio"),
             F.col("r.gain_q15").alias("gain_q15"),
             F.col("r.meansq_x").alias("meansq_x"),

@@ -100,21 +100,14 @@ _REVERB_T = T.StructType(
 _reverb_udf = clip_udf(_REVERB_T, reverb_of, rate=True)
 
 
-def reverb_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def reverb_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, status, n_frames, last_active_frame, tail_frames,
     t20_frames, rt60_ms, reverb_detected, keep) — one row per decodable
     clip; verdicts are JVM-side integer comparisons against
     rules.REVERB_MAX_RT60_MS. Zero shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _reverb_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("r"),
-    ).where(F.col("r").isNotNull())
+    e = clips.select("clip_id", _reverb_udf().alias("r")).where(
+        F.col("r").isNotNull()
+    )
     rev = (F.col("r.status") == "ok") & (
         F.col("r.rt60_ms") >= rules.REVERB_MAX_RT60_MS
     )

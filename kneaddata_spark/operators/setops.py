@@ -1,7 +1,7 @@
 """Membership set operations — the reference's joins are ALL equi-semi/anti
 joins on a record id (SURVEY.md §2.4): intersection of per-database clean
-sets, anti-joins against hit lists. Broadcast-hash is the expected physical
-plan (hit sets << input) — callers can pass broadcast=True to force it.
+sets, anti-joins against hit lists. The key side is always broadcast
+(hit sets << input), so every join plans as a broadcast-hash join.
 
 Reference semantics:
  - intersect_kway: run.py:276-301 (`intersect_fastq`) — keep records of the
@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 
 def intersect_kway(
-    base: DataFrame, others: list[DataFrame], key: str = "read_id", broadcast: bool = True
+    base: DataFrame, others: list[DataFrame], key: str = "read_id"
 ) -> DataFrame:
     """Rows of ``base`` whose key appears in EVERY frame of ``others``.
 
@@ -30,10 +30,7 @@ def intersect_kway(
     """
     out = base
     for o in others:
-        keys = o.select(key).distinct()
-        if broadcast:
-            keys = F.broadcast(keys)
-        out = out.join(keys, key, "left_semi")
+        out = out.join(F.broadcast(o.select(key).distinct()), key, "left_semi")
     return out
 
 
@@ -53,24 +50,17 @@ def combine_pair_outputs(
     return out
 
 
-def anti_join_ids(
-    base: DataFrame, hits: DataFrame, key: str = "read_id", broadcast: bool = True
-) -> DataFrame:
+def anti_join_ids(base: DataFrame, hits: DataFrame, key: str = "read_id") -> DataFrame:
     """Remove rows whose key is in ``hits`` (TRF repeat removal, J3)."""
-    h = hits.select(key).distinct()
-    if broadcast:
-        h = F.broadcast(h)
-    return base.join(h, key, "left_anti")
+    return base.join(F.broadcast(hits.select(key).distinct()), key, "left_anti")
 
 
 def keep_only_clean(
-    base: DataFrame, clean: DataFrame, key: str = "read_id", broadcast: bool = True
+    base: DataFrame, clean: DataFrame, key: str = "read_id"
 ) -> tuple[DataFrame, DataFrame]:
     """BMTagger extract-mode routing (run.py:187-211): rows whose key IS in
     the clean set are clean; the complement are contaminants."""
-    c = clean.select(key).distinct()
-    if broadcast:
-        c = F.broadcast(c)
+    c = F.broadcast(clean.select(key).distinct())
     return base.join(c, key, "left_semi"), base.join(c, key, "left_anti")
 
 

@@ -79,22 +79,15 @@ _SNR_T = T.StructType(
 _snr_udf = clip_udf(_SNR_T, snr_of, rate=True)
 
 
-def snr_screen(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def snr_screen(clips: DataFrame) -> DataFrame:
     """(clip_id, status, n_speech_frames, n_noise_frames, speech_meansq,
     noise_meansq, snr_ratio, keep) — one row per decodable clip; keep is
     a JVM-side integer comparison (status='clean' keeps, 'no_speech' and
     'short' drop, 'ok' needs snr_ratio >= SNR_MIN_RATIO). Zero
     shuffles."""
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _snr_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("s"),
-    ).where(F.col("s").isNotNull())
+    e = clips.select("clip_id", _snr_udf().alias("s")).where(
+        F.col("s").isNotNull()
+    )
     keep = (F.col("s.status") == "clean") | (
         (F.col("s.status") == "ok")
         & (F.col("s.snr_ratio") >= rules.SNR_MIN_RATIO)

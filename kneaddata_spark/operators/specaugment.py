@@ -35,7 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .. import rules
-from .fbank import _FRAMES_UDF
+from .fbank import clip_frames
 
 __all__ = ["specaugment", "specaugment_frames"]
 
@@ -55,22 +55,11 @@ def _masked_frame(
     n_freq_masks: int,
     max_f: int,
     seed: int,
-    id_col: str,
-    bytes_col: str,
-    codec_col: str,
-    sr_col: str,
 ) -> DataFrame:
     """Shared plan: fbank frames + mask geometry columns + the masked
     array column `masked` (array<struct<frame_idx,mel>>)."""
     n_mels = int(rules.FBANK_N_MELS)
-    e = clips.select(
-        F.col(id_col).alias("clip_id"),
-        _FRAMES_UDF(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("f"),
-    ).where(F.col("f").isNotNull())
-    e = e.select("clip_id", F.col("f.frames").alias("frames")).where(
-        F.size("frames") > 0
-    )
-    e = e.withColumn("n_frames", F.size("frames"))
+    e = clip_frames(clips).withColumn("n_frames", F.size("frames"))
 
     cid = F.col("clip_id")
     nf = F.col("n_frames")
@@ -133,10 +122,6 @@ def specaugment(
     n_freq_masks: int = 2,
     max_f: int = 4,
     seed: int = 0,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
 ) -> DataFrame:
     """Scalar witness panel: (clip_id, n_frames, n_mels, per-mask t0/
     t_len/f0/f_len, n_masked_cells, masked_digest_milli). The masked
@@ -146,10 +131,7 @@ def specaugment(
     fingerprint of the training surface. One Arrow stage, zero
     shuffles, masking in whole-stage codegen."""
     n_mels = int(rules.FBANK_N_MELS)
-    e = _masked_frame(
-        clips, n_time_masks, max_t, n_freq_masks, max_f, seed,
-        id_col, bytes_col, codec_col, sr_col,
-    )
+    e = _masked_frame(clips, n_time_masks, max_t, n_freq_masks, max_f, seed)
 
     def t_hit(fr_idx: Column) -> Column:
         hit = F.lit(False)
@@ -225,18 +207,11 @@ def specaugment_frames(
     n_freq_masks: int = 2,
     max_f: int = 4,
     seed: int = 0,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
 ) -> DataFrame:
     """The training surface: (clip_id, frame_idx, mel) with masks
     applied — fbank_frames' schema, augmented. Same single Arrow stage;
     the fan-out is a JVM explode."""
-    e = _masked_frame(
-        clips, n_time_masks, max_t, n_freq_masks, max_f, seed,
-        id_col, bytes_col, codec_col, sr_col,
-    )
+    e = _masked_frame(clips, n_time_masks, max_t, n_freq_masks, max_f, seed)
     return e.select("clip_id", F.explode("masked").alias("fr")).select(
         "clip_id",
         F.col("fr.frame_idx").alias("frame_idx"),

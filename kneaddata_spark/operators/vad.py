@@ -82,13 +82,7 @@ _SEG_T = T.ArrayType(
 _vad_udf = clip_udf(_SEG_T, segment_samples, rate=True)
 
 
-def vad_segments(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def vad_segments(clips: DataFrame) -> DataFrame:
     """(clip_id, seg_idx, start_ms, end_ms, n_frames) — one row per speech
     segment; undecodable clips and clips with no qualifying segment emit
     nothing (posexplode of null/empty). Zero shuffles."""
@@ -96,14 +90,10 @@ def vad_segments(
     # `div` (not float floor) so ms math is bit-identical to the replica's
     # // — the integer-arithmetic-for-shared-thresholds rule
     segs = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(sr_col).cast("long").alias("__sr"),
-        F.expr(
-            f"cast({sr_col} as bigint) * {rules.VAD_FRAME_MS} div 1000"
-        ).alias("__fl"),
-        F.posexplode(
-            _vad_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col))
-        ).alias("seg_idx", "seg"),
+        "clip_id",
+        F.col("sr_hz").cast("long").alias("__sr"),
+        F.expr(f"cast(sr_hz as bigint) * {rules.VAD_FRAME_MS} div 1000").alias("__fl"),
+        F.posexplode(_vad_udf()).alias("seg_idx", "seg"),
     )
     return segs.select(
         "clip_id",
@@ -114,13 +104,7 @@ def vad_segments(
     )
 
 
-def speech_only_clips(
-    clips: DataFrame,
-    id_col: str = "clip_id",
-    bytes_col: str = "bytes",
-    codec_col: str = "codec",
-    sr_col: str = "sr_hz",
-) -> DataFrame:
+def speech_only_clips(clips: DataFrame) -> DataFrame:
     """Silence removal — rebuild each clip with ONLY its speech segments
     (the prep stage between VAD and packing/training: non-speech audio is
     wasted tokens). Returns (clip_id, codec, sr_hz, n_segments, speech_ms,
@@ -142,14 +126,12 @@ def speech_only_clips(
     from ..functions.audio import WAV_CANONICAL_SQL, le_u32_sql
 
     a = clips.select(
-        F.col(id_col).alias("clip_id"),
-        F.col(codec_col).alias("codec"),
-        F.col(sr_col).cast("long").alias("sr_hz"),
-        F.col(bytes_col).alias("bytes"),
-        F.expr(
-            f"cast({sr_col} as bigint) * {rules.VAD_FRAME_MS} div 1000"
-        ).alias("__fl"),
-        _vad_udf(F.col(bytes_col), F.col(codec_col), F.col(sr_col)).alias("__segs"),
+        "clip_id",
+        "codec",
+        F.col("sr_hz").cast("long").alias("sr_hz"),
+        "bytes",
+        F.expr(f"cast(sr_hz as bigint) * {rules.VAD_FRAME_MS} div 1000").alias("__fl"),
+        _vad_udf().alias("__segs"),
     )
     tot = "aggregate(__segs, cast(0 as bigint), (a, s) -> a + (s.e - s.s))"
     nb16 = f"(2 * __fl * ({tot}))"  # payload bytes, s16-backed codecs

@@ -97,8 +97,16 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     vector lambdas) runs on one core. _split_fixture deals the rows into
     _clip_parts(spark) files instead — the shape a real corpus of many
     files already has, with no exchange added to any plan. The DuckDB
-    oracles read the source file; row values are untouched."""
-    path = f"{sf_dir}/{name}.parquet"
+    oracles read the source file; row values are untouched.
+
+    The schema comes from the source file's parquet footer, read by
+    pyarrow, so the read plans no schema-inference job. Naive
+    `timestamp[us]` columns map to `timestamp_ntz`, as Spark infers
+    them."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    path = src = f"{sf_dir}/{name}.parquet"
     if name in _SPLIT_TABLES:
         src, n_parts = os.path.abspath(path), _clip_parts(spark)
         st = os.stat(src)
@@ -108,7 +116,8 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             src, st.st_size, st.st_mtime_ns, n_parts,
             *generator_sources(_split_fixture),
         )
-    return spark.read.parquet(path)
+    schema = from_arrow_schema(pq.read_schema(src), prefer_timestamp_ntz=True)
+    return spark.read.schema(schema).parquet(path)
 
 
 def _split_fixture(src: str, n_parts: int, dest: str) -> None:

@@ -65,7 +65,7 @@ def test_clip_udf_nulls_gate_and_pin(spark):
         ("sr_zero", pcm, "pcm_s16le", 0),
         ("sr_neg", pcm, "pcm_s16le", -8000),
     ]
-    df = spark.createDataFrame(rows, "id string, bytes binary, codec string, sr int")
+    df = spark.createDataFrame(rows, "id string, bytes binary, codec string, sr_hz int")
 
     def with_rate(x, sr):
         assert isinstance(sr, int) and sr > 0
@@ -84,8 +84,8 @@ def test_clip_udf_nulls_gate_and_pin(spark):
     plain = clip_udf(T.ArrayType(T.LongType()), no_rate)
     out = df.select(
         "id",
-        rated(F.col("bytes"), F.col("codec"), F.col("sr")).alias("r"),
-        plain(F.col("bytes"), F.col("codec")).alias("p"),
+        rated().alias("r"),
+        plain().alias("p"),
     )
     got = {r["id"]: (r["r"] and tuple(r["r"]), r["p"]) for r in out.collect()}
     decoded = [3, -4, 5]
@@ -147,4 +147,71 @@ def test_operators_leave_the_clip_boundary_to_the_builder():
                 and node.value.id == "pa"
             ):
                 bad.append(f"{name}:{node.lineno}: pa.{node.attr}")
+    assert bad == []
+
+
+# The operator modules that read the clip (or media) table; `rate.py`'s
+# speaking_rate and imagedup's generic banded_hamming_pairs keep their
+# column arguments because callers pass different columns.
+CLIP_SCHEMA_MODULES = (
+    "adpcm audiodup audioprep audioscreen bandwidth click clipwindows cmvn "
+    "companding declip dropout dynrange fbank flacarchive hum mediaprobe mfcc "
+    "pitch rate resample reverb snr specaugment vad imagedup"
+).split()
+COLUMN_ARGS_KEPT = {"speaking_rate", "banded_hamming_pairs"}
+CLIP_COLUMNS = {"bytes", "codec", "sr_hz", "bytes_col", "codec_col", "sr_col"}
+
+
+def test_operators_read_the_clip_schema_by_name():
+    """Media operators read the fixed clip/media schema by name: no
+    function takes a `*_col` argument, and no call to a clip_udf-made UDF
+    passes the `bytes`/`codec`/`sr_hz` columns the builder binds."""
+    import kneaddata_spark.operators as pkg
+
+    bad = []
+    for mod in CLIP_SCHEMA_MODULES:
+        path = os.path.join(os.path.dirname(pkg.__file__), f"{mod}.py")
+        with open(path) as fh:
+            tree = ast.parse(fh.read())
+        # names bound to a clip_udf result, and factories returning one
+        makers = {
+            fn.name
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef)
+            for r in ast.walk(fn)
+            if isinstance(r, ast.Return)
+            and isinstance(r.value, ast.Call)
+            and getattr(r.value.func, "id", None) == "clip_udf"
+        }
+        udfs = {
+            t.id
+            for a in tree.body
+            if isinstance(a, ast.Assign) and isinstance(a.value, ast.Call)
+            and getattr(a.value.func, "id", None) in makers | {"clip_udf"}
+            for t in a.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.FunctionDef) and node.name not in COLUMN_ARGS_KEPT:
+                a = node.args
+                for arg in a.posonlyargs + a.args + a.kwonlyargs:
+                    if arg.arg.endswith("_col"):
+                        bad.append(f"{mod}.py:{node.lineno}: {node.name}({arg.arg})")
+            if not isinstance(node, ast.Call):
+                continue
+            f = node.func
+            is_udf = getattr(f, "id", None) in udfs or (
+                isinstance(f, ast.Call) and getattr(f.func, "id", None) in makers
+            )
+            if not is_udf:
+                continue
+            for arg in node.args:
+                names = {
+                    n.id if isinstance(n, ast.Name) else n.value
+                    for n in ast.walk(arg)
+                    if isinstance(n, ast.Name)
+                    or (isinstance(n, ast.Constant) and isinstance(n.value, str))
+                }
+                if names & CLIP_COLUMNS:
+                    bad.append(f"{mod}.py:{node.lineno}: {ast.unparse(arg)}")
     assert bad == []

@@ -108,19 +108,33 @@ def test_concurrent_builders_publish_one_directory(root):
 
 
 def test_query_builds_run_no_fixture_job(spark, root):
-    """From an empty fixture root, building the 400-clip, 300-clip and
-    crawled-audio queries writes their fixtures without a Spark job."""
+    """From an empty fixture root, building the 400-clip, 300-clip,
+    crawled-audio and documents (`_t` split) queries writes their fixtures
+    and reads every table without a Spark job."""
     from kneaddata_spark.plans.entry_queries import QUERIES
 
     sc = spark.sparkContext
     group = "fixture-cache-test"
     sc.setJobGroup(group, "query builds from a cold fixture cache")
     try:
-        for name in ("hum_screen", "audio_dup_pairs", "warc_audio_qc"):
+        for name in ("hum_screen", "audio_dup_pairs", "warc_audio_qc", "dedup_exact"):
             QUERIES[name](spark, SF_DIR)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     assert sc.statusTracker().getJobIdsForGroup(group) == []
     built = sorted(p.split("_")[0] for p in os.listdir(root))
-    assert built == ["clips", "clips", "warc"], built
+    assert built == ["clips", "clips", "split", "warc"], built
+
+
+def test_t_schema_is_the_inferred_schema(spark, root):
+    """_t derives each table's schema from its parquet footer; it equals
+    the schema Spark infers, timestamp_ntz columns included."""
+    from kneaddata_spark.plans.entry_queries import _t
+
+    names = sorted(f[: -len(".parquet")] for f in os.listdir(SF_DIR))
+    assert {"documents", "events", "lineitem", "orders"} <= set(names)
+    for name in names:
+        inferred = spark.read.parquet(f"{SF_DIR}/{name}.parquet").schema
+        assert _t(spark, SF_DIR, name).schema == inferred, name
+

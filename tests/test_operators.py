@@ -4315,16 +4315,16 @@ def test_mulaw_transcode_replica(spark):
     import numpy as np
 
     from kneaddata_spark.operators.companding import (
+        g711_transcode,
         mulaw_decode,
         mulaw_encode,
-        mulaw_transcode,
     )
     from kneaddata_spark.oracle import decode_pcm
     from kneaddata_spark.synth import gen_clips_pdf
 
     pdf = gen_clips_pdf(60)
     df = spark.createDataFrame(pdf[["clip_id", "bytes", "codec"]]).repartition(4)
-    res = mulaw_transcode(df)
+    res = g711_transcode(df, ("mulaw",))
     plan = res._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
     assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
@@ -4349,7 +4349,7 @@ def test_mulaw_transcode_replica(spark):
         g = got[row.clip_id]
         assert (
             g["n_samples"],
-            g["crc_mu"],
+            g["crc_code"],
             g["crc_rt"],
             g["max_abs_err"],
             g["meansq_x"],
