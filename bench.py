@@ -1,6 +1,7 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+the session get_spark builds (local[session.default_cores()]) and prints
+ONE JSON line.
 
 Includes the domain QC pipeline over a deterministic synthetic clip table
 sized by sf (generated once, cached in /tmp) — the clip throughput is the
@@ -11,6 +12,7 @@ tools/bench_scaling.py -> BENCH_SCALING.json / BASELINE.md.
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import sys
@@ -19,7 +21,6 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 # headline operator queries (from the driver surface). R3_SET is the
 # round-3 headline — kept as a named subset so round-over-round totals
@@ -212,7 +213,7 @@ def ensure_clips(spark, n: int) -> str:
     from kneaddata_spark.plans.entry_queries import cached, clip_sources
     from kneaddata_spark.synth import clips_spark_df
 
-    parts = max(CPUS, 8)
+    parts = max(spark.sparkContext.defaultParallelism, 8)
     return cached(
         "spark_clips",
         lambda d: clips_spark_df(spark, n, n_partitions=parts).write.mode(
@@ -247,6 +248,15 @@ def bench_qc_pipeline(spark, n_clips: int, reps: int = 5) -> tuple[float, list, 
     return min(walls), walls, metrics_best
 
 
+def _previous_keys(repo: str) -> list[str]:
+    """The compact query keys of the newest committed BENCH_rNN.json."""
+    records = sorted(glob.glob(os.path.join(repo, "BENCH_r[0-9][0-9].json")))
+    if not records:
+        return []
+    with open(records[-1]) as f:
+        return list((json.load(f).get("parsed") or {}).get("queries") or {})
+
+
 def main() -> None:
     from kneaddata_spark.plans.entry_queries import QUERIES
     from kneaddata_spark.session import get_spark
@@ -254,7 +264,8 @@ def main() -> None:
     from pyspark.sql import functions as F
 
     sf = _sf_of(SF_DIR)
-    spark = get_spark(app="bench", cores=CPUS)
+    spark = get_spark(app="bench")
+    cpus = spark.sparkContext.defaultParallelism
     # warm the session (JVM JIT, python worker fleet, parquet footers) so
     # the first timed query doesn't absorb startup costs
     spark.range(1_000_000).select(F.sum("id")).collect()
@@ -338,7 +349,7 @@ def main() -> None:
         "scale_path_rep_walls_sec": {"cosine_pairs_threshold_lsh": lsh_walls},
         "qc_rep_walls_sec": qc_walls,
         "sf": sf,
-        "cpus": CPUS,
+        "cpus": cpus,
     }
     repo = os.path.dirname(os.path.abspath(__file__))
     with open(os.path.join(repo, "BENCH_DETAIL.json"), "w") as f:
@@ -359,7 +370,7 @@ def main() -> None:
         "clips_per_sec": clips_per_sec,
         "n_clips": n_clips,
         "qc_sec": timings["qc_pipeline_clips"],
-        "cpus": CPUS,
+        "cpus": cpus,
         "detail_file": "BENCH_DETAIL.json",
     }
     # attach the (separately measured) N vs 4N scaling evidence if present
@@ -378,15 +389,22 @@ def main() -> None:
         cons = s.get("headline", {}).get("conservative_efficiency")
         if cons is not None:
             out["scaling"]["conservative_efficiency"] = cons
-    # fill "queries" with the slowest walls, keeping the WHOLE line within
-    # the driver's tail-capture budget (self-truncating: never regress to
-    # r4's parsed:null regardless of how many queries future rounds add)
+    # fill "queries" with the keys of the newest committed round record
+    # first (a query that got faster must not drop out of the record),
+    # then the slowest walls, keeping the WHOLE line within the budget of
+    # the recorded stdout tail (self-truncating: never regress to r4's
+    # parsed:null regardless of how many queries future rounds add)
     budget = 1800
-    for name in sorted(timings, key=timings.get, reverse=True):
-        out["queries"][name] = timings[name]
+    compact = {name: round(sec, 2) for name, sec in timings.items()}
+    previous = [name for name in _previous_keys(repo) if name in compact]
+    for name in previous + sorted(compact, key=compact.get, reverse=True):
+        if name in out["queries"]:
+            continue
+        out["queries"][name] = compact[name]
         if len(json.dumps(out)) > budget:
             del out["queries"][name]
             break
+    out["queries"] = dict(sorted(out["queries"].items(), key=lambda kv: -kv[1]))
     line = json.dumps(out)
     assert len(line) <= 2000, f"bench line {len(line)} chars exceeds driver tail window"
     print(line)

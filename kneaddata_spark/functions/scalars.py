@@ -47,8 +47,3 @@ def phred33_mean(qual: Column) -> Column:
         chars, F.lit(0).cast("long"), lambda s, c: s + F.ascii(c) - F.lit(33)
     )
     return F.try_divide(total.cast("double"), F.length(qual))
-
-
-def header_prefix(header: Column, prefix: str) -> Column:
-    """C6: prepend a constant tag (prefix_human_transcriptome.py:12-24)."""
-    return F.concat(F.lit(prefix), header)

@@ -76,12 +76,6 @@ def first_occurrence_dedup(
     )
 
 
-def reorder_output(df: DataFrame, pos_col: str = "pos") -> DataFrame:
-    """D8 --reorder analog (run.py:114-115): emit in original input order.
-    Costs a global sort — default OFF, matching Spark's unordered bags."""
-    return df.orderBy(F.col(pos_col).asc())
-
-
 def shuffle_width(df: DataFrame) -> int:
     """The session's shuffle width (spark.sql.shuffle.partitions): the
     partition count of every explicit repartition in the operators."""

@@ -4,14 +4,11 @@ Reference semantics: Bernoulli keep-with-prob-p over records with a fixed
 seed (db_preprocessing/downsample.py:8-32, random.seed(0)) and an exact-k
 reservoir (db_preprocessing/reservoir.py:4-25).
 
-Two variants each:
- - native: Spark's own sample()/takeSample-equivalent (fast, seedable, but
-   engine-specific randomness — not reproducible outside Spark);
- - deterministic: multiplicative-hash filtering that yields the SAME rows
-   in any engine (used for the DuckDB oracle checks). Hash-based sampling
-   is also the scale-correct answer: no RNG state, stable under retries
-   and partition reshuffles — a property Spark's sample() does not give
-   across different partitionings.
+Both are deterministic: multiplicative-hash filtering that yields the
+SAME rows in any engine (used for the DuckDB oracle checks). Hash-based
+sampling is also the scale-correct answer: no RNG state, stable under
+retries and partition reshuffles — a property Spark's sample() does not
+give across different partitionings.
 """
 
 from __future__ import annotations
@@ -29,17 +26,9 @@ def det_hash(key: Column) -> Column:
     return (key.cast("long") * F.lit(KNUTH)) % F.lit(M32)
 
 
-def det_hash_sql(key_expr: str) -> str:
-    return f"(({key_expr}::BIGINT * {KNUTH}) % {M32})"
-
-
 def bernoulli_deterministic(df: DataFrame, key: str, fraction: float) -> DataFrame:
     """O4: keep rows whose hashed key falls in the [0, fraction) slice."""
     return df.where(det_hash(F.col(key)) < int(fraction * M32))
-
-
-def bernoulli_native(df: DataFrame, fraction: float, seed: int = 0) -> DataFrame:
-    return df.sample(fraction=fraction, seed=seed)
 
 
 def reservoir_deterministic(df: DataFrame, key: str, k: int) -> DataFrame:
@@ -47,11 +36,6 @@ def reservoir_deterministic(df: DataFrame, key: str, k: int) -> DataFrame:
     any engine; one partial top-k per partition + tiny final merge (Spark's
     TakeOrderedAndProject), no full sort."""
     return df.orderBy(det_hash(F.col(key)).asc(), F.col(key).asc()).limit(k)
-
-
-def reservoir_native(df: DataFrame, k: int, seed: int = 0) -> list:
-    """Classic reservoir via RDD takeSample (exact k, seeded)."""
-    return df.rdd.takeSample(False, k, seed)
 
 
 def weighted_reservoir_deterministic(

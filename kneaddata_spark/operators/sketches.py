@@ -191,10 +191,6 @@ def _cms_col(h32: Column, row: int) -> Column:
     )
 
 
-def _cms_col_sql(h32: str, row: int) -> str:
-    return f"(({mix32_sql(f'(({h32}) + {row * CMS_ROW_SALT}) % {M32}')}) >> {32 - CMS_W_BITS})"
-
-
 def cms_build(tokens: DataFrame, hash_col: str = "__h32") -> DataFrame:
     """Count-Min sketch over a token stream: d x w counter rows.
 

@@ -5,8 +5,8 @@ knead_data.py:449-610): trim -> tandem-repeat screen -> decontaminate
 (N databases, clean = pass all) -> write clean/contam outputs + counters.
 Here every stage appends columns; the verdict is a single when-chain in
 ``rules.RULE_ORDER`` (first failing rule = drop_rule, mirroring the
-``_contam_`` file taxonomy of config.py:94-116); outputs are two
-partitioned tables plus a metrics table.
+``_contam_`` file taxonomy of config.py:94-116); the output is one
+status-partitioned table plus per-rule counters from observe().
 
 Physical shape (the 100 TB argument):
  - the hot path is MAP-ONLY: scan -> ONE ArrowEvalPython stage holding two
@@ -244,23 +244,6 @@ class QcResult:
     out_path: str       # one table, partitioned by status (kept | <drop_rule>)
     kept_path: str      # partition subtree of out_path
     metrics: dict       # rule -> count, plus n_rows / n_kept / n_scrubbed
-
-
-def metrics_df(annotated: DataFrame) -> DataFrame:
-    """Per-rule counters (clips in / dropped-by-rule / scrubbed) — the
-    READ COUNT log analog (utilities.py:672-686) as a real table."""
-    return (
-        annotated.select(
-            F.coalesce(F.col("drop_rule"), F.lit("kept")).alias("rule"),
-            F.when(
-                F.col("keep") & (F.col("transcript_scrubbed") != F.col("transcript")), 1
-            )
-            .otherwise(0)
-            .alias("scrubbed"),
-        )
-        .groupBy("rule")
-        .agg(F.count("*").alias("n"), F.sum("scrubbed").alias("n_scrubbed"))
-    )
 
 
 def run_qc(

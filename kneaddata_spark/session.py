@@ -13,25 +13,29 @@ def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
     """Half of the host's MemTotal in whole GB, at least 1g. A local-mode
     driver heap larger than the box lets the JVM grow until the kernel
     OOM-kills it mid-sweep; half leaves room for the python workers and
-    for /dev/shm, which is the same RAM."""
+    the page cache."""
     with open(meminfo) as fh:
         kb = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
     return f"{max(1, kb // (2 * 1024 * 1024))}g"
 
 
-def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: int | None = None) -> SparkSession:
+def default_cores() -> int:
+    """Task slots: $SPARK_GRAFT_CPUS, else the CPUs this process may run
+    on. The affinity mask, not os.cpu_count(), so a container or taskset
+    limit is honoured; and not `nproc`, which also honours
+    OMP_NUM_THREADS (set to 1 below for the python workers)."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
+def get_spark(app: str = "kneaddata_spark", cores: int | None = None) -> SparkSession:
     # one python worker per core is the parallelism unit; BLAS/OpenMP fan-out
     # inside numpy would oversubscribe and wreck N->4N scaling
     for v in ("OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS"):
         os.environ.setdefault(v, "1")
-    if master is None:
-        cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        master = f"local[{cores}]"
-    else:
-        cores = cores or 32
+    cores = cores or default_cores()
     shuffle_parts = max(8, cores)
     b = (
-        SparkSession.builder.master(master)
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_parts))
         .config("spark.sql.adaptive.enabled", "true")
@@ -54,13 +58,13 @@ def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: in
             # per task; measured neutral for thin relational scans (512
             # cost dup_clusters ~15%).
             "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_GRAFT_COLUMNAR_BATCH", "1024"),
+            "1024",
         )
         .config(
             # small corpora must still split into >= cores tasks; at real
-            # scale the default 128m is right (overridable via env)
+            # scale the default 128m is right
             "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", "32m"),
+            "32m",
         )
         .config("spark.ui.enabled", "false")
         .config(
@@ -89,7 +93,7 @@ def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: in
             # for every later query. 2min bounds the backlog at any
             # scale (long-running production drivers want this too).
             "spark.cleaner.periodicGC.interval",
-            os.environ.get("SPARK_GRAFT_PERIODIC_GC", "2min"),
+            "2min",
         )
         # r6: bound the in-memory status store (kept even with the UI
         # off). Defaults retain 1000 SQL executions with full plan-graph
@@ -103,15 +107,11 @@ def get_spark(app: str = "kneaddata_spark", master: str | None = None, cores: in
         .config("spark.ui.retainedTasks", "20000")
         .config("spark.ui.retainedDeadExecutors", "10")
     )
-    # r6 (guide §2.1): shuffle files / spills / broadcast temp default to
-    # /tmp, which on this box is the one spinning-rust-class root volume
-    # (70% full) — while a 126 GB tmpfs sits idle. Prefer shm when it
-    # exists; a cluster deployment overrides with its fast local disks
-    # (SPARK_GRAFT_LOCAL_DIR), the standard spark.local.dir practice.
-    local_dir = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
-    if local_dir is None and os.path.isdir("/dev/shm"):
-        local_dir = "/dev/shm/kneaddata_spark_local"
-    if local_dir:
+    # shuffle files, spills and broadcast temp go to Spark's default dir
+    # (SPARK_LOCAL_DIRS, else java.io.tmpdir) unless SPARK_GRAFT_LOCAL_DIR
+    # names one; not to a tmpfs, whose pages come out of the same RAM as
+    # the heap and the python workers
+    if local_dir := os.environ.get("SPARK_GRAFT_LOCAL_DIR"):
         b = b.config("spark.local.dir", local_dir)
     spark = b.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

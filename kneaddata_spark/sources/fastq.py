@@ -1,7 +1,7 @@
 """Record-format sources/sinks (SURVEY.md §2.1 S1-S10) re-expressed as
 DataFrame readers over the reference's file formats.
 
-FASTQ/FASTA files parse via binaryFile + a mapInPandas chunker: one task
+FASTQ files parse via binaryFile + a mapInPandas chunker: one task
 per file, the 4-line record grouping (read_file_n_lines,
 /root/reference/kneaddata/utilities.py:934-947) applied inside the Arrow
 batch. gzip/bz2 (S2/S3) decompress inline (python codecs). For
@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from ..operators.pairs import first_occurrence_dedup
 
 FASTQ_SCHEMA = "src string, pos bigint, read_id string, seq string, qual string"
-FASTA_SCHEMA = "src string, pos bigint, read_id string, seq string"
 
 
 def _decompress(path: str, raw: bytes) -> bytes:
@@ -53,35 +52,10 @@ def _parse_fastq(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         yield pd.DataFrame(out)
 
 
-def _parse_fasta(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        out = {k: [] for k in ("src", "pos", "read_id", "seq")}
-        for path, raw in zip(pdf["path"], pdf["content"]):
-            text = _decompress(path, bytes(raw)).decode("utf-8", "replace")
-            hdr, seq, pos = None, [], 0
-            for line in text.splitlines() + [">"]:
-                if line.startswith(">"):
-                    if hdr is not None:
-                        out["src"].append(path)
-                        out["pos"].append(pos)
-                        out["read_id"].append(hdr)
-                        out["seq"].append("".join(seq))
-                        pos += 1
-                    hdr, seq = line[1:], []
-                else:
-                    seq.append(line.strip())
-        yield pd.DataFrame(out)
-
-
 def read_fastq(spark: SparkSession, path: str) -> DataFrame:
     """S1/S2/S3/S4: FASTQ (optionally .gz/.bz2) -> DataFrame."""
     bf = spark.read.format("binaryFile").load(path).select("path", "content")
     return bf.mapInPandas(_parse_fastq, schema=FASTQ_SCHEMA)
-
-
-def read_fasta(spark: SparkSession, path: str) -> DataFrame:
-    bf = spark.read.format("binaryFile").load(path).select("path", "content")
-    return bf.mapInPandas(_parse_fasta, schema=FASTA_SCHEMA)
 
 
 def fastq_to_fasta(df: DataFrame) -> DataFrame:
@@ -153,10 +127,3 @@ def split_mates_by_suffix(df: DataFrame, id_col: str = "read_id") -> DataFrame:
             rid.substr(F.lit(1), F.length(rid) - 2),
         ).otherwise(rid),
     )
-
-
-def cat_outputs(dfs: list[DataFrame]) -> DataFrame:
-    """S9: --cat-final-output (utilities.py:992-1006) = union-all."""
-    from functools import reduce
-
-    return reduce(lambda a, b: a.unionByName(b, allowMissingColumns=True), dfs)

@@ -48,6 +48,7 @@ from __future__ import annotations
 
 import gzip
 import io
+import os
 from typing import Iterable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
@@ -209,9 +210,16 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """WARC shards -> one row per record. binaryFile scan (one file per
     task — the member-gzip parallelism unit) + mapInPandas walking each
     file; for response records http_status / http_content_type / payload
-    carry the parsed HTTP body so html_extract composes directly."""
-    files = spark.read.format("binaryFile").load(path)
-    return records_from_files(files)
+    carry the parsed HTTP body so html_extract composes directly.
+
+    A glob in the file name (``<dir>/*.warc*``) reads ``<dir>`` with that
+    glob as ``pathGlobFilter``: Spark probes a glob load path as a sink
+    metadata dir and logs the miss as a FileNotFoundException trace."""
+    reader = spark.read.format("binaryFile")
+    folder, name = os.path.split(path)
+    if any(c in name for c in "*?[{"):
+        reader, path = reader.option("pathGlobFilter", name), folder
+    return records_from_files(reader.load(path))
 
 
 # ------------------------------------------------------------------ writer --
@@ -274,8 +282,6 @@ def write_warc_shards(
     (mtime=0 gzip members). Executors write to the shared filesystem
     directly — the flacarchive.reencode_trimmed sink pattern: bytes
     staying worker-side is the point, never a driver collect."""
-    import os
-
     import pandas as pd
 
     receipt_schema = T.StructType(

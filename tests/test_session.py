@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import ast
 import os
+from pathlib import Path
+
+REPO = Path(__file__).resolve().parent.parent
 
 
 def _mem_total_bytes(meminfo: str = "/proc/meminfo") -> int:
@@ -39,6 +43,54 @@ def test_default_heap_never_exceeds_memtotal(spark, tmp_path):
         got = default_driver_memory(str(f))
         assert got == want
         assert _gib(got) <= _mem_total_bytes(str(f))
+
+
+def test_default_cores_reads_affinity_unless_env_overrides(monkeypatch):
+    """Task slots are the CPUs this process may run on (the affinity mask,
+    here a 3-CPU stand-in), and SPARK_GRAFT_CPUS overrides them."""
+    from kneaddata_spark.session import default_cores
+
+    monkeypatch.setattr(os, "sched_getaffinity", lambda pid: {0, 2, 5})
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_cores() == 3
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+    assert default_cores() == 6
+
+
+def _engine_sources():
+    files = [REPO / "bench.py", *sorted((REPO / "tools").glob("*.py"))]
+    return files + sorted((REPO / "kneaddata_spark").rglob("*.py"))
+
+
+def test_only_the_session_reads_the_box():
+    """session.py alone decides the session's shape: no other engine,
+    tool or bench file reads SPARK_GRAFT_CPUS or passes get_spark a
+    literal core count (bench_scaling's levels pass variables), and the
+    session names no tmpfs spill dir of its own."""
+    session = REPO / "kneaddata_spark" / "session.py"
+    bad = []
+    for path in _engine_sources():
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            where = f"{path.relative_to(REPO)}:{getattr(node, 'lineno', 0)}"
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if path != session and node.value == "SPARK_GRAFT_CPUS":
+                    bad.append(f"{where} reads SPARK_GRAFT_CPUS")
+                if path == session and "/dev/shm" in node.value:
+                    bad.append(f"{where} names /dev/shm")
+            if isinstance(node, ast.Call) and "get_spark" in (
+                getattr(node.func, "id", None), getattr(node.func, "attr", None)
+            ):
+                if any(k.arg == "cores" and isinstance(k.value, ast.Constant) for k in node.keywords):
+                    bad.append(f"{where} passes get_spark a literal cores=")
+    assert not bad, bad
+
+
+def test_spill_dir_is_spark_default_unless_env_names_one(spark):
+    """spark.local.dir is set only from SPARK_GRAFT_LOCAL_DIR; otherwise
+    Spark's own default (SPARK_LOCAL_DIRS, else java.io.tmpdir) applies."""
+    conf = spark.sparkContext.getConf()
+    assert conf.get("spark.local.dir", None) == (os.environ.get("SPARK_GRAFT_LOCAL_DIR") or None)
 
 
 # benchmarked document queries whose rebuilds reuse every compiled class.

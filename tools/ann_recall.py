@@ -26,7 +26,7 @@ def main() -> None:
     from kneaddata_spark.operators import similarity
     from kneaddata_spark.session import get_spark
 
-    spark = get_spark(app="ann_recall", cores=8)
+    spark = get_spark(app="ann_recall")
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     queries = e.where(f"vec_id < {nq}")
 

@@ -1,6 +1,14 @@
 """Physical-plan audit: dump .explain(formatted) for representative queries
 and flag anti-patterns (row-at-a-time Python, missing pushdown, unexpected
-shuffle counts). Writes PLANS.md. Driver-side only — no jobs execute.
+shuffle counts), then build every driver query to sweep for global Windows
+and non-scalar outputs. Writes PLANS.md.
+
+No query is executed, but some builders run Spark jobs to produce a value
+their plan embeds: `dup_clusters` and `canonical_select` iterate their
+clustering rounds to convergence (38 jobs each at sf0.01),
+`adaptive_scrub` collects its over-represented n-grams, `bpe_tokenize`
+fits its merges, `embedding_pca` its components, and `ann_ivf_topk` /
+`ann_pq_topk` their codebooks (1-2 jobs each).
 
     python tools/audit_plans.py [sf_dir]
 """
@@ -291,7 +299,7 @@ def main() -> None:
     from kneaddata_spark.plans.entry_queries import QUERIES
     from kneaddata_spark.session import get_spark
 
-    spark = get_spark(app="planaudit", cores=8)
+    spark = get_spark(app="planaudit")
     sections, problems = [], []
 
     # the flagship QC pipeline plan

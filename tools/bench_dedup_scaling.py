@@ -215,7 +215,7 @@ N_CLIPS_BASE = int(sys.argv[2]) if len(sys.argv) > 2 else 2_000
 def main() -> None:
     from kneaddata_spark.session import get_spark
 
-    spark = get_spark(app="dedup_scale", cores=32)
+    spark = get_spark(app="dedup_scale")
     spark.range(1_000_000).count()
     out = {"n_base": N_BASE, "n_clips_base": N_CLIPS_BASE, "levels": {}}
     for n in (N_BASE, 4 * N_BASE):
@@ -238,7 +238,8 @@ def main() -> None:
         ratios[op] = round(b / a, 2)
     out["wall_ratio_4x_data"] = ratios
     out["note"] = (
-        "same operator, 4x the documents, local[32]; a hidden quadratic "
+        "same operator, 4x the documents, "
+        f"local[{spark.sparkContext.defaultParallelism}]; a hidden quadratic "
         "would show ~16x wall growth — the bucketed/guarded plans should "
         "stay near the 4-6x linear+shuffle band"
     )

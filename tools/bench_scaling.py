@@ -116,7 +116,7 @@ def main() -> None:
     from kneaddata_spark.synth import clips_spark_df
 
     def build(d: str) -> None:
-        spark = get_spark(app="gen", cores=32)
+        spark = get_spark(app="gen")
         clips_spark_df(spark, N_CLIPS, n_partitions=64).write.mode("overwrite").parquet(d)
         spark.stop()
 

@@ -53,7 +53,7 @@ def main():
 
     from kneaddata_spark.session import codegen_compiles, get_spark
 
-    spark = get_spark(cores=8)
+    spark = get_spark()
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf}/{t}.parquet"

@@ -41,8 +41,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="profile", cores=cpus)
+    spark = get_spark(app="profile")
     spark.range(1_000_000).select(F.sum("id")).collect()
     spark.read.parquet(f"{sf_dir}/lineitem.parquet").limit(1).collect()
 
