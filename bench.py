@@ -393,7 +393,8 @@ def main() -> None:
     # first (a query that got faster must not drop out of the record),
     # then the slowest walls, keeping the WHOLE line within the budget of
     # the recorded stdout tail (self-truncating: never regress to r4's
-    # parsed:null regardless of how many queries future rounds add)
+    # parsed:null regardless of how many queries future rounds add); no
+    # spaces after separators, ~2 chars per key of room
     budget = 1800
     compact = {name: round(sec, 2) for name, sec in timings.items()}
     previous = [name for name in _previous_keys(repo) if name in compact]
@@ -401,11 +402,11 @@ def main() -> None:
         if name in out["queries"]:
             continue
         out["queries"][name] = compact[name]
-        if len(json.dumps(out)) > budget:
+        if len(json.dumps(out, separators=(",", ":"))) > budget:
             del out["queries"][name]
             break
     out["queries"] = dict(sorted(out["queries"].items(), key=lambda kv: -kv[1]))
-    line = json.dumps(out)
+    line = json.dumps(out, separators=(",", ":"))
     assert len(line) <= 2000, f"bench line {len(line)} chars exceeds driver tail window"
     print(line)
     spark.stop()

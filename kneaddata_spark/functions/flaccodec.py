@@ -22,14 +22,14 @@ Scope (the mono speech-corpus subset, explicit and test-pinned):
   not re-verified — documented trade: md5 via hashlib is C-speed, a
   per-frame CRC-16 re-check is a per-byte python loop in the QC hot path)
 
-Performance: decode_flac is called per row inside the QC Arrow stage
-(CodecSpec kind="python"), so it is numpy-vectorized per frame, not
-per-sample: Rice partitions decode via a BLOCK-doubled jump table over
-the positions of set bits (square the table only to f^64, then walk the
-orbit frontier 64 terminators per gather — the higher squarings of full
-path doubling are the measured hot spot and buy nothing the walk
-doesn't), fixed-predictor restore is `order` cumsums, and
-warmup/verbatim reads are one fancy-index + matmul. Jump tables stay
+Performance: decode_flac is called per row inside the QC Arrow stage (a
+registered decoder, like every codec), so it is numpy-vectorized per
+frame, not per-sample: Rice partitions decode via a BLOCK-doubled jump
+table over the positions of set bits (square the table only to f^64,
+then walk the orbit frontier 64 terminators per gather — the higher
+squarings of full path doubling are the measured hot spot and buy
+nothing the walk doesn't), fixed-predictor restore is `order` cumsums,
+and warmup/verbatim reads are one fancy-index + matmul. Jump tables stay
 int64: numpy casts index arrays to intp per gather, so int32 tables
 measure 3x slower despite half the traffic. The only python per-sample
 loop is LPC restore (the encoder default emits fixed predictors; LPC is

@@ -23,8 +23,9 @@ Like flaccodec, this kernel is exercised by its own driver query
 (`audio_opus`) and pytest; the QC synth's `codec='opus'` rows keep the
 documented fake container (rules.FAKE_MAGIC) because the QC oracle
 contract pins their layout — a corpus with real Ogg-Opus rows would
-`register_codec("ogg_opus", decode_ogg_opus)` (done below) and add the
-name to rules.VALID_CODECS.
+add the name to rules.VALID_CODECS: functions/audio.py already registers
+it with `register_codec("ogg_opus", decode_ogg_opus)`, so the QC kernel
+and every clip UDF decode it through the same call as every codec.
 """
 
 from __future__ import annotations

@@ -22,6 +22,7 @@ import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from .. import rules
 
@@ -142,6 +143,8 @@ def make_text_features_udf(langid_bc, ppl_bc):
     the audio kernel (same eval type -> Spark plans them together: one
     JVM<->Python round trip for the whole feature stage)."""
 
+    pa_type = to_arrow_type(TEXT_STRUCT)
+
     @F.arrow_udf(TEXT_STRUCT)
     def text_features(texts: pa.Array, audio_alive: pa.Array) -> pa.Array:
         mask = audio_alive.fill_null(False).to_numpy(zero_copy_only=False)
@@ -149,16 +152,8 @@ def make_text_features_udf(langid_bc, ppl_bc):
             texts.to_pandas(), langid_bc.value, ppl_bc.value, audio_alive=mask
         )
         return pa.StructArray.from_arrays(
-            [
-                pa.array(pdf["entropy"].to_numpy(), type=pa.float64()),
-                pa.array(pdf["max_run"].to_numpy(), type=pa.int32()),
-                pa.array(pdf["top_frac"].to_numpy(), type=pa.float64()),
-                pa.array(pdf["n_tokens"].to_numpy(), type=pa.int32()),
-                pa.array(pdf["lang"].to_numpy(), type=pa.string()),
-                pa.array(pdf["lang_conf"].to_numpy(), type=pa.float64()),
-                pa.array(pdf["ppl"].to_numpy(), type=pa.float64()),
-            ],
-            names=["entropy", "max_run", "top_frac", "n_tokens", "lang", "lang_conf", "ppl"],
+            [pa.array(pdf[f.name].to_numpy(), type=f.type) for f in pa_type],
+            fields=list(pa_type),
         )
 
     return text_features

@@ -110,20 +110,22 @@ def speech_only_clips(clips: DataFrame) -> DataFrame:
     wasted tokens). Returns (clip_id, codec, sr_hz, n_segments, speech_ms,
     speech_bytes); clips that are undecodable, have no qualifying speech
     segment, or carry payloads that JVM byte algebra cannot re-slice
-    (non-canonical wavs, real FLAC) emit NULL speech_bytes (a
-    production sink re-encodes those — the bytes_trimmed_col rule).
+    (non-canonical wavs, real FLAC and other compressed codecs) emit NULL
+    speech_bytes (a production sink re-encodes those — the
+    bytes_trimmed_col rule).
 
     Boundary contract (the pipeline's asymmetric-Arrow shape): the VAD
     UDF runs ONCE and returns only the frame-index segment list; the
     speech payload is rebuilt JVM-side by folding the segment array with
-    binary substring/concat (SQL `aggregate` over `bytes` — fake/wav
-    headers re-emitted with corrected LE-u32 sizes via the shared
-    functions/audio.le_u32_sql), so re-decoding the rebuilt clip
-    reproduces the kernel's concatenated speech PCM bit-for-bit and no
-    binary ever crosses Python->JVM. Zero shuffles, embarrassingly
-    parallel — the multi-segment generalization of the QC trim's single
-    (start, end) envelope (pipeline.bytes_trimmed_col)."""
-    from ..functions.audio import WAV_CANONICAL_SQL, le_u32_sql
+    binary substring/concat (SQL `aggregate` over `bytes`, laid out per
+    codec by functions/audio.resliced_bytes, which the QC trim shares:
+    fake/wav headers re-emitted with corrected LE-u32 sizes), so
+    re-decoding the rebuilt clip reproduces the kernel's concatenated
+    speech PCM bit-for-bit and no binary ever crosses Python->JVM. Zero
+    shuffles, embarrassingly parallel — the multi-segment generalization
+    of the QC trim's single (start, end) envelope
+    (pipeline.bytes_trimmed_col)."""
+    from ..functions.audio import resliced_bytes
 
     a = clips.select(
         "clip_id",
@@ -134,41 +136,18 @@ def speech_only_clips(clips: DataFrame) -> DataFrame:
         _vad_udf().alias("__segs"),
     )
     tot = "aggregate(__segs, cast(0 as bigint), (a, s) -> a + (s.e - s.s))"
-    nb16 = f"(2 * __fl * ({tot}))"  # payload bytes, s16-backed codecs
-    nb8 = f"(__fl * ({tot}))"  # payload bytes, pcm_u8
 
-    def cat(base: int, scale: int) -> str:
-        """Fold: concat the per-segment byte slices of the original
-        payload (1-based start = base + scale*s.s*__fl)."""
+    def fold(base: int, width: int) -> str:
+        """Concat the per-segment byte slices of the original payload
+        (1-based start = base + width*s.s*__fl)."""
         return (
             "aggregate(__segs, cast('' as binary), (acc, s) -> concat(acc, "
-            f"substring(bytes, {base} + {scale}*s.s*__fl, "
-            f"{scale}*(s.e - s.s)*__fl)))"
+            f"substring(bytes, {base} + {width}*s.s*__fl, "
+            f"{width}*(s.e - s.s)*__fl)))"
         )
 
-    pcm16 = F.expr(cat(1, 2))
-    pcmu8 = F.expr(cat(1, 1))
-    fake = F.expr(
-        f"concat(substring(bytes, 1, 4), {le_u32_sql(nb16)}, {cat(9, 2)})"
-    )
-    wav = F.expr(
-        f"concat(substring(bytes, 1, 4), {le_u32_sql(f'36 + {nb16}')}, "
-        f"substring(bytes, 9, 28), substring(bytes, 37, 4), "
-        f"{le_u32_sql(nb16)}, {cat(45, 2)})"
-    )
     no_speech = F.col("__segs").isNull() | (F.size("__segs") == 0)
-    speech_bytes = (
-        F.when(no_speech, F.lit(None).cast("binary"))
-        .when(F.col("codec") == "pcm_s16le", pcm16)
-        .when(F.col("codec") == "pcm_u8", pcmu8)
-        .when((F.col("codec") == "wav") & F.expr(WAV_CANONICAL_SQL), wav)
-        .when(F.col("codec") == "wav", F.lit(None).cast("binary"))
-        # real FLAC (r5): compressed payloads are not sample-sliceable in
-        # JVM binary algebra — NULL speech_bytes, the non-canonical-wav
-        # contract (segments/speech_ms stay exact; a sink re-encodes)
-        .when(F.col("codec") == "flac", F.lit(None).cast("binary"))
-        .otherwise(fake)
-    )
+    speech_bytes = F.when(~no_speech, resliced_bytes(fold, f"(2 * __fl * ({tot}))"))
     return a.select(
         "clip_id",
         "codec",

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import rules
-from .functions.audio import WAV_CANONICAL_SQL, audio_features, le_u32_sql
+from .functions.audio import audio_features, resliced_bytes
 from .functions.text import make_text_features_udf, scrub_col
 from .models import train_langid, train_perplexity
 
@@ -51,45 +51,15 @@ def bytes_trimmed_col() -> F.Column:
     binary algebra (substring/concat/unhex) over the UDF's sample bounds —
     re-decoding the slice reproduces the trimmed PCM bit-for-bit, so the
     SNR invariant is exact by construction and no binary ever crosses
-    Python->JVM."""
-    le_u32 = le_u32_sql  # shared with operators/vad (functions/audio.py)
+    Python->JVM. The per-codec layout is functions/audio.resliced_bytes,
+    shared with operators/vad; rows that failed decode or kept nothing are
+    NULL."""
 
-    nb = "(2*(trim_end - trim_start))"  # trimmed payload bytes (s16)
-    pcm16 = F.expr("substring(bytes, 2*trim_start + 1, 2*(trim_end - trim_start))")
-    pcmu8 = F.expr("substring(bytes, trim_start + 1, trim_end - trim_start)")
-    # fake opus/mp3 container: 4-byte magic + LE-u32 payload length +
-    # s16le payload (rules.FAKE_MAGIC; real codec libs absent here)
-    fake = F.expr(
-        f"concat(substring(bytes, 1, 4), {le_u32(nb)}, "
-        f"substring(bytes, 9 + 2*trim_start, {nb}))"
-    )
-    # real RIFF/WAVE (canonical 44-byte layout: fmt chunk then data chunk):
-    # re-emit a VALID wav — copy 'WAVE'+fmt verbatim (bytes 9..36), rewrite
-    # the RIFF size (36 + payload) and data size, slice the payload from
-    # the original data chunk (byte 45 on). Non-canonical-but-decodable
-    # wavs (extra/reordered chunks) get NULL trimmed bytes: the QC verdict
-    # and features are complete either way, and a production sink would
-    # re-encode (register_codec docstring).
-    wav_canonical = F.expr(WAV_CANONICAL_SQL)
-    wav = F.expr(
-        f"concat(substring(bytes, 1, 4), {le_u32(f'36 + {nb}')}, "
-        f"substring(bytes, 9, 28), substring(bytes, 37, 4), {le_u32(nb)}, "
-        f"substring(bytes, 45 + 2*trim_start, {nb}))"
-    )
-    return (
-        F.when(~F.col("decode_ok") | (F.col("trim_end") <= F.col("trim_start")), F.lit(None).cast("binary"))
-        .when(F.col("codec") == "pcm_s16le", pcm16)
-        .when(F.col("codec") == "pcm_u8", pcmu8)
-        .when((F.col("codec") == "wav") & wav_canonical, wav)
-        .when(F.col("codec") == "wav", F.lit(None).cast("binary"))
-        # real FLAC (r5): a compressed payload is not sample-sliceable in
-        # JVM binary algebra — NULL trimmed bytes, the non-canonical-wav
-        # contract (QC verdict/features/trim bounds are complete; a
-        # production sink re-encodes). Parity moves to decoded-slice
-        # equality (tests/test_parity.py pcm SNR path).
-        .when(F.col("codec") == "flac", F.lit(None).cast("binary"))
-        .otherwise(fake)
-    )
+    def span(base: int, width: int) -> str:
+        return f"substring(bytes, {base} + {width}*trim_start, {width}*(trim_end - trim_start))"
+
+    kept = F.col("decode_ok") & (F.col("trim_end") > F.col("trim_start"))
+    return F.when(kept, resliced_bytes(span, "(2*(trim_end - trim_start))"))
 
 
 def scoring_gate_col() -> F.Column:

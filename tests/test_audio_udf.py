@@ -150,6 +150,74 @@ def test_operators_leave_the_clip_boundary_to_the_builder():
     assert bad == []
 
 
+def test_qc_kernel_decodes_through_the_clip_decoder():
+    """The QC kernel and every clip_udf share one decode: a row is
+    decode_ok exactly when it passes the codec/sr whitelists, expects
+    samples, decodes through `_decode_s16` and matches the expected
+    length, and then n_samples is that decode's length. Rows cover the
+    synth corpus plus, for every registered codec, a valid payload and
+    its None, empty, truncated, odd-length and random variants."""
+    from kneaddata_spark import rules
+    from kneaddata_spark.functions.audio import (
+        CODECS,
+        _decode_s16,
+        audio_features_batch,
+    )
+    from kneaddata_spark.functions.oggopus import encode_ogg_opus
+    from kneaddata_spark.synth import gen_clips_pdf
+
+    pdf = gen_clips_pdf(400)
+    rows = list(zip(pdf["bytes"], pdf["codec"], pdf["sr_hz"], pdf["dur_ms"]))
+    valid = {c: (b, sr, d) for b, c, sr, d in reversed(rows)}
+    valid["ogg_opus"] = (encode_ogg_opus(960 * 3), 48000, 60)
+    assert set(CODECS) <= set(valid), "add a valid payload for each codec"
+    junk = np.random.default_rng(0).integers(0, 256, 3201, dtype=np.uint8).tobytes()
+    for codec in CODECS:
+        raw, sr, dur = valid[codec]
+        for b in (raw, raw[:-1], raw[: len(raw) // 2], raw[:9], junk, junk[:-1], b"", None):
+            rows += [(b, codec, sr, dur), (b, codec, 12345, dur)]
+    raws, codecs, srs, durs = (np.array(col, dtype=object) for col in zip(*rows))
+    out = audio_features_batch(raws, codecs, srs.astype(np.int64), durs.astype(np.int64))
+
+    data = np.frombuffer(b"".join(b for b in raws if b is not None), dtype=np.uint8)
+    pos, n_decoded = 0, 0
+    for i, (b, codec, sr, dur) in enumerate(rows):
+        nb = 0 if b is None else len(b)
+        x = _decode_s16(data, pos, pos + nb, codec)
+        pos += nb
+        n_exp = round(dur * sr / 1000)
+        ok = (
+            codec in rules.VALID_CODECS
+            and sr in rules.VALID_SR_HZ
+            and n_exp > 0
+            and x is not None
+            and abs(len(x) - n_exp) <= rules.DECODE_LEN_RTOL * n_exp
+        )
+        n_decoded += ok
+        assert out["decode_ok"][i] == ok, (i, codec, nb)
+        assert out["n_samples"][i] == (len(x) if ok else 0), (i, codec, nb)
+    assert n_decoded > 200
+
+
+def test_only_the_row_decode_reads_the_codec_registry():
+    """`CODECS` is read by `_decode_s16` and written by `register_codec`
+    only: no second dispatch over the registry grows back beside them."""
+    import kneaddata_spark.functions.audio as audio
+
+    with open(audio.__file__) as fh:
+        tree = ast.parse(fh.read())
+    users = set()
+    for stmt in tree.body:
+        if isinstance(stmt, (ast.Assign, ast.AnnAssign)) and "CODECS" in {
+            getattr(t, "id", None)
+            for t in (stmt.targets if isinstance(stmt, ast.Assign) else [stmt.target])
+        }:
+            continue  # the registry's own definition
+        if any(isinstance(n, ast.Name) and n.id == "CODECS" for n in ast.walk(stmt)):
+            users.add(getattr(stmt, "name", f"<module line {stmt.lineno}>"))
+    assert users == {"_decode_s16", "register_codec"}
+
+
 # The operator modules that read the clip (or media) table; `rate.py`'s
 # speaking_rate and imagedup's generic banded_hamming_pairs keep their
 # column arguments because callers pass different columns.

@@ -108,12 +108,16 @@ def test_real_payload_and_stereo_refused():
 
 
 def test_registry_wiring():
+    from kneaddata_spark import rules
     from kneaddata_spark.functions.audio import CODECS
 
-    spec = CODECS["ogg_opus"]
-    assert spec.kind == "python"
-    pcm = spec.decode(encode_ogg_opus(960))
+    decode = CODECS["ogg_opus"]
+    pcm = decode(encode_ogg_opus(960))
     assert len(pcm) == 960 and not pcm.any()
-    assert spec.decode(b"junk") is None
+    assert decode(b"junk") is None
     # the QC synth contract is untouched: 'opus' stays the fake container
-    assert CODECS["opus"].kind == "container_s16"
+    payload = np.array([1, -2, 3], dtype="<i2").tobytes()
+    fake = rules.FAKE_MAGIC["opus"] + struct.pack("<I", len(payload)) + payload
+    assert rules.FAKE_MAGIC["opus"] == b"KSOP"
+    assert CODECS["opus"](fake).tolist() == [1, -2, 3]
+    assert CODECS["opus"](encode_ogg_opus(960)) is None

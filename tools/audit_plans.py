@@ -1,7 +1,10 @@
 """Physical-plan audit: dump .explain(formatted) for representative queries
 and flag anti-patterns (row-at-a-time Python, missing pushdown, unexpected
 shuffle counts), then build every driver query to sweep for global Windows
-and non-scalar outputs. Writes PLANS.md.
+and non-scalar outputs. Writes PLANS.md with the run-to-run ids of each
+plan (expression ids, plan ids, RDD numbers, fixture-cache keys)
+normalized, so a second run leaves it unchanged and a diff of it shows
+only plan changes; the checks read the raw plans.
 
 No query is executed, but some builders run Spark jobs to produce a value
 their plan embeds: `dup_clusters` and `canonical_select` iterate their
@@ -231,6 +234,23 @@ AUDIT = [
 ]
 
 
+# ids that differ between runs of the same plan, and what PLANS.md prints
+# for them: expression ids (`#123`, `#45L`), exchange plan ids, RDD
+# numbers, and the key hash of each `entry_queries.cached` directory
+VOLATILE = [
+    (re.compile(r"#\d+"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"RDD\[\d+\]"), "RDD[N]"),
+    (re.compile(r"(kneaddata_bench/\w+?)_[0-9a-f]{16}\b"), r"\1_KEY"),
+]
+
+
+def normalized(plan: str) -> str:
+    for pat, repl in VOLATILE:
+        plan = pat.sub(repl, plan)
+    return plan
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -413,7 +433,7 @@ def main() -> None:
             f.write("All expectations hold.\n\n")
         for name, p, checks in sections:
             f.write(f"## {name}\n\n" + "".join(f"- {c}\n" for c in checks))
-            f.write("\n```\n" + p.strip()[:4000] + "\n```\n\n")
+            f.write("\n```\n" + normalized(p).strip()[:4000] + "\n```\n\n")
     print("PROBLEMS:" if problems else "all plan expectations hold")
     for p in problems:
         print(" -", p)
